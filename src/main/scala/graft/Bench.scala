@@ -1,31 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // match Verify/Smoke/Explain
-      .config("spark.ui.enabled", "false")
-      // local checkpoint dirs: nio manager (no per-file chmod fork) — see
-      // graft.streaming.NioCheckpointFileManager; non-file URIs fall back
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // no-fork, no-.crc local FS (see graft.sources.FastLocalFileSystem);
-      // cluster schemes (hdfs:/s3:) are untouched
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.FastLocalFileSystem")
-      .config("spark.hadoop.io.file.buffer.size", "65536")
-      // static conf: the default 100-entry whole-stage-codegen class
-      // cache thrashes across 419 distinct query plans, so pass 2 (and
-      // every repeated plan fragment) re-runs janino compilation; size
-      // it to the inventory. Deployment-honest: any repeated-query
-      // workload wants the cache to cover its plan set.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/parquet-reader initialization is
     // session cost, not query cost — without this the first query in

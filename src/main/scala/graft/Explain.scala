@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan and wall time of one
   * query: `sbt "runMain graft.Explain q49_minhash_lsh /root/testdata/sf0.1"`.
@@ -8,25 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local checkpoint dirs: nio manager (no per-file chmod fork) — see
-      // graft.streaming.NioCheckpointFileManager; non-file URIs fall back
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // no-fork, no-.crc local FS (see graft.sources.FastLocalFileSystem);
-      // cluster schemes (hdfs:/s3:) are untouched
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.FastLocalFileSystem")
-      .config("spark.hadoop.io.file.buffer.size", "65536")
-      // codegen class cache sized to the query inventory (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // comma-separated key list: one JVM, one plan dump per key, delimited
     // so a wrapper can split the output into per-key files

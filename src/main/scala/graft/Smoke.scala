@@ -1,30 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local replica of the driver's t1 smoke check: SparkEntry.entry must
   * return >0 rows on sf0.001.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local checkpoint dirs: nio manager (no per-file chmod fork) — see
-      // graft.streaming.NioCheckpointFileManager; non-file URIs fall back
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // no-fork, no-.crc local FS (see graft.sources.FastLocalFileSystem);
-      // cluster schemes (hdfs:/s3:) are untouched
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.FastLocalFileSystem")
-      .config("spark.hadoop.io.file.buffer.size", "65536")
-      // codegen class cache sized to the query inventory (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,7 @@ object Verify {
     // iteration (the driver always passes exactly 2 args → full run).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local checkpoint dirs: nio manager (no per-file chmod fork) — see
-      // graft.streaming.NioCheckpointFileManager; non-file URIs fall back
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.streaming.NioCheckpointFileManager")
-      // no-fork, no-.crc local FS (see graft.sources.FastLocalFileSystem);
-      // cluster schemes (hdfs:/s3:) are untouched
-      .config("spark.hadoop.fs.file.impl",
-        "graft.sources.FastLocalFileSystem")
-      .config("spark.hadoop.io.file.buffer.size", "65536")
-      // codegen class cache sized to the query inventory (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -622,7 +622,11 @@ object Curation extends QueryPack {
         .crossJoin(broadcast(grand))
         .select(col("source"), col("n_docs"), col("n_contam"),
           round(col("n_contam").cast("double") / col("n_docs"), 6).as("contam_rate"),
-          round(col("n_contam").cast("double") / col("tot_contam"), 6).as("contam_share"))
+          // no contaminated doc at all (tot_contam = 0, as at sf0.1):
+          // the share is undefined — NULL, as in the oracle — not an
+          // ANSI divide-by-zero
+          round(col("n_contam").cast("double") / nullif(col("tot_contam"), lit(0L)), 6)
+            .as("contam_share"))
         .orderBy(col("source"))
     }),
   )

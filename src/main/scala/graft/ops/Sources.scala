@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Sessions, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -426,21 +426,14 @@ object Sources extends QueryPack {
     // SPJ condition — then a per-grp rollup. DsV2Spec asserts the join
     // subtree is exchange-free; the oracle replays from range().
     "q350_dsv2_spj" -> ((s, dir) => {
-      // SPJ confs are scoped to THIS query (snapshot/restore around the
-      // eager build): requireAllClusterKeysForCoPartition=false relaxes
-      // co-partitioning for every later join in the session, so leaking
-      // it would make other queries' physical plans depend on whether
-      // q350 ran first (ADVICE r9).
-      val spjConfs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        // partition keys [grp] ⊂ join keys (grp, id): subset-key
-        // co-partitioning is gated by this conf (default-on requires
-        // ALL cluster keys, which would demand bucketing by id too)
-        "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
-      val saved = spjConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-      spjConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      // SPJ confs are scoped to THIS query (around the eager build):
+      // requireAllClusterKeysForCoPartition=false relaxes co-partitioning
+      // for every later join in the session, so leaking it would make
+      // other queries' physical plans depend on whether q350 ran first
+      // (ADVICE r9). Partition keys [grp] ⊂ join keys (grp, id): the
+      // default requires ALL cluster keys, which would demand bucketing
+      // by id too.
+      Sessions.withConfs(s, Sessions.SpjConfs: _*) {
         def rd = s.read.format("graftseq")
           .option("rows", "100000").option("slices", "8").option("keyed", "true").load()
         val a = rd.select(col("grp"), col("id"), col("bucket").as("bucket_a"))
@@ -456,9 +449,6 @@ object Sources extends QueryPack {
           // materialize WHILE the SPJ confs hold (the exchange-free plan
           // is fixed here); downstream consumers re-read this plan-free
           .localCheckpoint()
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 
@@ -1040,13 +1030,7 @@ object Sources extends QueryPack {
         .agg(countDistinct(col("event_type")).as("n_types"),
           max(col("value").cast("decimal(18,2)")).cast("double").as("max_val"))
         .writeTo("graft.g.bspjd405").append()
-      val spjConfs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-      val saved = spjConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-      spjConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      Sessions.withConfs(s, Sessions.SpjConfs: _*) {
         val f = s.read.option("grouped", "true").table("graft.g.bspjf405")
         val d = s.read.option("grouped", "true").table("graft.g.bspjd405")
         f.join(d.hint("merge"), "user_id")
@@ -1058,9 +1042,6 @@ object Sources extends QueryPack {
           .orderBy(col("n_types"), col("cohort"))
           // materialize WHILE the SPJ confs hold (q384's discipline)
           .localCheckpoint()
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 
@@ -2046,13 +2027,7 @@ object Sources extends QueryPack {
       val wh = Stage.dir("graft_warehouse")
       def grp(t: String) = s.read.format("graftsink")
         .option("path", s"$wh/g/$t").option("grouped", "true").load()
-      val spjConfs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-        "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-      val saved = spjConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-      spjConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      Sessions.withConfs(s, Sessions.SpjConfs: _*) {
         grp("spjf384").join(grp("spjd384").hint("merge"), "c_mktsegment")
           .withColumn("above",
             (col("bal") > col("seg_sum") / col("n_seg")).cast("long"))
@@ -2063,9 +2038,6 @@ object Sources extends QueryPack {
           // materialize WHILE the SPJ confs hold (the exchange-free
           // plan is fixed here)
           .localCheckpoint()
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 

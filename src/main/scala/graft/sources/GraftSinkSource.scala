@@ -35,19 +35,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *    never write into the visible table — a failed/speculated task
   *    leaves only staging garbage, never a torn table. Spark's commit
   *    coordinator guarantees one committed task per partition.
-  *  - **driver side**: `BatchWrite.commit` renames the committed tasks'
-  *    staged files into the table root and THEN publishes `_manifest`
-  *    (schema DDL line + one committed file per line). Readers resolve
-  *    the file list ONLY through the manifest, so a crash between
-  *    renames publishes nothing — readers see the previous table
-  *    version (manifest-last = the atomic-publish idiom used by every
-  *    table format). `abort` deletes the staging tree.
+  *  - **driver side**: every commit — unpartitioned, partitioned and
+  *    delta (merge-on-read) batch writes, and the streaming write —
+  *    runs ONE staged-commit skeleton ([[StagedCommit]]): publish
+  *    (rename the committed tasks' staged files into the table root,
+  *    once), then the manifest (schema DDL line + one committed file
+  *    per line) through the optimistic-commit loop with one guarded
+  *    append/replace plan, then drop the staging tree (`abort` drops it
+  *    too). Readers resolve the file list ONLY through the manifest, so
+  *    a crash between renames publishes nothing — readers see the
+  *    previous table version (manifest-last = the atomic-publish idiom
+  *    used by every table format). Each surface adds only its own
+  *    step: branch heads and stats entries (unpartitioned), REPLACE
+  *    WHERE and dynamic-overwrite survivors (partitioned), the
+  *    delete-vector fold (delta), epoch-replay detection (streaming).
   *  - **truncate**: `.mode("overwrite")` routes through
-  *    SupportsTruncate; commit then REPLACES the manifest instead of
-  *    merging with it. Append mode merges, requiring the incoming
-  *    schema to match the published DDL. Replaced data files stay on
-  *    disk — older snapshots reference them (see time travel); a real
-  *    format GCs them by snapshot-expiry policy.
+  *    SupportsTruncate; the plan then REPLACES the manifest, refusing
+  *    if the base moved since it was planned. Append mode merges,
+  *    requiring the incoming schema to match the published DDL.
+  *    Replaced data files stay on disk — older snapshots reference them
+  *    (see time travel); a real format GCs them by snapshot-expiry
+  *    policy.
   *  - **time travel**: every commit publishes an IMMUTABLE
   *    `_manifest.vN` before updating the `_manifest` latest-pointer,
   *    so `option("version", N)` reads snapshot N exactly as committed
@@ -1675,7 +1683,7 @@ class GraftSinkWriteBuilder(path: String, schema: StructType, queryId: String,
           require(!dynamicOverwrite && replaceWhere.isEmpty,
             "graftsink: streaming writes support append/complete only")
           GraftSink.checkSchema(schema)
-          new GraftSinkPartitionedStreamingWrite(path, schema, queryId,
+          new GraftSinkStreamingWrite(path, schema, queryId,
             doTruncate, partCols, partIdx)
         }
       }
@@ -1813,6 +1821,127 @@ case class GraftSinkCommit(stagedFile: String, partitionId: Int, rows: Long,
     stats: Seq[(String, Long, Long)] = Nil)
   extends WriterCommitMessage
 
+/** The staged-commit skeleton every driver-side graftsink commit runs
+  * (unpartitioned, partitioned and delta batch writes, and the
+  * streaming write): [[publish]] the committed tasks' staged files
+  * once, publish the manifest through [[GraftSink.commitManifest]]
+  * with the guarded [[plan]], then [[dropStaging]]. A surface adds
+  * only what is its own: a branch base, REPLACE WHERE validation and
+  * survivor filtering, a delete-vector fold, epoch-replay detection. */
+private[graft] object StagedCommit {
+
+  /** One published data file: its final name under the table root and
+    * everything its manifest entry records besides the field ids. */
+  final case class Published(name: String, rows: Long,
+      part: Option[String] = None, stats: Seq[(String, Long, Long)] = Nil) {
+    def entry(ids: Option[Seq[Int]]): String =
+      GraftSink.entry(name, Nil, stats.headOption, Some(rows), ids, part, stats.drop(1))
+  }
+
+  /** How a surface words the two shared refusals (callers match on
+    * these texts): the stale-base replace and the append schema
+    * mismatch. */
+  final case class Wording(replace: String, replaceTail: String,
+      append: String, appendTail: String)
+  val BatchWording = Wording("a replace",
+    " — the replace was computed from a stale snapshot; re-run it",
+    "append", " (use overwrite to replace)")
+  val StreamWording = Wording("a complete-mode epoch", "", "streaming append", "")
+  val DeltaWording = Wording("", "", "delta write", "") // never replaces
+
+  /** 1) PUBLISH: rename every committed task's staged file(s) into the
+    * table root as `<prefix>part-<pid>.tsv` (`-<i>` per partition
+    * tuple), ONCE, before the commit loop — entries re-plan on a lost
+    * slot race, renames don't. The prefix makes names unique per write
+    * (`<queryId>-`) or per streaming epoch (`q-<queryId>-e<epoch>-`).
+    * `replaceGhost` deletes a file already at the final name first: a
+    * crash AFTER the rename but BEFORE the manifest write leaves an
+    * unreferenced ghost there, and the replayed epoch must be able to
+    * re-publish over it. */
+  def publish(path: String, prefix: String, messages: Array[WriterCommitMessage],
+      replaceGhost: Boolean = false): Seq[Published] = {
+    val f = GraftSink.fs(path)
+    def move(staged: String, fin: String): String = {
+      val dest = new HPath(path, fin)
+      if (replaceGhost && f.exists(dest)) f.delete(dest, false)
+      require(f.rename(new HPath(staged), dest),
+        s"graftsink: failed to publish $staged -> $fin")
+      fin
+    }
+    messages.toSeq.flatMap {
+      case c: GraftSinkCommit =>
+        Seq(Published(move(c.stagedFile, s"${prefix}part-${c.partitionId}.tsv"),
+          c.rows, None, c.stats))
+      case c: GraftSinkPartitionedCommit =>
+        c.files.zipWithIndex.map { case ((staged, part, rows), i) =>
+          Published(move(staged, s"${prefix}part-${c.partitionId}-$i.tsv"),
+            rows, Some(part))
+        }
+      case c: GraftSinkDeltaCommit if c.stagedFile.nonEmpty =>
+        Seq(Published(move(c.stagedFile, s"${prefix}part-${c.partitionId}.tsv"), c.rows))
+      case _ => Nil
+    }
+  }
+
+  /** 2) The manifest plan [[GraftSink.commitManifest]] re-runs on every
+    * attempt. It re-reads the base (the branch head for a branch write,
+    * else main; both CHAIN-ATTRIBUTED, so a racer's claimed-but-not-yet-
+    * pointed commit is already visible) each time:
+    *  - `guarded` (full or partial replace): REFUSES once the base moves
+    *    — which files survive was decided against a snapshot that no
+    *    longer is the table. `seed` is the base the caller planned
+    *    against (a row-level rewrite's scan, a procedure's
+    *    `expectedBaseTs`), so even the FIRST attempt refuses on a
+    *    commit that landed in between, not just a retry;
+    *  - `replace` (truncate): the entries become the whole table, field
+    *    ids reset to positional, the DDL is the write's;
+    *  - otherwise an APPEND: the write schema must match the table's
+    *    (unless `checkAppend` is off), new entries stamp the table's ids,
+    *    `keep` picks the prior lines that survive (all of them by
+    *    default; a lost race therefore REBASES onto the interloper's
+    *    files), and the table's DDL is kept, widened to nullable where
+    *    the write is. */
+  def plan(path: String, schema: StructType, published: Seq[Published],
+      wording: Wording, replace: Boolean = false, guarded: Boolean = false,
+      seed: Option[Option[Long]] = None, branch: Option[String] = None,
+      checkAppend: Boolean = true,
+      keep: Option[GraftSink.Manifest] => Seq[String] = _.map(_.files).getOrElse(Nil))
+      : () => GraftSink.Manifest = {
+    var seenBase = seed
+    () => {
+      val prior = branch match {
+        case Some(b) => GraftSink.branchHead(path, b).orElse(GraftSink.mainHead(path))
+        case None => GraftSink.mainHead(path)
+      }
+      val baseTs = prior.flatMap(_.ts)
+      if (guarded && seenBase.exists(_ != baseTs))
+        throw new java.util.ConcurrentModificationException(
+          s"graftsink: concurrent commit during ${wording.replace} at $path${wording.replaceTail}")
+      seenBase = Some(baseTs)
+      if (replace)
+        GraftSink.Manifest(GraftSink.cleanDdl(schema), published.map(_.entry(None)), None)
+      else {
+        if (checkAppend) prior.foreach { m =>
+          require(GraftSink.schemaCompatible(m.ddl, schema),
+            s"graftsink: ${wording.append} schema mismatch at $path — table is " +
+              s"'${m.ddl}', write is '${schema.toDDL}'${wording.appendTail}")
+        }
+        val ids = prior.flatMap(_.ids)
+        val ddl = prior.fold(GraftSink.cleanDdl(schema))(m => GraftSink.widenedDdl(m.ddl, schema))
+        GraftSink.Manifest(ddl, keep(prior) ++ published.map(_.entry(ids)), ids)
+      }
+    }
+  }
+
+  /** 3) STAGING GC, for commit and abort alike: staged files are
+    * invisible to readers, so dropping the tree restores the exact
+    * pre-write state. Replaced data files are NOT deleted — older
+    * snapshots (`_manifest.vN`) still reference them (time travel); a
+    * real table format GCs them by snapshot-expiry policy instead. */
+  def dropStaging(path: String, dir: String): Unit =
+    GraftSink.fs(path).delete(new HPath(path, s"${GraftSink.STAGING}/$dir"), true)
+}
+
 class GraftSinkBatchWrite(path: String, schema: StructType, queryId: String,
     truncate: Boolean, statsCols: Seq[String] = Nil,
     branch: Option[String] = None,
@@ -1824,73 +1953,15 @@ class GraftSinkBatchWrite(path: String, schema: StructType, queryId: String,
     new GraftSinkWriterFactory(path, schema, queryId, statsIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftSink.fs(path)
-    // 1) move committed tasks' staged files into the table root, named
-    //    uniquely per (queryId, partition) so appends never collide —
-    //    ONCE, before the commit loop (entries below re-plan; renames
-    //    don't)
-    val published = messages.collect { case c: GraftSinkCommit =>
-      val fin = s"$queryId-part-${c.partitionId}.tsv"
-      val ok = f.rename(new HPath(c.stagedFile), new HPath(path, fin))
-      require(ok, s"graftsink: failed to publish ${c.stagedFile} -> $fin")
-      c.copy(stagedFile = fin)
-    }.toSeq
-    // 2) manifest-last, through the optimistic-concurrency loop: the
-    //    plan re-reads the base EVERY attempt, so a lost slot race
-    //    REBASES this append onto the interloper's commit (its files
-    //    survive; ours add on top); a REPLACE whose base moved refuses
-    //    instead — it was computed from a snapshot that no longer is
-    //    the table. `scanBaseTs` (set by the row-level operation at
-    //    SCAN-PLAN time) seeds the guard so the very first attempt also
-    //    refuses on a commit that landed between the rewrite's scan and
-    //    this commit — not just between retry attempts.
-    var seenBase: Option[Option[Long]] = scanBaseTs
-    GraftSink.commitManifest(path, branch) { () =>
-      // a branch write appends onto the BRANCH HEAD (first write forks
-      // from main); bases are CHAIN-ATTRIBUTED (mainHead/branchHead) so
-      // a racer's claimed-but-not-yet-pointed commit is already visible
-      val prior = branch match {
-        case Some(b) => GraftSink.branchHead(path, b)
-          .orElse(GraftSink.mainHead(path))
-        case None => GraftSink.mainHead(path)
-      }
-      val baseTs = prior.flatMap(_.ts)
-      if (truncate && seenBase.exists(_ != baseTs))
-        throw new java.util.ConcurrentModificationException(
-          s"graftsink: concurrent commit during a replace at $path — " +
-            "the replace was computed from a stale snapshot; re-run it")
-      seenBase = Some(baseTs)
-      if (!truncate) prior.foreach { m =>
-        require(GraftSink.schemaCompatible(m.ddl, schema),
-          s"graftsink: append schema mismatch at $path — table is '${m.ddl}', " +
-            s"write is '${schema.toDDL}' (use overwrite to replace)")
-      }
-      // appends into an id-migrated table stamp each new file's layout
-      // (write schema == table schema in order, so cols = the table
-      // ids); a truncate replaces the table — ids reset to positional
-      val ids = if (truncate) None else prior.flatMap(_.ids)
-      val entries = published.map { c =>
-        GraftSink.entry(c.stagedFile, Nil, c.stats.headOption,
-          Some(c.rows), ids, None, c.stats.drop(1))
-      }
-      // an append preserves the TABLE's declared DDL (nullability incl.)
-      val files = if (truncate) entries
-                  else prior.map(_.files).getOrElse(Nil) ++ entries
-      val ddl = if (truncate) GraftSink.cleanDdl(schema)
-                else prior.fold(GraftSink.cleanDdl(schema))(m => GraftSink.widenedDdl(m.ddl, schema))
-      GraftSink.Manifest(ddl, files, ids)
-    }
-    // 3) staging GC only — replaced data files are NOT deleted: older
-    //    snapshots (`_manifest.vN`) still reference them (time travel);
-    //    a real table format GCs them by snapshot-expiry policy instead
-    f.delete(new HPath(path, s"${GraftSink.STAGING}/$queryId"), true)
+    val published = StagedCommit.publish(path, s"$queryId-", messages)
+    GraftSink.commitManifest(path, branch)(StagedCommit.plan(path, schema, published,
+      StagedCommit.BatchWording, replace = truncate, guarded = truncate,
+      seed = scanBaseTs, branch = branch))
+    StagedCommit.dropStaging(path, queryId)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // staged files are invisible to readers; dropping the staging tree
-    // restores the exact pre-write state
-    GraftSink.fs(path).delete(new HPath(path, s"${GraftSink.STAGING}/$queryId"), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedCommit.dropStaging(path, queryId)
 }
 
 class GraftSinkWriterFactory(path: String, schema: StructType, queryId: String,
@@ -2018,94 +2089,57 @@ class GraftSinkPartitionedBatchWrite(path: String, schema: StructType,
       buckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftSink.fs(path)
-    // renames once; entries re-plan per commit attempt (see the
-    // unpartitioned commit for the rebase/refuse contract)
-    val published = messages.collect { case c: GraftSinkPartitionedCommit =>
-      c.files.zipWithIndex.map { case ((staged, part, rows), i) =>
-        val fin = s"$queryId-part-${c.partitionId}-$i.tsv"
-        require(f.rename(new HPath(staged), new HPath(path, fin)),
-          s"graftsink: failed to publish $staged -> $fin")
-        (fin, part, rows)
-      }
-    }.toSeq.flatten
+    val published = StagedCommit.publish(path, s"$queryId-", messages)
     // REPLACE WHERE validation is WRITE-side, not commit-side: every
     // incoming row's tuple must satisfy the condition, or the statement
     // would silently ADD rows outside the partitions it replaces
     replaceWhere.foreach { allowed =>
-      val bad = published.collect {
-        case (_, part, _) if !tupleMatches(part, allowed) => part
-      }
+      val bad = published.flatMap(_.part).filterNot(tupleMatches(_, allowed))
       require(bad.isEmpty,
         s"graftsink: overwrite-by-filter got rows OUTSIDE the replaced " +
           s"partitions (${bad.distinct.mkString("; ")}) — the condition must " +
           "cover every incoming row")
     }
     val partial = dynamicOverwrite || replaceWhere.isDefined
-    // seeded with the rewrite's scan-plan-time base (when one exists) —
-    // see the unpartitioned commit for the first-attempt guard contract
-    var seenBase: Option[Option[Long]] = scanBaseTs
-    GraftSink.commitManifest(path, None) { () =>
-      val prior = GraftSink.mainHead(path)
-      val baseTs = prior.flatMap(_.ts)
-      // full AND partial replaces refuse on a moved base: which
-      // partitions survive was decided against a snapshot that no
-      // longer is the table
-      if ((truncate || partial) && seenBase.exists(_ != baseTs))
-        throw new java.util.ConcurrentModificationException(
-          s"graftsink: concurrent commit during a replace at $path — " +
-            "the replace was computed from a stale snapshot; re-run it")
-      seenBase = Some(baseTs)
-      // a PARTIAL replace (dynamic overwrite / REPLACE WHERE) matches
-      // prior files by their CURRENT-spec tuple keys: a file tagged
-      // under an OLDER partition generation (set_partitioning) can hold
-      // rows of the logically-replaced partitions yet never match —
-      // it would silently survive and duplicate the reload. Refuse
-      // until those files are rewritten into the current spec.
-      // (Untagged pre-partitioning files keep their documented
-      // always-survive semantics — they predate ANY spec.)
-      if (partial) {
-        val expected = partCols.toSet
-        val alien = prior.map(_.files).getOrElse(Nil).filter(l =>
-          GraftSink.entryPart(l).exists(b =>
-            GraftSink.partPairs(b).keySet != expected))
-        require(alien.isEmpty,
-          s"graftsink: partial overwrite at $path found ${alien.size} file(s) " +
-            "tagged under an older partition spec — rewrite them into the " +
-            "current spec (CALL compact) or use a full overwrite")
-      }
-      if (!truncate) prior.foreach { m =>
-        require(GraftSink.schemaCompatible(m.ddl, schema),
-          s"graftsink: append schema mismatch at $path — table is '${m.ddl}', " +
-            s"write is '${schema.toDDL}' (use overwrite to replace)")
-      }
-      val ids = if (truncate) None else prior.flatMap(_.ids)
-      val entries = published.map { case (fin, part, rows) =>
-        GraftSink.entry(fin, Nil, None, Some(rows), ids, Some(part))
-      }
-      val survivors =
-        if (truncate) Nil
-        else if (dynamicOverwrite) {
+    // full AND partial replaces refuse on a moved base
+    GraftSink.commitManifest(path, None)(StagedCommit.plan(path, schema, published,
+      StagedCommit.BatchWording, replace = truncate, guarded = truncate || partial,
+      seed = scanBaseTs, keep = { prior =>
+        val priorFiles = prior.map(_.files).getOrElse(Nil)
+        // a PARTIAL replace (dynamic overwrite / REPLACE WHERE) matches
+        // prior files by their CURRENT-spec tuple keys: a file tagged
+        // under an OLDER partition generation (set_partitioning) can hold
+        // rows of the logically-replaced partitions yet never match —
+        // it would silently survive and duplicate the reload. Refuse
+        // until those files are rewritten into the current spec.
+        // (Untagged pre-partitioning files keep their documented
+        // always-survive semantics — they predate ANY spec.)
+        if (partial) {
+          val expected = partCols.toSet
+          val alien = priorFiles.filter(l =>
+            GraftSink.entryPart(l).exists(b =>
+              GraftSink.partPairs(b).keySet != expected))
+          require(alien.isEmpty,
+            s"graftsink: partial overwrite at $path found ${alien.size} file(s) " +
+              "tagged under an older partition spec — rewrite them into the " +
+              "current spec (CALL compact) or use a full overwrite")
+        }
+        if (dynamicOverwrite) {
           // replace EXACTLY the tuples the incoming data touches;
           // untagged (pre-partitioning) entries always survive
-          val touched = published.map(_._2).toSet
-          prior.map(_.files).getOrElse(Nil)
-            .filterNot(l => GraftSink.entryPart(l).exists(touched))
+          val touched = published.flatMap(_.part).toSet
+          priorFiles.filterNot(l => GraftSink.entryPart(l).exists(touched))
         } else replaceWhere match {
           case Some(allowed) =>
-            prior.map(_.files).getOrElse(Nil)
-              .filterNot(l => GraftSink.entryPart(l).exists(tupleMatches(_, allowed)))
-          case None => prior.map(_.files).getOrElse(Nil)
+            priorFiles.filterNot(l => GraftSink.entryPart(l).exists(tupleMatches(_, allowed)))
+          case None => priorFiles
         }
-      val ddl = if (truncate) GraftSink.cleanDdl(schema)
-                else prior.fold(GraftSink.cleanDdl(schema))(m => GraftSink.widenedDdl(m.ddl, schema))
-      GraftSink.Manifest(ddl, survivors ++ entries, ids)
-    }
-    f.delete(new HPath(path, s"${GraftSink.STAGING}/$queryId"), true)
+      }))
+    StagedCommit.dropStaging(path, queryId)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftSink.fs(path).delete(new HPath(path, s"${GraftSink.STAGING}/$queryId"), true)
+    StagedCommit.dropStaging(path, queryId)
 }
 
 /** The per-task tuple router both partitioned write surfaces share:
@@ -2234,58 +2268,44 @@ class GraftSinkDeltaBatchWrite(path: String, schema: StructType, queryId: String
     new GraftSinkDeltaWriterFactory(path, schema, queryId)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftSink.fs(path)
-    val cms = messages.collect { case c: GraftSinkDeltaCommit => c }
     // merge the tasks' delete vectors per file
-    val delMap = cms.flatMap(_.deletes.toSeq).groupBy(_._1)
+    val delMap = messages.collect { case c: GraftSinkDeltaCommit => c }
+      .flatMap(_.deletes.toSeq).groupBy(_._1)
       .map { case (n, xs) => n -> xs.flatMap(_._2) }
-    // insert files rename once; entries re-plan per attempt
-    val inserts = cms.filter(_.stagedFile.nonEmpty).map { c =>
-      val fin = s"$queryId-part-${c.partitionId}.tsv"
-      require(f.rename(new HPath(c.stagedFile), new HPath(path, fin)),
-        s"graftsink: failed to publish ${c.stagedFile} -> $fin")
-      (fin, c.rows)
-    }.toSeq
-    // optimistic commit: a lost slot race re-folds the delete vectors
-    // onto the NEW base (a concurrent append's files survive untouched;
-    // our positions target the same files they always did). If a
-    // concurrent REWRITE removed a DV-target file, the unknown-files
-    // require below refuses the rebase — those positions were computed
-    // against rows that no longer exist under that name.
-    GraftSink.commitManifest(path, None) { () =>
-      val prior = GraftSink.mainHead(path).getOrElse(
-        throw new IllegalStateException(s"graftsink: delta commit on empty table at $path"))
-      require(schema.isEmpty || GraftSink.schemaCompatible(prior.ddl, schema),
-        s"graftsink: delta write schema mismatch at $path — table is '${prior.ddl}', " +
-          s"write is '${schema.toDDL}'")
-      val names = prior.files.map(GraftSink.entryName).toSet
-      val unknown = delMap.keys.filterNot(names)
-      require(unknown.isEmpty,
-        s"graftsink: delete vector targets unknown files: ${unknown.mkString(", ")}")
-      // DVs fold into the EXISTING entries (data files untouched);
-      // inserts publish like an ordinary append
-      val lines = prior.files.map { line =>
-        val n = GraftSink.entryName(line)
-        GraftSink.entry(n,
-          (GraftSink.entryDeletes(line) ++ delMap.getOrElse(n, Array.empty)).toSeq,
-          None,
-          GraftSink.entryRows(line),  // rows stay ORIGINAL; counts subtract |dv|
-          GraftSink.entryCols(line).map(_.toSeq), // file layout carries through
-          GraftSink.entryPart(line),              // partition tuple too
-          GraftSink.entryStatsAll(line)) // deletes never widen a min/max
-      }
-      val published = inserts.map { case (fin, rows) =>
-        GraftSink.entry(fin, Nil, None, Some(rows), prior.ids)
-      }
-      val ddl = if (schema.isEmpty) prior.ddl
-                else GraftSink.widenedDdl(prior.ddl, schema)
-      GraftSink.Manifest(ddl, lines ++ published, prior.ids)
-    }
-    f.delete(new HPath(path, s"${GraftSink.STAGING}/$queryId"), true)
+    // inserts publish like an ordinary append. A lost slot race re-folds
+    // the delete vectors onto the NEW base (a concurrent append's files
+    // survive untouched; our positions target the same files they
+    // always did). If a concurrent REWRITE removed a DV-target file, the
+    // unknown-files require refuses the rebase — those positions were
+    // computed against rows that no longer exist under that name. A
+    // pure DELETE carries no data columns, so there is no schema to
+    // check and the table's DDL stands.
+    val published = StagedCommit.publish(path, s"$queryId-", messages)
+    GraftSink.commitManifest(path, None)(StagedCommit.plan(path, schema, published,
+      StagedCommit.DeltaWording, checkAppend = schema.nonEmpty, keep = { base =>
+        val prior = base.getOrElse(throw new IllegalStateException(
+          s"graftsink: delta commit on empty table at $path"))
+        val names = prior.files.map(GraftSink.entryName).toSet
+        val unknown = delMap.keys.filterNot(names)
+        require(unknown.isEmpty,
+          s"graftsink: delete vector targets unknown files: ${unknown.mkString(", ")}")
+        // DVs fold into the EXISTING entries (data files untouched)
+        prior.files.map { line =>
+          val n = GraftSink.entryName(line)
+          GraftSink.entry(n,
+            (GraftSink.entryDeletes(line) ++ delMap.getOrElse(n, Array.empty)).toSeq,
+            None,
+            GraftSink.entryRows(line),  // rows stay ORIGINAL; counts subtract |dv|
+            GraftSink.entryCols(line).map(_.toSeq), // file layout carries through
+            GraftSink.entryPart(line),              // partition tuple too
+            GraftSink.entryStatsAll(line)) // deletes never widen a min/max
+        }
+      }))
+    StagedCommit.dropStaging(path, queryId)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftSink.fs(path).delete(new HPath(path, s"${GraftSink.STAGING}/$queryId"), true)
+    StagedCommit.dropStaging(path, queryId)
 }
 
 class GraftSinkDeltaWriterFactory(path: String, schema: StructType, queryId: String)
@@ -2346,158 +2366,48 @@ class GraftSinkDeltaWriterFactory(path: String, schema: StructType, queryId: Str
   * kill/resume spec), so the (queryId, epochId) key is durable.
   * OutputMode complete routes through SupportsTruncate exactly like
   * batch overwrite: each epoch's manifest lists only that epoch's
-  * files.
+  * files. With `partCols` (a PARTITIONED table, q397) each task routes
+  * rows through the shared [[GraftSinkTupleRouter]], so every published
+  * file carries its `part:` tuple — a streamed table prunes exactly
+  * like a batch-written one.
   */
 class GraftSinkStreamingWrite(path: String, schema: StructType,
-    queryId: String, truncate: Boolean) extends StreamingWrite {
-
-  private def epochStaging(epochId: Long) =
-    new HPath(path, s"${GraftSink.STAGING}/$queryId/e$epochId")
+    queryId: String, truncate: Boolean, partCols: Seq[String] = Nil,
+    partIdx: Array[Int] = Array.empty) extends StreamingWrite {
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftSinkStreamingWriterFactory(path, schema, queryId)
+    new GraftSinkStreamingWriterFactory(path, schema, queryId, partCols, partIdx)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftSink.fs(path)
-    val prior = GraftSink.mainHead(path)
     val marker = s"q-$queryId-e$epochId-"
-    if (prior.exists(_.files.exists(_.startsWith(marker)))) {
-      // replayed epoch: the previous run committed this batch but died
-      // before checkpointing the commit — drop the duplicate output
-      f.delete(epochStaging(epochId), true)
-      return
+    // a replayed epoch (the previous run committed this batch but died
+    // before checkpointing the commit) is already in the manifest: only
+    // its duplicate staging is dropped
+    if (!GraftSink.mainHead(path).exists(_.files.exists(_.startsWith(marker)))) {
+      val published = StagedCommit.publish(path, marker, messages, replaceGhost = true)
+      // a concurrent BATCH append onto a streamed table rebases cleanly
+      // under this epoch's commit (the batch append contract)
+      GraftSink.commitManifest(path, None)(StagedCommit.plan(path, schema, published,
+        StagedCommit.StreamWording, replace = truncate, guarded = truncate))
     }
-    val published = messages.collect { case c: GraftSinkCommit =>
-      val fin = s"${marker}part-${c.partitionId}.tsv"
-      val dest = new HPath(path, fin)
-      // a crash AFTER this rename but BEFORE the manifest write leaves
-      // an unreferenced ghost under the final name; the replayed epoch
-      // must be able to re-publish over it
-      if (f.exists(dest)) f.delete(dest, false)
-      require(f.rename(new HPath(c.stagedFile), dest),
-        s"graftsink: failed to publish ${c.stagedFile} -> $fin")
-      (fin, c.rows)
-    }.toSeq
-    // optimistic commit loop: a concurrent BATCH append onto a streamed
-    // table rebases cleanly under this epoch's commit (same contract as
-    // the batch append path)
-    var seenBase: Option[Option[Long]] = None
-    GraftSink.commitManifest(path, None) { () =>
-      val base = GraftSink.mainHead(path)
-      val baseTs = base.flatMap(_.ts)
-      if (truncate && seenBase.exists(_ != baseTs))
-        throw new java.util.ConcurrentModificationException(
-          s"graftsink: concurrent commit during a complete-mode epoch at $path")
-      seenBase = Some(baseTs)
-      if (!truncate) base.foreach { m =>
-        require(GraftSink.schemaCompatible(m.ddl, schema),
-          s"graftsink: streaming append schema mismatch at $path — table is " +
-            s"'${m.ddl}', write is '${schema.toDDL}'")
-      }
-      val ids = if (truncate) None else base.flatMap(_.ids)
-      val entries = published.map { case (fin, rows) =>
-        GraftSink.entry(fin, Nil, None, Some(rows), ids)
-      }
-      val files = if (truncate) entries
-                  else base.map(_.files).getOrElse(Nil) ++ entries
-      val ddl = if (truncate) GraftSink.cleanDdl(schema)
-                else base.fold(GraftSink.cleanDdl(schema))(m => GraftSink.widenedDdl(m.ddl, schema))
-      GraftSink.Manifest(ddl, files, ids)
-    }
-    f.delete(epochStaging(epochId), true)
+    StagedCommit.dropStaging(path, s"$queryId/e$epochId")
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftSink.fs(path).delete(epochStaging(epochId), true)
+    StagedCommit.dropStaging(path, s"$queryId/e$epochId")
 }
 
 class GraftSinkStreamingWriterFactory(path: String, schema: StructType,
-    queryId: String) extends StreamingDataWriterFactory {
+    queryId: String, partCols: Seq[String], partIdx: Array[Int])
+  extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new GraftSinkRowWriter(path, schema,
-      s"$path/${GraftSink.STAGING}/$queryId/e$epochId/part-$partitionId-$taskId.tsv",
-      partitionId)
-}
-
-class GraftSinkPartitionedStreamingWriterFactory(path: String,
-    schema: StructType, queryId: String, partCols: Seq[String],
-    partIdx: Array[Int]) extends StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new GraftSinkTupleRouter(path, schema,
-      s"$path/${GraftSink.STAGING}/$queryId/e$epochId/part-$partitionId-$taskId",
-      partitionId, partCols, partIdx, None)
-}
-
-/** STREAMING write into a PARTITIONED table (q397): the same epoch-
-  * keyed exactly-once commit as [[GraftSinkStreamingWrite]], but each
-  * task routes rows through the shared [[GraftSinkTupleRouter]] so
-  * every published file carries its `part:` tuple — a streamed table
-  * prunes exactly like a batch-written one. Epoch replay detection is
-  * by the `q-<qid>-e<epoch>-` marker, identical to the unpartitioned
-  * path; a replayed epoch's staging is dropped whole. */
-class GraftSinkPartitionedStreamingWrite(path: String, schema: StructType,
-    queryId: String, truncate: Boolean, partCols: Seq[String],
-    partIdx: Array[Int]) extends StreamingWrite {
-
-  private def epochStaging(epochId: Long) =
-    new HPath(path, s"${GraftSink.STAGING}/$queryId/e$epochId")
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftSinkPartitionedStreamingWriterFactory(path, schema, queryId,
-      partCols, partIdx)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftSink.fs(path)
-    val prior = GraftSink.mainHead(path)
-    val marker = s"q-$queryId-e$epochId-"
-    if (prior.exists(_.files.exists(_.startsWith(marker)))) {
-      f.delete(epochStaging(epochId), true) // replayed epoch: drop duplicates
-      return
-    }
-    val published = messages.collect { case c: GraftSinkPartitionedCommit =>
-      c.files.zipWithIndex.map { case ((staged, part, rows), i) =>
-        val fin = s"${marker}part-${c.partitionId}-$i.tsv"
-        val dest = new HPath(path, fin)
-        if (f.exists(dest)) f.delete(dest, false) // ghost from a crashed publish
-        require(f.rename(new HPath(staged), dest),
-          s"graftsink: failed to publish $staged -> $fin")
-        (fin, part, rows)
-      }
-    }.toSeq.flatten
-    var seenBase: Option[Option[Long]] = None
-    GraftSink.commitManifest(path, None) { () =>
-      val base = GraftSink.mainHead(path)
-      val baseTs = base.flatMap(_.ts)
-      if (truncate && seenBase.exists(_ != baseTs))
-        throw new java.util.ConcurrentModificationException(
-          s"graftsink: concurrent commit during a complete-mode epoch at $path")
-      seenBase = Some(baseTs)
-      if (!truncate) base.foreach { m =>
-        require(GraftSink.schemaCompatible(m.ddl, schema),
-          s"graftsink: streaming append schema mismatch at $path — table is " +
-            s"'${m.ddl}', write is '${schema.toDDL}'")
-      }
-      val ids = if (truncate) None else base.flatMap(_.ids)
-      val entries = published.map { case (fin, part, rows) =>
-        GraftSink.entry(fin, Nil, None, Some(rows), ids, Some(part))
-      }
-      val files = if (truncate) entries
-                  else base.map(_.files).getOrElse(Nil) ++ entries
-      val ddl = if (truncate) GraftSink.cleanDdl(schema)
-                else base.fold(GraftSink.cleanDdl(schema))(m => GraftSink.widenedDdl(m.ddl, schema))
-      GraftSink.Manifest(ddl, files, ids)
-    }
-    f.delete(epochStaging(epochId), true)
+      epochId: Long): DataWriter[InternalRow] = {
+    val staged = s"$path/${GraftSink.STAGING}/$queryId/e$epochId/part-$partitionId-$taskId"
+    if (partCols.isEmpty) new GraftSinkRowWriter(path, schema, s"$staged.tsv", partitionId)
+    else new GraftSinkTupleRouter(path, schema, staged, partitionId, partCols, partIdx, None)
   }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftSink.fs(path).delete(epochStaging(epochId), true)
 }
 
 // --------------------------------------------------------------------

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Sessions, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -40,9 +40,7 @@ object Streaming extends QueryPack {
     * of sizing `spark.sql.shuffle.partitions` to the key cardinality.
     */
   private def withStateParts[T](s: org.apache.spark.sql.SparkSession,
-      noDataBatch: Boolean = true)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+      noDataBatch: Boolean = true)(body: => T): T =
     // noDataBatch=false skips the trailing empty microbatch AvailableNow
     // appends for stateful queries (~0.7-0.9 s of planning + state-store
     // commits here). Only legal where that batch is OUTPUT-INVISIBLE:
@@ -53,14 +51,9 @@ object Streaming extends QueryPack {
     // the query terminates. Watermark-FLUSH keys (append-mode aggs and
     // outer joins whose sentinel tranche must propagate into the next
     // batch's watermark: q47/q217/q220/q191/q298) must keep it.
-    if (!noDataBatch)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      if (!noDataBatch)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    }
-  }
+    Sessions.withConfs(s, Seq("spark.sql.shuffle.partitions" -> "8") ++
+      Option.when(!noDataBatch)(
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*)(body)
 
   /** Far-future watermark-sentinel timestamp (µs): max(events.ts) + 30
     * days. Used by q191/q217/q220 to stage a final tranche that pushes
@@ -442,20 +435,16 @@ object Streaming extends QueryPack {
         "b2" -> evs.filter(col("ts_us") > b2)))
       val schema = StructType(Seq(StructField("user_id", LongType),
         StructField("ts_us", LongType), StructField("event_id", LongType)))
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // changelog checkpointing: each commit uploads only the batch's
       // change set instead of a full RocksDB snapshot (snapshots move to
       // background maintenance) — the deployment-honest setting for any
       // RocksDB-backed stateful stream; state reconstruction on restart
       // replays changelogs onto the last snapshot, so exactly-once
       // semantics are unchanged (guide §5 / VERDICT r14 item 3).
-      val prevClog = s.conf.getOption(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-      s.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      try {
+      Sessions.withConfs(s,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
         val q = withStateParts(s, noDataBatch = false)(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$in/*/")
@@ -466,17 +455,6 @@ object Streaming extends QueryPack {
           .writeStream.format("memory").queryName("q145_mem")
           .outputMode("update").trigger(Trigger.AvailableNow()).start())
         q.awaitTermination()
-      } finally {
-        prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None    => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        prevClog match {
-          case Some(p) => s.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", p)
-          case None => s.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-        }
       }
       graft.ops.Stage.release(inP) // results live in the memory sink now
       s.table("q145_mem").orderBy(col("user_id"), col("sess_id"))

@@ -96,9 +96,7 @@ class Md5ModSpec extends AnyFunSuite with Matchers with SharedSpark {
       .foreach(r => assert(r.isNullAt(0)))
     // and next to the chain it claims parity with, under the chain's
     // NULL-returning (non-ANSI) remainder semantics
-    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
+    Sessions.withConfs(spark, "spark.sql.ansi.enabled" -> "false") {
       val rows = df
         .withColumn("native", expr("md5_mod(s, 0L)"))
         .withColumn("chain", expr(
@@ -106,11 +104,6 @@ class Md5ModSpec extends AnyFunSuite with Matchers with SharedSpark {
         .select(col("native"), col("chain"))
         .collect()
       rows.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
-        case None => spark.conf.unset("spark.sql.ansi.enabled")
-      }
     }
   }
 }

@@ -106,25 +106,10 @@ object SparkQueryProps extends Properties("graft-queries") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(5).withWorkers(1)
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    // same extensions as SharedSpark/prod — whichever suite builds the
-    // JVM-wide session first must install them (getOrCreate ignores
-    // the builder's extensions for an existing session)
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // local checkpoint dirs: nio manager (no per-file chmod fork) — see
-    // graft.streaming.NioCheckpointFileManager; non-file URIs fall back
-    .config("spark.sql.streaming.checkpointFileManagerClass",
-      "graft.streaming.NioCheckpointFileManager")
-    // no-fork, no-.crc local FS (see graft.sources.FastLocalFileSystem);
-    // cluster schemes (hdfs:/s3:) are untouched
-    .config("spark.hadoop.fs.file.impl",
-      "graft.sources.FastLocalFileSystem")
-    .config("spark.hadoop.io.file.buffer.size", "65536")
-    .getOrCreate()
+  // the same session as SharedSpark/prod — whichever suite builds the
+  // JVM-wide session first must install the extensions (getOrCreate
+  // ignores the builder's extensions for an existing session)
+  private lazy val spark = Sessions.local(4)
 
   private val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon",
     "zeta", "eta", "theta")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.sources.{GraftSink, GraftSinkCommit, GraftSinkStreamingWrite}
+import graft.sources.{GraftSink, GraftSinkCommit, GraftSinkPartitionedCommit, GraftSinkStreamingWrite}
 
 /** Round-10 connector surfaces: TableCatalog identifier resolution
   * (+ SQL VERSION AS OF), row-level DELETE/UPDATE/MERGE (group-based
@@ -412,23 +412,54 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
     }.distinct.sorted
     epochs.length should be >= 3 // one per drained tranche (3 data batches)
 
-    // direct replay-window idempotence: re-committing an epoch whose
+    // direct replay-window idempotence, through the unpartitioned and
+    // the partitioned streaming write: re-committing an epoch whose
     // files are already in the manifest must be a no-op
-    val p = ops.Stage.fresh("sw_idem").toString
     val kSchema = StructType(Seq(StructField("k", LongType)))
-    val sw = new GraftSinkStreamingWrite(p, kSchema, "qX", truncate = false)
-    def staged(epoch: Long, rows: Seq[Long]): GraftSinkCommit = {
-      val f = s"$p/_staging/qX/e$epoch/part-0-0.tsv"
+    def stageFile(p: String, epoch: Long, name: String, rows: Seq[Long]): String = {
+      val f = s"$p/_staging/qX/e$epoch/$name"
       val o = GraftSink.fs(p).create(new org.apache.hadoop.fs.Path(f), true)
       o.write(rows.map(_.toString + "\n").mkString.getBytes("UTF-8")); o.close()
-      GraftSinkCommit(f, 0, rows.length)
+      f
     }
-    sw.commit(0L, Array(staged(0L, Seq(1L, 2L))))
-    sw.commit(1L, Array(staged(1L, Seq(3L))))
-    val before = GraftSink.readManifest(p).get
-    sw.commit(1L, Array(staged(1L, Seq(3L)))) // the replay
-    GraftSink.readManifest(p).get.files shouldBe before.files
-    GraftSink.listVersions(p).length shouldBe 2
-    spark.read.format("graftsink").option("path", p).load().count() shouldBe 3
+    // one task per epoch; the partitioned task stages one file per k
+    val surfaces = Seq(
+      ("unpartitioned",
+        (p: String) => new GraftSinkStreamingWrite(p, kSchema, "qX", truncate = false),
+        (p: String, epoch: Long, rows: Seq[Long]) =>
+          GraftSinkCommit(stageFile(p, epoch, "part-0-0.tsv", rows), 0, rows.length),
+        "part-0.tsv"),
+      ("partitioned",
+        (p: String) => new GraftSinkStreamingWrite(p, kSchema, "qX", truncate = false,
+          Seq("k"), Array(0)),
+        (p: String, epoch: Long, rows: Seq[Long]) =>
+          GraftSinkPartitionedCommit(0, rows.zipWithIndex.map { case (k, i) =>
+            (stageFile(p, epoch, s"part-0-0-$i.tsv", Seq(k)), s"k=$k", 1L)
+          }),
+        "part-0-0.tsv"))
+    for ((label, write, task, firstFile) <- surfaces) withClue(s"$label: ") {
+      val p = ops.Stage.fresh(s"sw_idem_$label").toString
+      val sw = write(p)
+      def read(): Seq[Long] = spark.read.format("graftsink").option("path", p).load()
+        .collect().map(_.getLong(0)).sorted.toSeq
+      sw.commit(0L, Array(task(p, 0L, Seq(1L, 2L))))
+      sw.commit(1L, Array(task(p, 1L, Seq(3L))))
+      val before = GraftSink.readManifest(p).get
+      sw.commit(1L, Array(task(p, 1L, Seq(3L)))) // the replay
+      GraftSink.readManifest(p).get.files shouldBe before.files
+      GraftSink.listVersions(p).length shouldBe 2
+      read() shouldBe Seq(1L, 2L, 3L)
+      // a crash after epoch 2's publish rename but before its manifest
+      // write leaves an unreferenced ghost under the final name; the
+      // replayed epoch publishes over it
+      val ghost = new org.apache.hadoop.fs.Path(p, s"q-qX-e2-$firstFile")
+      val o = GraftSink.fs(p).create(ghost, false)
+      o.write("999\n".getBytes("UTF-8")); o.close()
+      sw.commit(2L, Array(task(p, 2L, Seq(4L))))
+      GraftSink.readManifest(p).get.files.map(GraftSink.entryName) should contain(
+        s"q-qX-e2-$firstFile")
+      GraftSink.listVersions(p).length shouldBe 3
+      read() shouldBe Seq(1L, 2L, 3L, 4L)
+    }
   }
 }

@@ -408,13 +408,7 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
     Seq.tabulate(4)(i => (s"g$i", i * 100L))
       .toDF("grp", "w").writeTo(s"$cat.ns.spjb")
       .partitionedBy(col("grp")).create()
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    Sessions.withConfs(spark, Sessions.SpjConfs: _*) {
       def grp(t: String) = spark.read.format("graftsink")
         .option("path", tablePath(t)).option("grouped", "true").load()
       val a = grp("spja")
@@ -444,9 +438,6 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
         spark.read.format("graftsink").option("path", up)
           .option("grouped", "true").load().collect()
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -24,20 +24,6 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
   private def tablePath(name: String): String =
     s"${graft.ops.Stage.dir("g12_warehouse")}/ns/$name"
 
-  private def withSpjConfs[T](body: => T): T = {
-    val confs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // ------------------------------------------------------------------
   // Bucketed storage-partitioned join (q405)
   // ------------------------------------------------------------------
@@ -55,7 +41,7 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
       .writeTo(s"$cat.ns.bspja").append()
     Seq.tabulate(40)(i => (i.toLong, i * 100L)).toDF("k", "w")
       .writeTo(s"$cat.ns.bspjb").append()
-    withSpjConfs {
+    Sessions.withConfs(spark, Sessions.SpjConfs: _*) {
       val a = spark.read.option("grouped", "true").table(s"$cat.ns.bspja")
       val b = spark.read.option("grouped", "true").table(s"$cat.ns.bspjb")
       val j = a.join(b.hint("merge"), "k")
@@ -207,27 +193,27 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
     val p = freshSink("occ12c")
     spark.range(0, 5).selectExpr("id AS k")
       .write.format("graftsink").option("path", p).mode("overwrite").save() // v1
-    // replica of the write path's truncate guard: base moves between
-    // plan invocations → ConcurrentModificationException, never a
-    // silent clobber of the interloper's commit
+    // the write path's own replace plan: the base moves between plan
+    // invocations → ConcurrentModificationException, never a silent
+    // clobber of the interloper's commit
+    val replace = graft.sources.StagedCommit.plan(p,
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"), Nil,
+      graft.sources.StagedCommit.BatchWording, replace = true, guarded = true)
     var calls = 0
-    var seenBase: Option[Option[Long]] = None
     val ex = intercept[java.util.ConcurrentModificationException] {
       GraftSink.commitManifest(p, None) { () =>
         calls += 1
-        val prior = GraftSink.readManifest(p)
-        val baseTs = prior.flatMap(_.ts)
-        if (seenBase.exists(_ != baseTs))
-          throw new java.util.ConcurrentModificationException(
-            s"graftsink: concurrent commit during a replace at $p")
-        seenBase = Some(baseTs)
-        if (calls == 1) // interloper lands after the stale plan's base read
-          GraftSink.writeManifest(p, prior.get.copy(
-            files = prior.get.files :+ GraftSink.entry("x.tsv", Nil, None, Some(1L))))
-        GraftSink.Manifest("k BIGINT", Nil) // the (stale) replacement
+        val stale = replace() // reads the base, then...
+        if (calls == 1) { // ...an interloper lands before the slot claim
+          val prior = GraftSink.readManifest(p).get
+          GraftSink.writeManifest(p, prior.copy(
+            files = prior.files :+ GraftSink.entry("x.tsv", Nil, None, Some(1L))))
+        }
+        stale
       }
     }
-    ex.getMessage should include("concurrent commit")
+    calls shouldBe 2 // the lost claim re-planned against the moved base
+    ex.getMessage should include("concurrent commit during a replace")
     // the interloper's commit is intact
     GraftSink.readManifest(p).get.files.map(GraftSink.entryName) should contain("x.tsv")
   }

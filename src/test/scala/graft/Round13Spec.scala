@@ -132,27 +132,24 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     val p = tablePath("cow13")
     // interloper commit lands AFTER the head the DELETE will scan, but
     // BEFORE the DELETE's commit: with eager DML there is no external
-    // hook between Spark's scan and commit, so replay the exact guard
-    // contract — a write seeded with the scan-time base must refuse
-    // once the head moves, ON ITS FIRST ATTEMPT (seenBase pre-seeded)
+    // hook between Spark's scan and commit, so drive the copy-on-write
+    // batch write itself, seeded with the scan-time base the row-level
+    // operation hands it — it must refuse once the head moves, ON ITS
+    // FIRST ATTEMPT
     val scanTs = GraftSink.mainHead(p).flatMap(_.ts)
     // interloper: a real append moves the head
     Seq((9L, "z")).toDF("k", "s").writeTo(s"$cat.ns.cow13").append()
-    var attempts = 0
+    val versions = GraftSink.listVersions(p)
+    val cow = new graft.sources.GraftSinkBatchWrite(p,
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, s STRING"),
+      "cow13-rewrite", truncate = true, scanBaseTs = Some(scanTs))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      var seenBase: Option[Option[Long]] = Some(scanTs) // the write's seed
-      GraftSink.commitManifest(p, None) { () =>
-        attempts += 1
-        val baseTs = GraftSink.mainHead(p).flatMap(_.ts)
-        if (seenBase.exists(_ != baseTs))
-          throw new java.util.ConcurrentModificationException(
-            s"graftsink: concurrent commit during a replace at $p")
-        seenBase = Some(baseTs)
-        GraftSink.Manifest("k BIGINT, s STRING", Nil)
-      }
+      cow.commit(Array.empty)
     }
-    attempts shouldBe 1 // refused on the FIRST attempt — the new seed
-    ex.getMessage should include("concurrent commit")
+    ex.getMessage should include("concurrent commit during a replace")
+    // no writer raced this commit, so only the seed can have refused it
+    // — on the FIRST attempt, before any slot was claimed
+    GraftSink.listVersions(p) shouldBe versions
     // and the real DML path wires the seed end-to-end: a plain DELETE
     // with no interloper still works (the seed matches the head)
     spark.sql(s"DELETE FROM $cat.ns.cow13 WHERE k = 2")

@@ -91,6 +91,13 @@ class Round9Spec extends AnyFunSuite with Matchers with SharedSpark {
     // shares sum to 1 over the contaminated mass
     val rows = SparkEntry.queries("q296_contamination_attr")(spark, sf).collect()
     rows.map(_.getDouble(4)).sum shouldBe 1.0 +- 1e-4
+    // no document is contaminated at sf0.1 (tot_contam = 0): the share
+    // is NULL there, as in the oracle, not an ANSI divide-by-zero
+    val sf01 = SparkEntry.queries("q296_contamination_attr")(spark,
+      s"${new java.io.File(sf).getParent}/sf0.1").collect()
+    sf01 should not be empty
+    sf01.map(_.getLong(2)).sum shouldBe 0L
+    sf01.foreach(r => r.isNullAt(4) shouldBe true)
   }
 
   test("q297 bootstrap-median CI: brackets the observed median and matches a scalar resample") {

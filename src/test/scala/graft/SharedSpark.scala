@@ -7,27 +7,9 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   * harness session shape: local[4], 4 shuffle partitions, UTC).
   */
 trait SharedSpark extends BeforeAndAfterAll { this: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    // the same extensions every shipped entrypoint installs
-    // (Verify/Bench/Smoke) — native functions, the md5-chain rewrite,
-    // and the view-resolution rule, so specs analyze exactly like prod
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // local checkpoint dirs: nio manager (no per-file chmod fork) — see
-    // graft.streaming.NioCheckpointFileManager; non-file URIs fall back
-    .config("spark.sql.streaming.checkpointFileManagerClass",
-      "graft.streaming.NioCheckpointFileManager")
-    // no-fork, no-.crc local FS (see graft.sources.FastLocalFileSystem);
-    // cluster schemes (hdfs:/s3:) are untouched
-    .config("spark.hadoop.fs.file.impl",
-      "graft.sources.FastLocalFileSystem")
-    .config("spark.hadoop.io.file.buffer.size", "65536")
-    // codegen class cache sized to the query inventory (see Bench.scala)
-    .config("spark.sql.codegen.cache.maxEntries", "4096")
-    .getOrCreate()
+  // the same session every shipped entry point builds, so specs
+  // analyze exactly like prod
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -41,23 +41,14 @@ class SkewSpec extends AnyFunSuite with Matchers with SharedSpark {
     * a local-scale hot key trip the same code path production sizes do.
     */
   test("AQE splits the skewed partition of an unsalted join at runtime") {
-    val keys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // keep it a SMJ
-
+    Sessions.withConfs(spark,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // keep it a SMJ
       // 200k rows, 90% on hot key 1, with a payload wide enough that the
       // hot partition clears the (lowered) skew byte threshold
       val big = spark.range(0, 200000)
@@ -85,9 +76,6 @@ class SkewSpec extends AnyFunSuite with Matchers with SharedSpark {
         // into partial-reducer slices
         fin should include("AQEShuffleRead skewed")
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -487,14 +487,9 @@ class StreamRecoverySpec extends AnyFunSuite with Matchers with SharedSpark {
   test("transformWithState sessionizer resumes from a RocksDB checkpoint with identical session emission") {
     // mirror q145: the successor API runs on the RocksDB state store,
     // so this restart also exercises RocksDB snapshot/changelog restore
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try sessionRecoveryCase(tws = true, tag = "recovt")
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
+    Sessions.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      sessionRecoveryCase(tws = true, tag = "recovt")
     }
   }
 }

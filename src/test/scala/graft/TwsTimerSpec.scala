@@ -61,10 +61,8 @@ class TwsTimerSpec extends AnyFunSuite with Matchers with SharedSpark {
     // remaining timer; its own open session is filtered from the readout
     val sentinel = Seq((-1L, far, -1L)).toDF("user_id", "ts_us", "event_id")
 
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Sessions.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // ---- uninterrupted run over 3 terciles + sentinel --------------
       val inA = ops.Stage.fresh("twst_in_a")
       val outA = ops.Stage.fresh("twst_out_a").toString
@@ -106,11 +104,6 @@ class TwsTimerSpec extends AnyFunSuite with Matchers with SharedSpark {
         resumed shouldBe batch
       }
       ops.Stage.release(inA); ops.Stage.release(inB)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

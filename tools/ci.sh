@@ -1,9 +1,21 @@
 #!/usr/bin/env bash
 # Full local gate, in the order failures are cheapest to catch:
-# compile → tests → sf0.001 verify+oracle+golden → sf0.01 verify+oracle.
+# duplicate-idiom grep → compile → tests → sf0.001 verify+oracle+golden →
+# sf0.01 verify+oracle.
 # Usage: bash tools/ci.sh [--fast]   (--fast skips the sf0.01 pass)
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# One implementation per idiom: sessions are built only by
+# graft.Sessions.local, and session confs are saved/restored only by
+# graft.Sessions.withConfs. A second copy anywhere in src/ fails the gate.
+dups=$(grep -rnE 'SparkSession\.builder\b|conf\.getOption\(' src --include='*.scala' \
+  | grep -v '^src/main/scala/graft/Sessions\.scala:' || true)
+if [[ -n "$dups" ]]; then
+  echo "session builder or conf save/restore outside graft.Sessions:" >&2
+  echo "$dups" >&2
+  exit 1
+fi
 
 # Pin parallelism: q13/q63 sketch goldens depend on partition count, so an
 # inherited SPARK_GRAFT_CPUS would make golden check drift across hosts.
