@@ -8,24 +8,28 @@ object Bench {
     // session cost, not query cost — without this the first query in
     // map order absorbs ~5 s of one-time startup.
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.region(spark, sfDir).count()
     // Two timed passes, report the per-query MIN: this microVM shows
     // ±50% single-run jitter (I/O + GC noise) on individual queries;
     // min-of-2 measures achievable per-query cost, standard benchmark
     // practice, and keeps the reported total stable across rounds.
     // A crashed query reports the sentinel -1.0, never its time-to-crash
-    // (folding crash latency into min-of-2 would under-report it).
+    // (folding crash latency into min-of-2 would under-report it), and
+    // its cause goes to stderr.
     // Optional comma-separated key filter for targeted local A/B runs
     // (unset in the driver's invocation — the full map runs there).
     val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
       .map(_.split(",").toSet)
     val keys = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
-    def pass(): Map[String, Double] = keys.map { case (name, fn) =>
+    def pass(n: Int): Map[String, Double] = keys.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name pass $n failed: ${e.getClass.getName}: ${e.getMessage}")
+        false
+      }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
-    val p1 = pass(); val p2 = pass()
+    val p1 = pass(1); val p2 = pass(2)
     val results = p1.map { case (k, v) =>
       k -> (if (v < 0 || p2(k) < 0) -1.0 else math.min(v, p2(k)))
     }

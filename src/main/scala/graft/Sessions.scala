@@ -1,10 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ExecutorService, Executors}
+
+import scala.concurrent.{Future, Promise}
+
+import org.apache.spark.sql.{classic, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** The one session shape every entry point (Bench, Verify, Smoke,
-  * Explain) and every spec runs on, and the one way a query changes
-  * session confs for part of its work.
+  * Explain) and every spec runs on, the one way a query changes
+  * session confs for part of its work, and the one way it runs Spark
+  * jobs from another thread.
   */
 object Sessions {
 
@@ -57,6 +63,30 @@ object Sessions {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
+  }
+
+  /** Daemon threads, so an idle one never holds the JVM open. */
+  private lazy val pool: ExecutorService = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-future")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Start `body` on a pool thread with the caller's Spark thread state —
+    * its local properties (job group, job tags, scheduler pool,
+    * description) and its active session — installed for the body and
+    * taken off afterwards (Spark's `SQLExecution.withThreadLocalCaptured`).
+    * A pool thread otherwise carries the state of whichever thread
+    * created it, so the caller's `cancelJobGroup` or job tag would miss
+    * the jobs `body` runs.
+    */
+  def future[T](s: SparkSession)(body: => T): Future[T] = {
+    val p = Promise[T]()
+    // body never throws out, so the captured state is always taken off
+    SQLExecution.withThreadLocalCaptured(s.asInstanceOf[classic.SparkSession], pool) {
+      try p.success(body) catch { case e: Throwable => p.failure(e) }
+    }
+    p.future
   }
 
   /** Storage-partitioned join on graftsink/graftseq scans: bucketing

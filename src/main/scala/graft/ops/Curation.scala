@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Sessions, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -478,7 +478,7 @@ object Curation extends QueryPack {
       // cuts the sweep to the slowest branch; each branch is
       // deterministic, so the union is order-stable by threshold.
       val res = Seq(0.01, 0.02, 0.05, 0.1).map { t =>
-        scala.concurrent.Future {
+        Sessions.future(s) {
           val e = pairs.filter(col("jaccard") >= t)
           val edges = e.select(col("doc_a").as("u"), col("doc_b").as("v"))
             .union(e.select(col("doc_b").as("u"), col("doc_a").as("v")))
@@ -494,7 +494,7 @@ object Curation extends QueryPack {
               "docs_flagged", "n_clusters",
               "docs_flagged - n_clusters AS docs_removable", "tokens_removed",
               "round(cast(tokens_removed as double) / corpus_toks, 6) AS pct_corpus_tokens")
-        }(scala.concurrent.ExecutionContext.global)
+        }
       }.map(f => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       res.reduce(_ union _).orderBy(col("threshold"))
     }),

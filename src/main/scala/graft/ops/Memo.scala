@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
 /** Session-scoped memo for expensive deterministic frames (contracted
   * dedup-pair graphs, trained codebooks, hashed n-gram sets) that
   * several queries — and Bench's min-of-2 passes — share per
-  * (session, sfDir).
+  * (session, sfDir), and for each input table's parquet schema per
+  * table version (`graft.Tables`).
   *
   * Keyed WEAKLY by the SparkSession object itself, not by
   * `System.identityHashCode`: identity hashes are not unique, so after

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Sessions, Tables}
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline mechanics beyond analysis/dedup: the
@@ -201,7 +201,7 @@ object Pipeline extends QueryPack {
           .write.mode("overwrite")
           .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
           .saveAsTable("graft_bkt82.lineitem_b"))
-        .map(wf => scala.concurrent.Future(wf())(scala.concurrent.ExecutionContext.global))
+        .map(wf => Sessions.future(s)(wf()))
       writes.foreach(f =>
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       s.table("graft_bkt82.lineitem_b")

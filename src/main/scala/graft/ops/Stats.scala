@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Sessions, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -187,11 +187,10 @@ object Stats extends QueryPack {
       // serially the second chain's jobs wait on the first's tail for
       // no reason (guide §2.6: overlap independent jobs). Futures start
       // both; the final join needs both anyway.
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Await
       import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val rqF = Future(avgRanks(s, li, "l_quantity", "rq"))
-      val rpF = Future(avgRanks(s, li, "l_extendedprice", "rp"))
+      val rqF = Sessions.future(s)(avgRanks(s, li, "l_quantity", "rq"))
+      val rpF = Sessions.future(s)(avgRanks(s, li, "l_extendedprice", "rp"))
       val rq = Await.result(rqF, Duration.Inf)
       val rp = Await.result(rpF, Duration.Inf)
       li.join(rq, "l_quantity").join(rp, "l_extendedprice")

@@ -108,12 +108,11 @@ object Streaming extends QueryPack {
     */
   private def stageTranches(in: String,
       tranches: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.traverse(tranches) { case (name, df) =>
-      Future(df.coalesce(1).write.mode("overwrite").parquet(s"$in/$name"))
-    }, Duration.Inf)
+    tranches.map { case (name, df) =>
+      Sessions.future(df.sparkSession)(df.coalesce(1).write.mode("overwrite").parquet(s"$in/$name"))
+    }.foreach(Await.result(_, Duration.Inf))
     // stamps sit 1 h in the PAST so a sentinel tranche some keys write
     // AFTER this call is newest by wall clock without its own stamp
     // (well under the source's 7-day maxFileAge window)

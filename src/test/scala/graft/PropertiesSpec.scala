@@ -141,7 +141,7 @@ object SparkQueryProps extends Properties("graft-queries") {
   private def rerunOnSurvivors(dir: String, survivorIds: Set[Long]): String = {
     // stage the dedup output (original rows filtered to survivors) as a
     // second corpus — idempotence means the second pass finds nothing
-    val surv = spark.read.parquet(s"$dir/documents.parquet")
+    val surv = Tables.documents(spark, dir)
       .filter(org.apache.spark.sql.functions.col("doc_id").isInCollection(survivorIds))
     val dir2 = ops.Stage.fresh("prop_docs2")
     surv.coalesce(1).write.mode("overwrite").parquet(s"$dir2/documents.parquet")

@@ -5,6 +5,8 @@ import org.scalatest.matchers.should.Matchers
 
 /** `Sessions.withConfs`: every scoped conf goes back to exactly what it
   * was — its prior value, or unset — after the body, thrown or not.
+  * `Sessions.future`: jobs started from a pool thread carry the
+  * caller's thread state, not the state of whoever created the thread.
   */
 class SessionsSpec extends AnyFunSuite with Matchers with SharedSpark {
 
@@ -41,5 +43,22 @@ class SessionsSpec extends AnyFunSuite with Matchers with SharedSpark {
     ex.getMessage shouldBe "boom"
     spark.conf.get(set) shouldBe before
     spark.conf.getAll.contains(unset) shouldBe false
+  }
+
+  test("jobs a key starts from pool threads carry the caller's job tag, not the pool's") {
+    val sc = spark.sparkContext
+    val q22 = SparkEntry.queries("q22_spearman")
+    // warm: pool threads come into being while an older tag is set
+    sc.addJobTag("graft-warm")
+    try q22(spark, sf).collect() finally sc.removeJobTag("graft-warm")
+    sc.addJobTag("graft-run")
+    val jobs = try jobsDuring(q22(spark, sf).collect()) finally sc.removeJobTag("graft-run")
+    // q22's two rank chains each sample and collect from a Future
+    jobs.size should be > 2
+    jobs.foreach { p =>
+      val tags = Option(p.getProperty("spark.job.tags")).toSeq.flatMap(_.split(','))
+      tags should contain("graft-run")
+      tags should not contain "graft-warm"
+    }
   }
 }

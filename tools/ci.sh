@@ -7,13 +7,24 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 # One implementation per idiom: sessions are built only by
-# graft.Sessions.local, and session confs are saved/restored only by
-# graft.Sessions.withConfs. A second copy anywhere in src/ fails the gate.
-dups=$(grep -rnE 'SparkSession\.builder\b|conf\.getOption\(' src --include='*.scala' \
-  | grep -v '^src/main/scala/graft/Sessions\.scala:' || true)
+# graft.Sessions.local, session confs are saved/restored only by
+# graft.Sessions.withConfs, and Spark work runs on another thread only
+# through graft.Sessions.future (which carries the caller's job group,
+# tags and session over). A second copy anywhere in src/ fails the gate.
+dups=$(grep -rnE 'SparkSession\.builder\b|conf\.getOption\(|ExecutionContext\.global|Implicits\.global' \
+  src --include='*.scala' | grep -v '^src/main/scala/graft/Sessions\.scala:' || true)
 if [[ -n "$dups" ]]; then
-  echo "session builder or conf save/restore outside graft.Sessions:" >&2
+  echo "session builder, conf save/restore or global thread pool outside graft.Sessions:" >&2
   echo "$dups" >&2
+  exit 1
+fi
+# Table files are read only through graft.Tables, which resolves each
+# table version's schema once instead of launching a footer job per read.
+direct=$(grep -rnE 'read\.parquet\(s"\$\{?(dir|sfDir)\}?/' src --include='*.scala' \
+  | grep -v '^src/main/scala/graft/Tables\.scala:' || true)
+if [[ -n "$direct" ]]; then
+  echo "table read outside graft.Tables:" >&2
+  echo "$direct" >&2
   exit 1
 fi
 
