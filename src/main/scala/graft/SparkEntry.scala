@@ -37,9 +37,10 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Each fn is wrapped to first pin the one session conf the data
-    * requires (`nanosAsLong`, for the ns-timestamp events parquet) so
-    * every query sees identical session state regardless of the order
-    * the driver runs them in. Key uniqueness across packs is asserted —
+    * requires (`nanosAsLong`, for the older ns-timestamp generation of
+    * the events parquet; nothing else sets it) so every query sees
+    * identical session state regardless of the order the driver runs
+    * them in. Key uniqueness across packs is asserted —
     * a duplicate key would silently shadow a query and could pair the
     * wrong oracle SQL with it.
     */

@@ -23,9 +23,11 @@ import graft.ops.Memo
   *  - Only the schema is shared, never a DataFrame: every call builds a
   *    new relation with new attribute ids, so self-joins (q86 reads
   *    lineitem twice) resolve exactly as with separate reads.
-  *  - `events.ts` is INT64 TIMESTAMP(NANOS) which Spark 4 refuses to read;
-  *    `nanosAsLong` + µs truncation matches DuckDB's own ns→µs truncation
-  *    (verified: min(ts) identical to the microsecond in both engines).
+  *  - `events.ts` of the older testdata generation is INT64
+  *    TIMESTAMP(NANOS), which Spark 4 refuses to read; under the
+  *    `nanosAsLong` conf `SparkEntry.queries` pins, µs truncation matches
+  *    DuckDB's own ns→µs truncation (verified: min(ts) identical to the
+  *    microsecond in both engines). The shipped files are TIMESTAMP(MICROS).
   *  - Timestamps are kept as TimestampNTZ everywhere so Spark parquet
   *    output and DuckDB's naive TIMESTAMP compare bit-identically.
   */
@@ -94,12 +96,12 @@ object Tables {
     * query sees one stable type regardless of which generation is on
     * disk. The sniff reads the per-version schema `rd` resolves, so it
     * launches no job once the version's schema is known.
-    * The conf set is idempotent and only widens readability, so it is
-    * safe under the shared driver-built session (SURVEY.md §4.3.5).
+    * Reading the NANOS generation needs `nanosAsLong`, which
+    * `SparkEntry.queries` pins before every key; this loader leaves the
+    * caller's session confs as they are.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = rd(s, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => // old generation: INT64 TIMESTAMP(NANOS) read as ns-long

@@ -520,9 +520,8 @@ object Curation extends QueryPack {
         sum(expr("cast(yv * yv as decimal(28,12))")).as("sy2"))
         .selectExpr("n", "cast(sy as double) / n AS mu",
           "sqrt(cast(sy2 as double) / n - (cast(sy as double) / n) * (cast(sy as double) / n)) AS sigma")
-      val g = y.groupBy(col("yv").as("v"))
-        .agg(count(lit(1)).as("c1")).withColumn("c2", lit(0L))
-      val cum = Science.cumCounts(s, g.select(col("v"), col("c1"), col("c2")))
+      val g = y.groupBy(col("yv").as("v")).agg(count(lit(1)).as("c1"))
+      val cum = Science.cumCounts(s, g)
         .select(col("v"), col("below"), col("cum1"), col("n1"))
       val phi = "CASE WHEN z >= 0 THEN 1.0 - tail ELSE tailn END"
       cum.crossJoin(broadcast(fit))

@@ -42,85 +42,56 @@ object Science extends QueryPack {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
 
-  /** Range-partitioned two-counter prefix sums over per-distinct-value
-    * counts `(v, c1, c2)` — Stats.avgRanks' machinery (Stats.scala)
-    * generalized to two counters, replacing the unpartitioned global
-    * cumsum window that would sort a data-sized frame on ONE task.
-    * Range-partition by value, per-partition running sums, then shift
-    * each partition by the broadcast per-partition totals. The only
-    * driver-side collect is #partitions counter pairs — a constant,
-    * not data-sized. Returns one row per distinct v with the INCLUSIVE
-    * cumulative counts (cum1, cum2), the EXCLUSIVE count of rows
-    * strictly below v (`below`), and the grand totals (n1, n2) as
+  /** Range-partitioned prefix sums over per-distinct-value counts
+    * `(v, c1..cN)`, one or more long channels, the arity read off `g`'s
+    * columns. This replaces the unpartitioned global cumsum window that
+    * would sort a data-sized frame on ONE task: range-partition by
+    * value, per-partition running sums, then shift each partition by
+    * the broadcast per-partition totals. The only driver-side collect is
+    * #partitions total vectors — a constant, not data-sized. Returns one
+    * row per distinct v: `v, c1..cN`, the EXCLUSIVE count of rows
+    * strictly below v over all channels (`below`), the INCLUSIVE
+    * cumulative counts `cum1..cumN`, and the grand totals `n1..nN` as
     * literals (known on the driver from the same totals pass, so no
-    * second aggregate over the frame is needed).
+    * second aggregate over the frame is needed). Exact long arithmetic.
     */
   private[ops] def cumCounts(s: org.apache.spark.sql.SparkSession,
                              g: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val rdd = g.select(col("v").cast("double"), col("c1").cast("long"), col("c2").cast("long"))
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val cs = Iterator.from(1).map(i => s"c$i").takeWhile(g.columns.contains).toVector
+    val n = cs.size
+    val rdd = g.select(col("v").cast("double") +: cs.map(col(_).cast("long")): _*)
       .repartitionByRange(col("v"))
       .sortWithinPartitions("v")
-      .as[(Double, Long, Long)]
       .rdd
     val totals = rdd.mapPartitionsWithIndex { (i, it) =>
-      var t1 = 0L; var t2 = 0L
-      it.foreach { t => t1 += t._2; t2 += t._3 }
-      Iterator.single((i, t1, t2))
-    }.collect().sortBy(_._1)
-    val off1 = totals.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = totals.map(_._3).scanLeft(0L)(_ + _)
-    val bc = s.sparkContext.broadcast((off1, off2))
-    rdd.mapPartitionsWithIndex { (i, it) =>
-      var cum1 = bc.value._1(i); var cum2 = bc.value._2(i)
-      it.map { case (v, a, b) =>
-        val below = cum1 + cum2
-        cum1 += a; cum2 += b
-        (v, a, b, below, cum1, cum2)
+      val t = new Array[Long](n)
+      it.foreach(r => for (j <- 0 until n) t(j) += r.getLong(j + 1))
+      Iterator.single(i -> t)
+    }.collect().sortBy(_._1).map(_._2)
+    // offsets(i)(j): channel j's rows in the partitions before i
+    val offsets = totals.scanLeft(new Array[Long](n))((a, b) => Array.tabulate(n)(j => a(j) + b(j)))
+    val bc = s.sparkContext.broadcast(offsets)
+    val rows = rdd.mapPartitionsWithIndex { (i, it) =>
+      val cum = bc.value(i).clone()
+      it.map { r => // v, c1..cN, below, cum1..cumN
+        val out = new Array[Any](2 * n + 2)
+        out(0) = r.get(0)
+        out(n + 1) = cum.sum
+        for (j <- 0 until n) {
+          val c = r.getLong(j + 1)
+          cum(j) += c
+          out(j + 1) = c; out(n + 2 + j) = cum(j)
+        }
+        Row(out: _*)
       }
-    }.toDF("v", "c1", "c2", "below", "cum1", "cum2")
-      .withColumn("n1", lit(off1.last))
-      .withColumn("n2", lit(off2.last))
-  }
-
-  /** [[cumCounts]] widened to FOUR channels: one range partitioning,
-    * one per-partition-totals collect and one prefix-sum pass produce
-    * all four cumulative columns. q330 previously ran cumCounts twice
-    * (counts, then cents-weighted counts) and joined the two cell
-    * frames back on v — two sampling jobs, two sorts, two collects and
-    * a join for what is one pass over the same cells. Exact long
-    * arithmetic, identical per-channel results by construction. */
-  private[ops] def cumCounts4(s: org.apache.spark.sql.SparkSession,
-                              g: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val rdd = g.select(col("v").cast("double"), col("c1").cast("long"),
-        col("c2").cast("long"), col("c3").cast("long"), col("c4").cast("long"))
-      .repartitionByRange(col("v"))
-      .sortWithinPartitions("v")
-      .as[(Double, Long, Long, Long, Long)]
-      .rdd
-    val totals = rdd.mapPartitionsWithIndex { (i, it) =>
-      var t1 = 0L; var t2 = 0L; var t3 = 0L; var t4 = 0L
-      it.foreach { t => t1 += t._2; t2 += t._3; t3 += t._4; t4 += t._5 }
-      Iterator.single((i, t1, t2, t3, t4))
-    }.collect().sortBy(_._1)
-    val off1 = totals.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = totals.map(_._3).scanLeft(0L)(_ + _)
-    val off3 = totals.map(_._4).scanLeft(0L)(_ + _)
-    val off4 = totals.map(_._5).scanLeft(0L)(_ + _)
-    val bc = s.sparkContext.broadcast((off1, off2, off3, off4))
-    rdd.mapPartitionsWithIndex { (i, it) =>
-      var cum1 = bc.value._1(i); var cum2 = bc.value._2(i)
-      var cum3 = bc.value._3(i); var cum4 = bc.value._4(i)
-      it.map { case (v, a, b, c, d) =>
-        cum1 += a; cum2 += b; cum3 += c; cum4 += d
-        (v, a, b, cum1, cum2, cum3, cum4)
-      }
-    }.toDF("v", "c1", "c2", "cum1", "cum2", "cum3", "cum4")
-      .withColumn("n1", lit(off1.last))
-      .withColumn("n2", lit(off2.last))
-      .withColumn("n3", lit(off3.last))
-      .withColumn("n4", lit(off4.last))
+    }
+    val cums = cs.map(c => s"cum${c.tail}")
+    val schema = StructType(StructField("v", DoubleType, nullable = false) +:
+      (cs ++ ("below" +: cums)).map(StructField(_, LongType, nullable = false)))
+    s.createDataFrame(rows, schema)
+      .select(col("*") +: cs.indices.map(j => lit(offsets.last(j)).as(s"n${j + 1}")): _*)
   }
 
   def queries: Map[String, Q] = Map(
@@ -472,9 +443,7 @@ object Science extends QueryPack {
           sum(when(col("event_type") === "click", 1).otherwise(0)).as("g2"),
           sum(when(col("event_type") === "purchase", 1).otherwise(0)).as("g3"))
         .localCheckpoint() // consumed twice: cumCounts pass + midrank join
-      val below = cumCounts(s,
-          g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1"),
-            lit(0L).as("c2")))
+      val below = cumCounts(s, g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1")))
         .select(col("v"), col("below"))
       g.join(below, "v")
         .withColumn("ct", col("g1") + col("g2") + col("g3"))
@@ -559,9 +528,7 @@ object Science extends QueryPack {
           sum(when(col("event_type") === "click", 1).otherwise(0)).as("g2"),
           sum(when(col("event_type") === "purchase", 1).otherwise(0)).as("g3"))
         .localCheckpoint() // consumed twice: cumCounts pass + midrank join
-      val below = cumCounts(s,
-          g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1"),
-            lit(0L).as("c2")))
+      val below = cumCounts(s, g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1")))
         .select(col("v"), col("below"))
       g.join(below, "v")
         .withColumn("ct", col("g1") + col("g2") + col("g3"))
@@ -869,9 +836,8 @@ object Science extends QueryPack {
         .select(col("ts").cast("date").as("day"), col("value").as("v"))
         .groupBy(col("day"), col("v")).agg(count(lit(1)).as("c"))
         .localCheckpoint() // global contraction + per-day windows
-      val gl = cells.groupBy(col("v"))
-        .agg(sum(col("c")).as("c1")).withColumn("c2", lit(0L))
-      val gcum = cumCounts(s, gl.select(col("v"), col("c1"), col("c2")))
+      val gl = cells.groupBy(col("v")).agg(sum(col("c")).as("c1"))
+      val gcum = cumCounts(s, gl)
         .select(col("v"), col("cum1").as("cumg"), col("c1").as("cg"), col("n1").as("ng"))
       val wdo = Window.partitionBy(col("day")).orderBy(col("v"))
       val wda = Window.partitionBy(col("day"))
@@ -902,9 +868,8 @@ object Science extends QueryPack {
     // median rides along as the audit column.
     "q270_median_ci" -> ((s, dir) => {
       val ev = Tables.events(s, dir).filter(col("value").isNotNull)
-      val g = ev.groupBy(col("value").as("v"))
-        .agg(count(lit(1)).as("c1")).withColumn("c2", lit(0L))
-      val cum = cumCounts(s, g.select(col("v"), col("c1"), col("c2")))
+      val g = ev.groupBy(col("value").as("v")).agg(count(lit(1)).as("c1"))
+      val cum = cumCounts(s, g)
         .select(col("v"), col("below"), col("cum1"), col("n1"))
         .localCheckpoint() // three rank probes consume it
       val ranks = cum.select(col("n1")).limit(1)
@@ -1403,8 +1368,7 @@ object Science extends QueryPack {
         .select(col("value").cast("decimal(18,2)").as("x"))
       val st = x.agg(count(lit(1)).as("nn"), sum(col("x")).as("sx"),
         sum(expr("cast(x * x as decimal(38,4))")).as("sxx"))
-      val g = x.groupBy(expr("cast(x as double)").as("v"))
-        .agg(count(lit(1)).as("c1")).withColumn("c2", lit(0L))
+      val g = x.groupBy(expr("cast(x as double)").as("v")).agg(count(lit(1)).as("c1"))
       cumCounts(s, g)
         .crossJoin(broadcast(st))
         .withColumn("mu", expr("cast(sx as double) / nn"))
@@ -1474,9 +1438,10 @@ object Science extends QueryPack {
     // Σ_y c₂(y)|v−y| = v·cum₂ − cw₂ + (W₂−cw₂) − v·(n₂−cum₂) with cw
     // the value-weighted prefix sum. Values quantize to integer CENTS
     // (the data is 2-decimal) so all pair sums are exact integers —
-    // order-free across engines; two cumCounts passes (plain + cents-
-    // weighted counters) over the distinct-value contraction, joined
-    // back on v. V-statistic denominators (n², includes i=j zeros).
+    // order-free across engines; ONE four-channel cumCounts pass (plain
+    // + cents-weighted counters) over the distinct-value contraction —
+    // one sampling job, one sort, one totals collect. V-statistic
+    // denominators (n², includes i=j zeros).
     "q330_energy_distance" -> ((s, dir) => {
       val g = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "purchase") && col("value").isNotNull)
@@ -1484,11 +1449,7 @@ object Science extends QueryPack {
         .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c1"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("c2"))
         .withColumn("cents", expr("cast(cast(v as decimal(18,2)) * 100 as bigint)"))
-      // ONE 4-channel prefix-sum pass replaces the two cumCounts calls
-      // (two sampling jobs, two sorts, two per-partition collects) AND
-      // the join realigning the two cell frames on v — same exact long
-      // arithmetic per channel, so every downstream term is unchanged.
-      val counts = cumCounts4(s, g.select(col("v"), col("c1"), col("c2"),
+      val counts = cumCounts(s, g.select(col("v"), col("c1"), col("c2"),
           (col("c1") * col("cents")).as("c3"), (col("c2") * col("cents")).as("c4")))
         .withColumnsRenamed(Map("cum3" -> "cw1", "cum4" -> "cw2",
           "n3" -> "w1tot", "n4" -> "w2tot"))
@@ -1648,7 +1609,7 @@ object Science extends QueryPack {
     "q299_lmoments" -> ((s, dir) => {
       val g = Tables.orders(s, dir)
         .groupBy(col("o_totalprice").cast("decimal(18,2)").cast("double").as("v"))
-        .agg(count(lit(1)).as("c1"), lit(0L).as("c2"))
+        .agg(count(lit(1)).as("c1"))
       val sums = cumCounts(s, g)
         .withColumn("hi", col("cum1").cast("double"))
         .withColumn("lod", (col("cum1") - col("c1")).cast("double"))

@@ -61,12 +61,14 @@ object Sources extends QueryPack {
     // from a 2-lang slice. The lang filter must become PartitionFilters
     // on the read (asserted in SourcesSpec) — only those directories are
     // scanned. Oracle runs the same slice on the parquet originals, so
-    // any loss in the partitioned round-trip breaks the hash.
+    // any loss in the partitioned round-trip breaks the hash. The read
+    // takes the schema just written (partition column `lang` included)
+    // instead of inferring it from a footer in another job.
     "q88_sink_partitioned" -> ((s, dir) => {
       val stage = Stage.dir("sink88")
-      Tables.documents(s, dir).write.mode("overwrite")
-        .partitionBy("lang").parquet(s"$stage/docs_by_lang")
-      s.read.parquet(s"$stage/docs_by_lang")
+      val docs = Tables.documents(s, dir)
+      docs.write.mode("overwrite").partitionBy("lang").parquet(s"$stage/docs_by_lang")
+      s.read.schema(docs.schema).parquet(s"$stage/docs_by_lang")
         .filter(col("lang").isin("en", "de"))
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
@@ -128,7 +130,8 @@ object Sources extends QueryPack {
     // broadcasts under AQE); update arithmetic runs in DECIMAL(18,2) so
     // both engines produce bit-identical balances. Oracle recomputes
     // the merge INDEPENDENTLY as (base ∖ changed-keys) ∪ upserts —
-    // set algebra, not a join — so a merge bug can't cancel out.
+    // set algebra, not a join — so a merge bug can't cancel out. Each
+    // read-back takes the schema just written, so none infers it again.
     "q278_merge_upsert" -> ((s, dir) => {
       val stage = Stage.dir("merge278")
       val cust = Tables.customer(s, dir)
@@ -142,17 +145,17 @@ object Sources extends QueryPack {
         .withColumn("c_custkey", col("c_custkey") + lit(1000000L))
         .withColumn("c_name", concat(lit("new|"), col("c_name")))
         .withColumn("op", lit("I"))
-      upd.unionByName(del).unionByName(ins)
-        .write.mode("overwrite").parquet(s"$stage/changes")
-      val base = s.read.parquet(s"$stage/base").alias("b")
-      val chg = s.read.parquet(s"$stage/changes").alias("c")
+      val changes = upd.unionByName(del).unionByName(ins)
+      changes.write.mode("overwrite").parquet(s"$stage/changes")
+      val base = s.read.schema(cust.schema).parquet(s"$stage/base").alias("b")
+      val chg = s.read.schema(changes.schema).parquet(s"$stage/changes").alias("c")
       val dataCols = Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      base.join(chg, col("b.c_custkey") === col("c.c_custkey"), "full_outer")
+      val merged = base.join(chg, col("b.c_custkey") === col("c.c_custkey"), "full_outer")
         .filter(col("c.op").isNull || col("c.op") =!= "D")
         .select(dataCols.map(x =>
           when(col("c.op").isNotNull, col(s"c.$x")).otherwise(col(s"b.$x")).as(x)): _*)
-        .write.mode("overwrite").parquet(s"$stage/merged")
-      s.read.parquet(s"$stage/merged")
+      merged.write.mode("overwrite").parquet(s"$stage/merged")
+      s.read.schema(merged.schema).parquet(s"$stage/merged")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_cust"),
           round(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double"), 6).as("sum_bal"),

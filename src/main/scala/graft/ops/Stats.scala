@@ -25,35 +25,6 @@ object Stats extends QueryPack {
 
   private def c6(c: Column): Column = round(c, 6)
 
-  /** Average (tie-adjusted) rank per distinct value of `v`, the
-    * scale-valid way: group to distinct-value counts, range-partition by
-    * value, then turn per-partition prefix sums into global ranks using
-    * per-partition totals collected to the driver (#partitions rows — a
-    * constant, not data-sized). avg-rank(v) = (#rows < v) + (ties+1)/2,
-    * identical to SQL `rank() + (count(*) over (partition by v) - 1)/2`.
-    */
-  private def avgRanks(s: SparkSession, df: org.apache.spark.sql.DataFrame,
-                       v: String, out: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val counts = df.groupBy(col(v)).agg(count(lit(1)).as("cnt"))
-      .select(col(v).cast("double").as("val"), col("cnt"))
-      .repartitionByRange(col("val"))
-      .sortWithinPartitions("val")
-      .as[(Double, Long)]
-    val rdd = counts.rdd
-    val totals = rdd
-      .mapPartitionsWithIndex((i, it) => Iterator.single(i -> it.map(_._2).sum))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(0L)(_ + _)   // rows in partitions before i
-    val bc = s.sparkContext.broadcast(offsets)
-    rdd.mapPartitionsWithIndex { (i, it) =>
-      var less = bc.value(i)
-      it.map { case (value, cnt) =>
-        val r = less + (cnt + 1) / 2.0; less += cnt; (value, r)
-      }
-    }.toDF(v, out)
-  }
-
   def queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------
     // KENDALL'S TAU-B — the rank-concordance coefficient (the third
@@ -174,23 +145,31 @@ object Stats extends QueryPack {
 
     // ------------------------------------------------------------------
     // Spearman = Pearson over average ranks (min-rank + (ties-1)/2),
-    // computed scale-valid: ranks are assigned over the DISTINCT-value
-    // count table (one shuffle), range-partitioned by value, with global
-    // rank offsets derived from a tiny per-partition-total collect (one
-    // row per partition — bounded by the partition count, never by data
-    // size). No unpartitioned window anywhere, so the plan holds at
-    // 100 TB: two groupBy shuffles + two shuffle joins back to the fact.
+    // computed scale-valid: each column contracts to its DISTINCT-value
+    // count table (one shuffle) and Science.cumCounts' one-channel
+    // range-partitioned prefix sum gives every value the count of rows
+    // strictly below it, with global offsets derived from a tiny
+    // per-partition-total collect (one row per partition — bounded by
+    // the partition count, never by data size). avg-rank(v) = below +
+    // (ties+1)/2, identical to SQL `rank() + (count(*) over (partition
+    // by v) - 1)/2`. No unpartitioned window anywhere, so the plan holds
+    // at 100 TB: two groupBy shuffles + two shuffle joins back to the fact.
     "q22_spearman" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir).select(col("l_quantity"), col("l_extendedprice"))
+      // Column arithmetic, not SQL text: there `2.0` is a DECIMAL literal,
+      // and the rank is a double
+      def ranks(v: String, out: String): DataFrame =
+        Science.cumCounts(s, li.groupBy(col(v).as("v")).agg(count(lit(1)).as("c1")))
+          .select(col("v").as(v), (col("below").cast("double") + (col("c1") + 1) / lit(2.0)).as(out))
       // The two rank tables are independent chains each ending in an
-      // eager driver collect of per-partition totals (avgRanks); built
+      // eager driver collect of per-partition totals (cumCounts); built
       // serially the second chain's jobs wait on the first's tail for
       // no reason (guide §2.6: overlap independent jobs). Futures start
       // both; the final join needs both anyway.
       import scala.concurrent.Await
       import scala.concurrent.duration.Duration
-      val rqF = Sessions.future(s)(avgRanks(s, li, "l_quantity", "rq"))
-      val rpF = Sessions.future(s)(avgRanks(s, li, "l_extendedprice", "rp"))
+      val rqF = Sessions.future(s)(ranks("l_quantity", "rq"))
+      val rpF = Sessions.future(s)(ranks("l_extendedprice", "rp"))
       val rq = Await.result(rqF, Duration.Inf)
       val rp = Await.result(rpF, Duration.Inf)
       li.join(rq, "l_quantity").join(rp, "l_extendedprice")
@@ -570,7 +549,6 @@ object Stats extends QueryPack {
       val g = Tables.orders(s, dir)
         .groupBy(col("o_totalprice").as("v"))
         .agg(count(lit(1)).as("c1"))
-        .withColumn("c2", lit(0L))
       Science.cumCounts(s, g)
         .withColumn("s2_t", expr(
           "cast(cast(v as decimal(18,2)) * (2 * c1 * below + c1 * (c1 + 1)) as decimal(38,2))"))
@@ -830,8 +808,7 @@ object Stats extends QueryPack {
       val g = Tables.lineitem(s, dir)
         .groupBy(col("l_extendedprice").as("v"))
         .agg(sum(col("l_quantity").cast("long")).as("c1"))
-        .withColumn("c2", lit(0L))
-      val cum = Science.cumCounts(s, g.select(col("v"), col("c1"), col("c2")))
+      val cum = Science.cumCounts(s, g)
         .select(col("v"), col("below"), col("cum1"), col("n1"))
       val probes = s.range(1).select(posexplode(array(
         lit(0.25d), lit(0.5d), lit(0.75d), lit(0.9d))).as(Seq("i", "q")))

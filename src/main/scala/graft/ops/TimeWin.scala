@@ -521,9 +521,7 @@ object TimeWin extends QueryPack {
       val drop = cells.agg(
         coalesce(sum(when(col("t") === 0, col("d"))), lit(0L)).as("n_dropped"))
       val pts = Science.cumCounts(s,
-        cells.filter(col("t") >= 1)
-          .select(col("t").cast("double").as("v"), col("d").as("c1"),
-            lit(0L).as("c2")))
+        cells.filter(col("t") >= 1).select(col("t").cast("double").as("v"), col("d").as("c1")))
       pts
         .withColumn("x", expr("ln(v)"))
         .withColumn("y", expr(

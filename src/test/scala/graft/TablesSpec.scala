@@ -7,7 +7,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType, TimestampNTZType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -84,6 +84,16 @@ class TablesSpec extends AnyFunSuite with Matchers with SharedSpark {
       }
       Tables.region(spark, dir).schema("bin").dataType shouldBe BinaryType
     }
+  }
+
+  test("reading events leaves the caller's nanosAsLong conf as it was") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try {
+      Tables.events(spark, sf).schema("ts").dataType shouldBe TimestampNTZType
+      spark.conf.getAll.get(key) shouldBe None
+    } finally prior.foreach(spark.conf.set(key, _))
   }
 
   test("a missing table fails with Spark's own path-not-found error") {

@@ -1,103 +1,106 @@
 package graft.ops
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Property tests for [[Science.cumCounts]] — the range-partitioned
-  * two-counter prefix-sum machinery under q124 (KS), q130 (MWU), and
-  * q135 (Gini). A sequential scan over the sorted counts is the
-  * executable spec; the property must hold for ANY distinct-value
-  * frame, including single-row, zero-in-one-counter, and frames
-  * smaller than the partition count (empty range partitions). Frames
-  * are drawn from a FIXED-seed generator so failures reproduce.
+/** Property tests for [[Science.cumCounts]] — the one range-partitioned
+  * prefix sum under every rank and ECDF statistic: q22 (Spearman ranks,
+  * one channel), q124 (KS), q130 (MWU) and q135 (Gini), up to q330's
+  * four channels. A sequential scan over the sorted counts is the
+  * executable spec; the property must hold for ANY distinct-value frame
+  * and any channel count, including single-row, all-zero-channel, and
+  * frames smaller than the partition count (empty range partitions).
+  * Frames are drawn from a FIXED-seed generator so failures reproduce.
   */
 class CumCountsPropSpec extends AnyFunSuite with Matchers with graft.SharedSpark {
 
-  private def randomFrames(seed: Long, n: Int): Seq[List[(Double, Long, Long)]] = {
+  private type Frame = List[(Double, Vector[Long])]
+
+  /** Channels 1–2 draw small counts, channels 3–4 cents-weighted sizes
+    * like q330's; the draw order keeps the two-channel frames of a seed
+    * unchanged. */
+  private def randomFrames(seed: Long, n: Int, arity: Int): Seq[Frame] = {
     val rnd = new scala.util.Random(seed)
     (1 to n).map { _ =>
       val size = 1 + rnd.nextInt(40)
       val vs = List.fill(size)(rnd.nextInt(2001) - 1000).distinct
-      vs.map(v => (v.toDouble, rnd.nextInt(6).toLong, rnd.nextInt(6).toLong))
+      vs.map(v => (v.toDouble, Vector.tabulate(arity)(j => rnd.nextInt(if (j < 2) 6 else 900).toLong)))
+    }
+  }
+
+  private def toDF(rows: Frame, arity: Int) = {
+    val schema = StructType(StructField("v", DoubleType) +:
+      (1 to arity).map(j => StructField(s"c$j", LongType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (v, cs) => Row.fromSeq((v: Any) +: cs) }), schema)
+  }
+
+  /** Checks [[Science.cumCounts]] at `arity` channels against a sequential
+    * scan, on hand-picked edge frames and 20 seeded random frames. */
+  private def checkPrefixSums(arity: Int): Unit = {
+    // hand-picked edge frames first: single row, one channel all-zero,
+    // a zero row between non-zero ones
+    def row(v: Double, cs: Long*) = (v, Vector.tabulate(arity)(j => cs(j % cs.size)))
+    val edges: Seq[Frame] = Seq(
+      List(row(0.0, 1L, 0L)),
+      List(row(1.0, 0L, 3L), row(2.0, 0L, 1L)),
+      List(row(-5.0, 2L), row(0.0, 0L), row(5.0, 1L, 4L)))
+    (edges ++ randomFrames(40L + arity, 20, arity)).foreach { rows =>
+      val g = toDF(rows, arity).repartition(7) // deliberately misaligned input partitioning
+      val names = (1 to arity).map(j => s"c$j") ++ Seq("below") ++
+        (1 to arity).map(j => s"cum$j") ++ (1 to arity).map(j => s"n$j")
+      val out = Science.cumCounts(spark, g)
+      val got = out.collect()
+        .map(r => (r.getAs[Double]("v"), names.map(c => r.getAs[Long](c))))
+        .sortBy(_._1)
+      val sorted = rows.sortBy(_._1)
+      val n = (0 until arity).map(j => sorted.map(_._2(j)).sum)
+      val cum = Array.fill(arity)(0L)
+      val want = sorted.map { case (v, cs) =>
+        val below = cum.sum
+        (0 until arity).foreach(j => cum(j) += cs(j))
+        (v, cs ++ Seq(below) ++ cum.toSeq ++ n)
+      }
+      withClue(s"arity=$arity frame=$rows ") {
+        out.columns.toSeq shouldBe "v" +: names
+        got.toSeq shouldBe want
+      }
     }
   }
 
   test("cumCounts equals the sequential prefix-sum spec on 20 random frames") {
-    import spark.implicits._
-    // hand-picked edge frames first: single row, one counter all-zero
-    val edges = Seq(
-      List((0.0, 1L, 0L)),
-      List((1.0, 0L, 3L), (2.0, 0L, 1L)),
-      List((-5.0, 2L, 2L), (0.0, 0L, 0L), (5.0, 1L, 4L)))
-    (edges ++ randomFrames(42L, 20)).foreach { rows =>
-      val g = rows.toDF("v", "c1", "c2")
-        .repartition(7) // deliberately misaligned input partitioning
-      val got = Science.cumCounts(spark, g).collect()
-        .map(r => (r.getAs[Double]("v"), r.getAs[Long]("c1"), r.getAs[Long]("c2"),
-          r.getAs[Long]("below"), r.getAs[Long]("cum1"), r.getAs[Long]("cum2"),
-          r.getAs[Long]("n1"), r.getAs[Long]("n2")))
-        .sortBy(_._1)
-      val sorted = rows.sortBy(_._1)
-      val n1 = sorted.map(_._2).sum; val n2 = sorted.map(_._3).sum
-      var cum1 = 0L; var cum2 = 0L
-      val want = sorted.map { case (v, c1, c2) =>
-        val below = cum1 + cum2
-        cum1 += c1; cum2 += c2
-        (v, c1, c2, below, cum1, cum2, n1, n2)
-      }
-      withClue(s"frame=$rows ") { got.toSeq shouldBe want }
-    }
+    Seq(1, 2).foreach(checkPrefixSums)
   }
 
+  // the four-channel shape q330 sums, plus three channels between
   test("cumCounts4 equals the sequential four-channel prefix-sum spec") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11L)
-    val frames = Seq(
-      List((0.0, 1L, 0L, 5L, 0L)),
-      List((1.0, 0L, 3L, 0L, 7L), (2.0, 0L, 1L, 2L, 0L))) ++
-      (1 to 15).map { _ =>
-        val vs = List.fill(1 + rnd.nextInt(40))(rnd.nextInt(2001) - 1000).distinct
-        vs.map(v => (v.toDouble, rnd.nextInt(6).toLong, rnd.nextInt(6).toLong,
-          rnd.nextInt(900).toLong, rnd.nextInt(900).toLong))
-      }
-    frames.foreach { rows =>
-      val g = rows.toDF("v", "c1", "c2", "c3", "c4")
-        .repartition(7) // deliberately misaligned input partitioning
-      val got = Science.cumCounts4(spark, g).collect()
-        .map(r => (r.getAs[Double]("v"), r.getAs[Long]("c1"), r.getAs[Long]("c2"),
-          r.getAs[Long]("cum1"), r.getAs[Long]("cum2"), r.getAs[Long]("cum3"),
-          r.getAs[Long]("cum4"), r.getAs[Long]("n1"), r.getAs[Long]("n2"),
-          r.getAs[Long]("n3"), r.getAs[Long]("n4")))
-        .sortBy(_._1)
-      val sorted = rows.sortBy(_._1)
-      val n1 = sorted.map(_._2).sum; val n2 = sorted.map(_._3).sum
-      val n3 = sorted.map(_._4).sum; val n4 = sorted.map(_._5).sum
-      var c1 = 0L; var c2 = 0L; var c3 = 0L; var c4 = 0L
-      val want = sorted.map { case (v, a, b, c, d) =>
-        c1 += a; c2 += b; c3 += c; c4 += d
-        (v, a, b, c1, c2, c3, c4, n1, n2, n3, n4)
-      }
-      withClue(s"frame=$rows ") { got.toSeq shouldBe want }
-    }
+    Seq(3, 4).foreach(checkPrefixSums)
   }
 
   test("midranks derived from cumCounts equal brute-force pooled ranks") {
-    import spark.implicits._
-    randomFrames(7L, 10).map(_.filter(r => r._2 + r._3 > 0)).filter(_.nonEmpty)
-      .foreach { pos =>
-        val g = pos.toDF("v", "c1", "c2")
-        val got = Science.cumCounts(spark, g)
-          .withColumn("ar", expr("cast(below + (c1 + c2 + 1) / 2.0 as double)"))
-          .collect().map(r => r.getAs[Double]("v") -> r.getAs[Double]("ar")).toMap
-        // brute force: expand every (v, count) to rows, rank 1..n, avg per v
-        val expanded = pos.flatMap(r => List.fill((r._2 + r._3).toInt)(r._1)).sorted
-        val want = expanded.zipWithIndex.map { case (v, i) => (v, (i + 1).toDouble) }
-          .groupBy(_._1).view.mapValues(l => l.map(_._2).sum / l.size).toMap
-        withClue(s"frame=$pos ") {
-          got.keySet shouldBe want.keySet
-          got.foreach { case (v, ar) => ar shouldBe want(v) +- 1e-9 }
+    // one channel is q22's Spearman rank, in its Column arithmetic; two
+    // channels pool both groups as q130/q161 do
+    val rank = Map(
+      1 -> (col("below").cast("double") + (col("c1") + 1) / lit(2.0)),
+      2 -> expr("cast(below + (c1 + c2 + 1) / 2.0 as double)"))
+    rank.foreach { case (arity, ar) =>
+      randomFrames(7L, 10, arity).map(_.filter(_._2.sum > 0)).filter(_.nonEmpty)
+        .foreach { pos =>
+          val got = Science.cumCounts(spark, toDF(pos, arity))
+            .withColumn("ar", ar)
+            .collect().map(r => r.getAs[Double]("v") -> r.getAs[Double]("ar")).toMap
+          // brute force: expand every (v, count) to rows, rank 1..n, avg per v
+          val expanded = pos.flatMap(r => List.fill(r._2.sum.toInt)(r._1)).sorted
+          val want = expanded.zipWithIndex.map { case (v, i) => (v, (i + 1).toDouble) }
+            .groupBy(_._1).view.mapValues(l => l.map(_._2).sum / l.size).toMap
+          withClue(s"arity=$arity frame=$pos ") {
+            got.keySet shouldBe want.keySet
+            got.foreach { case (v, ar) => ar shouldBe want(v) +- 1e-9 }
+          }
         }
-      }
+    }
   }
 }

@@ -27,6 +27,16 @@ if [[ -n "$direct" ]]; then
   echo "$direct" >&2
   exit 1
 fi
+# The range-partitioned prefix sum (per-partition totals, scanLeft
+# offsets, running sums) lives once, in graft.ops.Science.cumCounts, for
+# any number of channels.
+prefix=$(grep -rn 'mapPartitionsWithIndex' src/main --include='*.scala' \
+  | grep -v '^src/main/scala/graft/ops/Science\.scala:' || true)
+if [[ -n "$prefix" ]]; then
+  echo "prefix-sum machinery outside graft.ops.Science.cumCounts:" >&2
+  echo "$prefix" >&2
+  exit 1
+fi
 
 # Pin parallelism: q13/q63 sketch goldens depend on partition count, so an
 # inherited SPARK_GRAFT_CPUS would make golden check drift across hosts.
