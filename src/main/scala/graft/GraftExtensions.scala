@@ -32,5 +32,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // fully-qualified GraftCatalog VIEW references substitute their
     // stored SQL (Spark's analyzer doesn't consult V2 ViewCatalogs)
     ext.injectResolutionRule(session => graft.plans.ResolveGraftViews(session))
+    // a global sort over an input AQE has measured as one task sorts in
+    // that task: no range-sample job, no range-shuffle stage
+    ext.injectQueryStagePrepRule(session => graft.plans.SortSmallInPlace(session))
   }
 }

@@ -27,6 +27,10 @@ object Sessions {
     .master(s"local[$cores]")
     .config("spark.sql.shuffle.partitions", cores.toString)
     .config("spark.sql.session.timeZone", "UTC")
+    // the older generation of the events parquet stores TIMESTAMP(NANOS)
+    // columns, which Spark reads only as longs; the shipped files are
+    // TIMESTAMP(MICROS), so this changes no current read
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     // local checkpoint dirs: nio manager (no per-file chmod fork) — see
     // graft.streaming.NioCheckpointFileManager; non-file URIs fall back

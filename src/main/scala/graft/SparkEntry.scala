@@ -36,13 +36,11 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * Each fn is wrapped to first pin the one session conf the data
-    * requires (`nanosAsLong`, for the older ns-timestamp generation of
-    * the events parquet; nothing else sets it) so every query sees
-    * identical session state regardless of the order the driver runs
-    * them in. Key uniqueness across packs is asserted —
-    * a duplicate key would silently shadow a query and could pair the
-    * wrong oracle SQL with it.
+    * Each fn is wrapped to register the native functions first and
+    * changes no session conf, so every query sees the session state the
+    * caller built, regardless of the order the driver runs them in. Key
+    * uniqueness across packs is asserted — a duplicate key would
+    * silently shadow a query and could pair the wrong oracle SQL with it.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
     val all = packs.flatMap(_.queries)
@@ -50,7 +48,6 @@ object SparkEntry {
       s"duplicate query key across packs: ${all.groupBy(_._1).filter(_._2.size > 1).keys.mkString(",")}")
     all.map { case (k, fn) =>
       k -> ((s: SparkSession, dir: String) => {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // native functions (md5_mod & co.) available no matter who
         // built the session; exists-guarded no-op under GraftExtensions
         org.apache.spark.sql.GraftFunctions.register(s)

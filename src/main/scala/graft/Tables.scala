@@ -25,7 +25,7 @@ import graft.ops.Memo
   *    lineitem twice) resolve exactly as with separate reads.
   *  - `events.ts` of the older testdata generation is INT64
   *    TIMESTAMP(NANOS), which Spark 4 refuses to read; under the
-  *    `nanosAsLong` conf `SparkEntry.queries` pins, µs truncation matches
+  *    `nanosAsLong` conf `Sessions.local` builds in, µs truncation matches
   *    DuckDB's own ns→µs truncation (verified: min(ts) identical to the
   *    microsecond in both engines). The shipped files are TIMESTAMP(MICROS).
   *  - Timestamps are kept as TimestampNTZ everywhere so Spark parquet
@@ -97,8 +97,8 @@ object Tables {
     * disk. The sniff reads the per-version schema `rd` resolves, so it
     * launches no job once the version's schema is known.
     * Reading the NANOS generation needs `nanosAsLong`, which
-    * `SparkEntry.queries` pins before every key; this loader leaves the
-    * caller's session confs as they are.
+    * `Sessions.local` sets when it builds the session; this loader
+    * leaves the caller's session confs as they are.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

@@ -30,6 +30,14 @@ class SessionsSpec extends AnyFunSuite with Matchers with SharedSpark {
     spark.conf.getAll.contains(k) shouldBe false
   }
 
+  test("running an events key leaves an unset nanosAsLong unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.unset(key)
+    SparkEntry.queries("q144_event_paths")(s, sf).collect() should not be empty
+    s.conf.getAll.contains(key) shouldBe false
+  }
+
   test("prior values come back when the body throws") {
     val (set, unset) = ("spark.sql.autoBroadcastJoinThreshold", "graft.test.scoped")
     val before = spark.conf.get(set)

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Full local gate, in the order failures are cheapest to catch:
-# duplicate-idiom grep → compile → tests → sf0.001 verify+oracle+golden →
-# sf0.01 verify+oracle.
+# duplicate-idiom grep → benchmark arithmetic tests → compile → tests →
+# sf0.001 verify+oracle+golden → sf0.01 verify+oracle.
 # Usage: bash tools/ci.sh [--fast]   (--fast skips the sf0.01 pass)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -37,6 +37,10 @@ if [[ -n "$prefix" ]]; then
   echo "$prefix" >&2
   exit 1
 fi
+
+# The benchmark's own arithmetic (medians, quartiles, per-layer sums):
+# 22 pure-Python tests, under a second.
+python3 perfbench/test_metrics.py
 
 # Pin parallelism: q13/q63 sketch goldens depend on partition count, so an
 # inherited SPARK_GRAFT_CPUS would make golden check drift across hosts.
