@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -18,17 +19,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val spark = Sessions.local(Sessions.envCores)
     spark.sparkContext.setLogLevel("WARN")
-    // the noop write's own QueryExecution carries the final adaptive
-    // plan; the listener bus delivers it asynchronously, after the write
-    val writes = new LinkedBlockingQueue[QueryExecution]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.analyzed.collectFirst { case w: V2WriteCommand => w.table } match {
-          case Some(r: DataSourceV2Relation) if r.table.name == "noop-table" => writes.put(qe)
-          case _ =>
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    })
+    val writes = new NoopWrites(spark)
     // comma-separated key list: one JVM, one plan dump per key, delimited
     // so a wrapper can split the output into per-key files
     for (k <- name.split(",").map(_.trim).filter(_.nonEmpty)) {
@@ -39,11 +30,34 @@ object Explain {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val writeS = (System.nanoTime() - t0) / 1e9
-      val qe = writes.poll(60, TimeUnit.SECONDS)
-      require(qe != null, s"no plan reported for $k's noop write")
-      println(qe.explainString(ExplainMode.fromString("formatted")))
+      println(writes.next().explainString(ExplainMode.fromString("formatted")))
       println(f"[explain] $k build=$buildS%.2f s noop=$writeS%.2f s")
     }
     spark.stop()
+  }
+
+  /** Collects the QueryExecution of every noop write `spark` runs while
+    * open: its executed plan is AQE's final plan. The listener bus
+    * delivers each one asynchronously, after the write. */
+  final class NoopWrites(spark: SparkSession) extends AutoCloseable {
+    private val writes = new LinkedBlockingQueue[QueryExecution]()
+    private val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.collectFirst { case w: V2WriteCommand => w.table } match {
+          case Some(r: DataSourceV2Relation) if r.table.name == "noop-table" => writes.put(qe)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+
+    /** The next noop write's QueryExecution, in the order they ran. */
+    def next(): QueryExecution = {
+      val qe = writes.poll(60, TimeUnit.SECONDS)
+      require(qe != null, "no plan reported for a noop write")
+      qe
+    }
+
+    override def close(): Unit = spark.listenerManager.unregister(listener)
   }
 }

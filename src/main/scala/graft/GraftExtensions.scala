@@ -35,5 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // a global sort over an input AQE has measured as one task sorts in
     // that task: no range-sample job, no range-shuffle stage
     ext.injectQueryStagePrepRule(session => graft.plans.SortSmallInPlace(session))
+    // the prefix-sum plan node behind Science.cumCounts
+    ext.injectPlannerStrategy(_ => graft.plans.PrefixSumStrategy)
   }
 }

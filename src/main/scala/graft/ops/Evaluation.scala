@@ -815,11 +815,11 @@ object Evaluation extends QueryPack {
         .select(col("l_quantity").as("x"), col("l_extendedprice").as("y"),
           expr(md5mod("concat(cast(l_orderkey as string), '|', cast(l_linenumber as string))", 3)).as("part"))
       // The OLS coefficients are ONE aggregate row — collected and
-      // inlined as LITERALS (the cumCounts counter-collect class of
-      // driver read, an aggregate result, never data): left as a
-      // broadcast subtree they are RE-COMPUTED per consumer (the eager
-      // cumCounts boundary blocks ReuseExchange) and every recompute is
-      // a full md5-hashing scan of the fact.
+      // inlined as LITERALS (a bounded driver read, an aggregate result,
+      // never data): left as a broadcast subtree they were RE-COMPUTED
+      // per consumer while cumCounts was an eager RDD boundary (it
+      // blocked ReuseExchange), and every recompute is a full
+      // md5-hashing scan of the fact.
       val cr = olsCoef(li.filter(col("part") === 0)).collect()(0)
       def d(i: Int) = if (cr.isNullAt(i)) lit(null).cast("double") else lit(cr.getDouble(i))
       val slopeL = d(1)

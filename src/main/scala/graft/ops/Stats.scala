@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryPack, Sessions, Tables}
+import graft.{QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -147,13 +147,17 @@ object Stats extends QueryPack {
     // Spearman = Pearson over average ranks (min-rank + (ties-1)/2),
     // computed scale-valid: each column contracts to its DISTINCT-value
     // count table (one shuffle) and Science.cumCounts' one-channel
-    // range-partitioned prefix sum gives every value the count of rows
-    // strictly below it, with global offsets derived from a tiny
-    // per-partition-total collect (one row per partition — bounded by
-    // the partition count, never by data size). avg-rank(v) = below +
-    // (ties+1)/2, identical to SQL `rank() + (count(*) over (partition
-    // by v) - 1)/2`. No unpartitioned window anywhere, so the plan holds
-    // at 100 TB: two groupBy shuffles + two shuffle joins back to the fact.
+    // prefix sum gives every value the count of rows strictly below it.
+    // The prefix sum is a lazy plan node: nothing runs while the frame
+    // is built, a count table AQE measures as one task's worth is summed
+    // in that task, and a larger one is range-partitioned with global
+    // offsets from a per-partition-total job (one row per partition —
+    // bounded by the partition count, never by data size). avg-rank(v) =
+    // below + (ties+1)/2, identical to SQL `rank() + (count(*) over
+    // (partition by v) - 1)/2`. No unpartitioned window anywhere, so the
+    // plan holds at 100 TB: two groupBy shuffles + two joins back to the
+    // fact. The two rank chains are independent stages of one query, and
+    // AQE submits them together.
     "q22_spearman" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir).select(col("l_quantity"), col("l_extendedprice"))
       // Column arithmetic, not SQL text: there `2.0` is a DECIMAL literal,
@@ -161,17 +165,8 @@ object Stats extends QueryPack {
       def ranks(v: String, out: String): DataFrame =
         Science.cumCounts(s, li.groupBy(col(v).as("v")).agg(count(lit(1)).as("c1")))
           .select(col("v").as(v), (col("below").cast("double") + (col("c1") + 1) / lit(2.0)).as(out))
-      // The two rank tables are independent chains each ending in an
-      // eager driver collect of per-partition totals (cumCounts); built
-      // serially the second chain's jobs wait on the first's tail for
-      // no reason (guide §2.6: overlap independent jobs). Futures start
-      // both; the final join needs both anyway.
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      val rqF = Sessions.future(s)(ranks("l_quantity", "rq"))
-      val rpF = Sessions.future(s)(ranks("l_extendedprice", "rp"))
-      val rq = Await.result(rqF, Duration.Inf)
-      val rp = Await.result(rpF, Duration.Inf)
+      val rq = ranks("l_quantity", "rq")
+      val rp = ranks("l_extendedprice", "rp")
       li.join(rq, "l_quantity").join(rp, "l_extendedprice")
         .agg(c6(corr(col("rq"), col("rp"))).as("spearman_qty_price"))
     }),

@@ -26,6 +26,13 @@ import org.apache.spark.sql.internal.SQLConf
   * carry no `ENSURE_REQUIREMENTS` range exchange under a global sort,
   * so they keep their plans.
   *
+  * The range exchange under a [[PrefixSumExec]]'s local sort goes the
+  * same way, so the prefix sum runs in one task with no job of its own.
+  * There the partition-count floor is 1: the parallelism-first floor
+  * would split an input of a few MiB (q22's and q273's price counts,
+  * 1.4 MiB at sf0.01) into two partitions only to pay a sample job, a
+  * range stage and a totals job for them.
+  *
   * Injected by [[graft.GraftExtensions]] (`injectQueryStagePrepRule`);
   * AQE applies it each time it re-plans after a stage materializes.
   */
@@ -35,11 +42,23 @@ case class SortSmallInPlace(session: SparkSession) extends Rule[SparkPlan] {
     if (!conf.coalesceShufflePartitionsEnabled) plan
     else plan.transformUp {
       case sort @ SortExec(_, true, ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
-          if fitsOneTask(child) =>
+          if fitsOneTask(child, minNumPartitions) =>
         sort.withNewChildren(Seq(CoalesceExec(1, child)))
+      case p @ PrefixSumExec(_, _, sort @ SortExec(_, false,
+          ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _))
+          if fitsOneTask(child, 1) =>
+        p.withNewChildren(Seq(sort.withNewChildren(Seq(CoalesceExec(1, child)))))
     }
 
-  private def fitsOneTask(child: SparkPlan): Boolean = {
+  /** The lower bound `CoalesceShufflePartitions` puts on the partition count. */
+  private def minNumPartitions: Int =
+    conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse {
+      if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) {
+        session.sparkContext.defaultParallelism
+      } else 1
+    }
+
+  private def fitsOneTask(child: SparkPlan, minNumPartitions: Int): Boolean = {
     val leaves = child.collectLeaves()
     val materialized = leaves.forall {
       case s: ShuffleQueryStageExec => s.isMaterialized
@@ -47,12 +66,7 @@ case class SortSmallInPlace(session: SparkSession) extends Rule[SparkPlan] {
       case _ => false
     }
     val shuffles = leaves.collect { case s: ShuffleQueryStageExec => s }
-    materialized && shuffles.nonEmpty && {
-      val minNumPartitions = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM).getOrElse {
-        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) {
-          session.sparkContext.defaultParallelism
-        } else 1
-      }
+    materialized && shuffles.nonEmpty &&
       ShufflePartitionsUtil.coalescePartitions(
         shuffles.map(_.mapStats),
         shuffles.map(_ => None),
@@ -60,6 +74,5 @@ case class SortSmallInPlace(session: SparkSession) extends Rule[SparkPlan] {
         minNumPartitions,
         conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
       ).headOption.exists(_.size == 1)
-    }
   }
 }

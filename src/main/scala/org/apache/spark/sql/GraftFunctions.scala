@@ -3,13 +3,15 @@ package org.apache.spark.sql
 import graft.functions.{CosineSimilarity, JaroWinkler, Md5Mod, RollingWindowHashes, SlidingGen, SquaredDistance}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Registration bridge for graft's native Catalyst expressions.
+/** Registration bridge for graft's native Catalyst expressions and
+  * plan nodes.
   *
   * Lives in the org.apache.spark.sql package purely to reach the
-  * session-internal FunctionRegistry (`private[sql]`) — the standard
-  * pattern for Spark extension libraries when the session is built by a
-  * host harness. When the application owns session construction, the
+  * session-internal FunctionRegistry and `Dataset.ofRows` (both
+  * `private[sql]`) — the standard pattern for Spark extension libraries
+  * when the session is built by a host harness. When the application owns session construction, the
   * idiomatic route is `GraftExtensions` via `.withExtensions` /
   * `spark.sql.extensions` (see graft.GraftExtensions), which Verify and
   * Bench both use; `register` covers externally-built sessions and is
@@ -113,9 +115,19 @@ object GraftFunctions {
 
   val mightContainIdent: FunctionIdentifier = FunctionIdentifier("might_contain")
 
+  /** `f` applied to `df`'s logical plan, as a DataFrame: how graft's own
+    * logical nodes (`graft.plans.PrefixSum`) enter the DataFrame API. */
+  def withPlan(df: DataFrame)(f: LogicalPlan => LogicalPlan): DataFrame = {
+    val d = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(d.sparkSession, f(d.logicalPlan))
+  }
+
   def register(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // a session built without GraftExtensions still plans graft's nodes
+    if (!session.sessionState.planner.strategies.contains(graft.plans.PrefixSumStrategy))
+      session.experimental.extraStrategies :+= graft.plans.PrefixSumStrategy
+    val reg = session.sessionState.functionRegistry
     // per-function exists-guard: SparkEntry's wrapper registers per
     // query call (replace would WARN-spam the logs once per invocation)
     // and a host session may legitimately hold SOME of these already —

@@ -55,13 +55,13 @@ class SessionsSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("jobs a key starts from pool threads carry the caller's job tag, not the pool's") {
     val sc = spark.sparkContext
-    val q22 = SparkEntry.queries("q22_spearman")
+    val q267 = SparkEntry.queries("q267_dedup_threshold_sweep")
     // warm: pool threads come into being while an older tag is set
     sc.addJobTag("graft-warm")
-    try q22(spark, sf).collect() finally sc.removeJobTag("graft-warm")
+    try q267(spark, sf).collect() finally sc.removeJobTag("graft-warm")
     sc.addJobTag("graft-run")
-    val jobs = try jobsDuring(q22(spark, sf).collect()) finally sc.removeJobTag("graft-run")
-    // q22's two rank chains each sample and collect from a Future
+    val jobs = try jobsDuring(q267(spark, sf).collect()) finally sc.removeJobTag("graft-run")
+    // q267's four threshold branches each checkpoint from a Future
     jobs.size should be > 2
     jobs.foreach { p =>
       val tags = Option(p.getProperty("spark.job.tags")).toSeq.flatMap(_.split(','))

@@ -28,12 +28,12 @@ if [[ -n "$direct" ]]; then
   exit 1
 fi
 # The range-partitioned prefix sum (per-partition totals, scanLeft
-# offsets, running sums) lives once, in graft.ops.Science.cumCounts, for
-# any number of channels.
+# offsets, running sums) lives once, in the graft.plans.PrefixSum plan
+# node behind graft.ops.Science.cumCounts, for any number of channels.
 prefix=$(grep -rn 'mapPartitionsWithIndex' src/main --include='*.scala' \
-  | grep -v '^src/main/scala/graft/ops/Science\.scala:' || true)
+  | grep -v '^src/main/scala/graft/plans/PrefixSum\.scala:' || true)
 if [[ -n "$prefix" ]]; then
-  echo "prefix-sum machinery outside graft.ops.Science.cumCounts:" >&2
+  echo "prefix-sum machinery outside graft.plans.PrefixSum:" >&2
   echo "$prefix" >&2
   exit 1
 fi
