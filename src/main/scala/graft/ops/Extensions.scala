@@ -259,7 +259,6 @@ object Extensions extends QueryPack {
     // Docs bounded at 8192 chars on BOTH engines (explicit, not silent;
     // longer docs chunk upstream).
     "q73_rolling_dedup" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s) // idempotent; no-op under GraftExtensions
       // Window-hash distinctness is PER-DOC, so array_distinct on the
       // native expression's array replaces the old global `.distinct()`
       // exchange of 1.17M (doc, wh) rows; the explicit-N repartition

@@ -64,6 +64,36 @@ object Science extends QueryPack {
     org.apache.spark.sql.GraftFunctions.withPlan(in)(graft.plans.PrefixSum.of)
   }
 
+  /** The one-row rank-sum statistics q161 (Kruskal–Wallis) and q340
+    * (Dunn) share over `events.value` in the view/click/purchase groups:
+    * group sizes `n1..n3`, midrank sums `r1..r3` (quantized to
+    * DECIMAL(28,6) before the distributed sum), the tie term
+    * `ties` = Σ(t³−t) (DECIMAL(38,0), so it cannot overflow) and
+    * `nt` = n1 + n2 + n3. One value groupBy contracts the table to
+    * per-distinct-value group counts; [[cumCounts]] supplies `below`, and
+    * the midrank is below + (ct+1)/2. */
+  private def groupRankSums(s: org.apache.spark.sql.SparkSession,
+                        dir: String): org.apache.spark.sql.DataFrame = {
+    val g = Tables.events(s, dir)
+      .filter(col("event_type").isin("view", "click", "purchase") && col("value").isNotNull)
+      .groupBy(col("value").as("v"))
+      .agg(sum(when(col("event_type") === "view", 1).otherwise(0)).as("g1"),
+        sum(when(col("event_type") === "click", 1).otherwise(0)).as("g2"),
+        sum(when(col("event_type") === "purchase", 1).otherwise(0)).as("g3"))
+      .localCheckpoint() // consumed twice: cumCounts pass + midrank join
+    val below = cumCounts(s, g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1")))
+      .select(col("v"), col("below"))
+    g.join(below, "v")
+      .withColumn("ct", col("g1") + col("g2") + col("g3"))
+      .withColumn("ar", expr("below + (ct + 1) / 2.0"))
+      .agg(sum(col("g1")).as("n1"), sum(col("g2")).as("n2"), sum(col("g3")).as("n3"),
+        sum(expr("cast(ar * g1 as decimal(28,6))")).as("r1"),
+        sum(expr("cast(ar * g2 as decimal(28,6))")).as("r2"),
+        sum(expr("cast(ar * g3 as decimal(28,6))")).as("r3"),
+        sum(expr("cast(ct * ct * ct - ct as decimal(38,0))")).as("ties"))
+      .withColumn("nt", col("n1") + col("n2") + col("n3"))
+  }
+
   def queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------
     // BM25 ranked retrieval (k1=1.2, b=0.75) for a fixed 3-term query:
@@ -159,7 +189,6 @@ object Science extends QueryPack {
     // LSH side is the one-shuffle bucket build. This is the
     // measure-then-tune step a billion-vector index deploy runs.
     "q126_ann_recall" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val planes = s.range(0, 6).select(col("id").cast("int").as("j"))
         .crossJoin(s.range(1, 65).select(col("id").cast("int").as("d")))
         .withColumn("w2", expr(
@@ -406,24 +435,7 @@ object Science extends QueryPack {
     // tie term Σ(t³−t) is per-row long arithmetic summed in
     // DECIMAL(38,0) so the total can never overflow.
     "q161_kruskal_wallis" -> ((s, dir) => {
-      val g = Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "click", "purchase") && col("value").isNotNull)
-        .groupBy(col("value").as("v"))
-        .agg(sum(when(col("event_type") === "view", 1).otherwise(0)).as("g1"),
-          sum(when(col("event_type") === "click", 1).otherwise(0)).as("g2"),
-          sum(when(col("event_type") === "purchase", 1).otherwise(0)).as("g3"))
-        .localCheckpoint() // consumed twice: cumCounts pass + midrank join
-      val below = cumCounts(s, g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1")))
-        .select(col("v"), col("below"))
-      g.join(below, "v")
-        .withColumn("ct", col("g1") + col("g2") + col("g3"))
-        .withColumn("ar", expr("below + (ct + 1) / 2.0"))
-        .agg(sum(col("g1")).as("n1"), sum(col("g2")).as("n2"), sum(col("g3")).as("n3"),
-          sum(expr("cast(ar * g1 as decimal(28,6))")).as("r1"),
-          sum(expr("cast(ar * g2 as decimal(28,6))")).as("r2"),
-          sum(expr("cast(ar * g3 as decimal(28,6))")).as("r3"),
-          sum(expr("cast(ct * ct * ct - ct as decimal(38,0))")).as("ties"))
-        .withColumn("nt", col("n1") + col("n2") + col("n3"))
+      groupRankSums(s, dir)
         .withColumn("h_raw", expr(
           "12.0 / (cast(nt as double) * (nt + 1)) * " +
             "(cast(r1 as double) * cast(r1 as double) / n1 + " +
@@ -491,24 +503,7 @@ object Science extends QueryPack {
     // data-sized stage; the 3 pair rows explode from the 1-row
     // sufficient-statistics frame.
     "q340_dunn_posthoc" -> ((s, dir) => {
-      val g = Tables.events(s, dir)
-        .filter(col("event_type").isin("view", "click", "purchase") && col("value").isNotNull)
-        .groupBy(col("value").as("v"))
-        .agg(sum(when(col("event_type") === "view", 1).otherwise(0)).as("g1"),
-          sum(when(col("event_type") === "click", 1).otherwise(0)).as("g2"),
-          sum(when(col("event_type") === "purchase", 1).otherwise(0)).as("g3"))
-        .localCheckpoint() // consumed twice: cumCounts pass + midrank join
-      val below = cumCounts(s, g.select(col("v"), (col("g1") + col("g2") + col("g3")).as("c1")))
-        .select(col("v"), col("below"))
-      g.join(below, "v")
-        .withColumn("ct", col("g1") + col("g2") + col("g3"))
-        .withColumn("ar", expr("below + (ct + 1) / 2.0"))
-        .agg(sum(col("g1")).as("n1"), sum(col("g2")).as("n2"), sum(col("g3")).as("n3"),
-          sum(expr("cast(ar * g1 as decimal(28,6))")).as("r1"),
-          sum(expr("cast(ar * g2 as decimal(28,6))")).as("r2"),
-          sum(expr("cast(ar * g3 as decimal(28,6))")).as("r3"),
-          sum(expr("cast(ct * ct * ct - ct as decimal(38,0))")).as("ties"))
-        .withColumn("nt", col("n1") + col("n2") + col("n3"))
+      groupRankSums(s, dir)
         .withColumn("s2", expr(
           "cast(nt as double) * (nt + 1) / 12.0d - cast(ties as double) / (12.0d * (nt - 1))"))
         .withColumn("pr", explode(expr(
@@ -1521,7 +1516,6 @@ object Science extends QueryPack {
     // division is CAST(1 AS DOUBLE)/(60+rank) in both engines so no
     // decimal-division scale rules apply.
     "q300_rrf_fusion" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val t = toks(s, dir)
       val dl = t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
         .localCheckpoint() // corpus stats + per-doc norm

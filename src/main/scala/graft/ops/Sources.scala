@@ -1277,14 +1277,13 @@ object Sources extends QueryPack {
         .writeTo("graft.g.mor372")
         .tableProperty("write.mode", "merge-on-read").create()
       val path = s"${Stage.dir("graft_warehouse")}/g/mor372"
-      val preNames = graft.sources.GraftSink.readManifest(path).get.files
-        .map(graft.sources.GraftSink.entryName).toSet
+      val preNames = graft.sources.GraftSink.readManifest(path).get.entries
+        .map(_.name).toSet
       s.sql("DELETE FROM graft.g.mor372 WHERE c_custkey % 7 = 0")
       s.sql("DELETE FROM graft.g.mor372 WHERE bal < 1000.0")
-      val m = graft.sources.GraftSink.readManifest(path).get
-      val added = m.files.map(graft.sources.GraftSink.entryName)
-        .count(n => !preNames(n))
-      val dvPositions = m.files.map(graft.sources.GraftSink.entryDeletes(_).length).sum
+      val entries = graft.sources.GraftSink.readManifest(path).get.entries
+      val added = entries.count(e => !preNames(e.name))
+      val dvPositions = entries.map(_.deletes.length).sum
       s.table("graft.g.mor372")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
@@ -1497,8 +1496,8 @@ object Sources extends QueryPack {
           col("c_acctbal").cast("decimal(18,2)").cast("double").as("bal"))
       cust.writeTo("graft.g.evo378").create()                          // v1+v2
       val path = s"${Stage.dir("graft_warehouse")}/g/evo378"
-      val preNames = graft.sources.GraftSink.readManifest(path).get.files
-        .map(graft.sources.GraftSink.entryName).toSet
+      val preNames = graft.sources.GraftSink.readManifest(path).get.entries
+        .map(_.name).toSet
       s.sql("ALTER TABLE graft.g.evo378 RENAME COLUMN bal TO balance") // v3: id migration
       s.sql("ALTER TABLE graft.g.evo378 DROP COLUMN c_nationkey")      // v4: middle column
       cust.filter(col("c_custkey") % 6 === 0)
@@ -1511,8 +1510,8 @@ object Sources extends QueryPack {
           col("c_mktsegment"), col("bal").as("balance"),
           concat(lit("T"), (col("c_custkey") % 2).cast("string")).as("tier"))
         .writeTo("graft.g.evo378").append()                            // v7
-      val nowNames = graft.sources.GraftSink.readManifest(path).get.files
-        .map(graft.sources.GraftSink.entryName).toSet
+      val nowNames = graft.sources.GraftSink.readManifest(path).get.entries
+        .map(_.name).toSet
       val rewritten = preNames.count(n => !nowNames(n)).toLong
       s.table("graft.g.evo378")
         .groupBy(expr("coalesce(tier, 'legacy')").as("tier"))
@@ -1551,8 +1550,9 @@ object Sources extends QueryPack {
       s.sql("DELETE FROM graft.g.part379 WHERE c_custkey % 8 = 3") // v3: partition-aware rewrite
       val m = graft.sources.GraftSink
         .readManifest(s"${Stage.dir("graft_warehouse")}/g/part379").get
-      val untagged = m.files.count(l => graft.sources.GraftSink.entryPart(l).isEmpty)
-      val nParts = m.files.flatMap(l => graft.sources.GraftSink.entryPart(l)).distinct.size
+      val parts = m.entries.map(_.part)
+      val untagged = parts.count(_.isEmpty)
+      val nParts = parts.flatten.distinct.size
       s.table("graft.g.part379")
         .filter(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
         .groupBy(col("c_mktsegment"))
@@ -1734,7 +1734,7 @@ object Sources extends QueryPack {
         .writeTo("graft.g.spe417").append()                          // gen 2
       val m = graft.sources.GraftSink
         .mainHead(s"${Stage.dir("graft_warehouse")}/g/spe417").get
-      val tags = m.files.flatMap(graft.sources.GraftSink.entryPart).distinct
+      val tags = m.entries.flatMap(_.part).distinct
       val gen1 = tags.count(_.startsWith("c_mktsegment="))
       val gen2 = tags.count(_.startsWith("c_nationkey="))
       s.table("graft.g.spe417")
@@ -1775,7 +1775,7 @@ object Sources extends QueryPack {
         .writeTo("graft.g.ren418").append()                          // v4: new-name routing
       val m = graft.sources.GraftSink
         .mainHead(s"${Stage.dir("graft_warehouse")}/g/ren418").get
-      val tags = m.files.flatMap(graft.sources.GraftSink.entryPart).distinct
+      val tags = m.entries.flatMap(_.part).distinct
       val renamed = tags.count(_.startsWith("segment="))
       val oldName = tags.count(_.startsWith("c_mktsegment="))
       val v2 = s.read.format("graftsink")

@@ -101,7 +101,6 @@ object Text extends QueryPack {
     // (the HOF form this replaced built both). Short docs emit zero
     // windows by the generator's contract, matching DuckDB's range().
     "q38_ngrams" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       Tables.documents(s, dir)
         .select(split(col("text"), " ").as("w"))
         .select(expr("sliding_gen(w, 2)").as(Seq("pos", "win")))
@@ -404,7 +403,6 @@ object Text extends QueryPack {
     // ROUNDED similarity with vec_id tiebreak so cross-engine order is
     // identical.
     "q41_cosine_topk" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s) // idempotent; no-op under GraftExtensions
       val e = Tables.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
@@ -424,7 +422,6 @@ object Text extends QueryPack {
     // distributed avg's partition-order noise can't leak into ranking;
     // argmin via window; output = confusion counts.
     "q42_centroid_knn" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val cent = e
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -484,7 +481,6 @@ object Text extends QueryPack {
         .localCheckpoint() // unigram + bigram branches share the tokenize
       val uc = toks.select(explode(col("w")).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c"))
-      org.apache.spark.sql.GraftFunctions.register(s)
       // bigrams via the native sliding_gen generator (see q38's note)
       val bg = toks
         .select(expr("sliding_gen(w, 2)").as(Seq("pos", "win")))
@@ -519,7 +515,6 @@ object Text extends QueryPack {
     // ppl = exp(−Σ ln P / n). Each ln term is DECIMAL(28,12)-quantized
     // pre-sum; counts and V are exact integers.
     "q146_perplexity" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val toks = Tables.documents(s, dir)
         .select(col("doc_id"),
           expr("filter(split(text, ' '), x -> x <> '')").as("w"))
@@ -1152,7 +1147,6 @@ object Text extends QueryPack {
     // 8-byte-hashable keys); per-bigram nll quantizes DECIMAL(28,12)
     // before the per-doc sum.
     "q333_jm_bigram_lm" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val toks = Tables.documents(s, dir)
         .select(col("doc_id"),
           expr("md5_mod(cast(doc_id as string), 10L)").as("split"),

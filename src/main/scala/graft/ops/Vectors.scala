@@ -111,6 +111,34 @@ object Vectors extends QueryPack {
       (codes, blocks.map(_._2))
     }
 
+  /** Min-root, path-compressed union-find over long ids — the state of
+    * the HDBSCAN Kruskal reducers (q370, q396, q381), one instance per
+    * cell, memory O(ids seen). */
+  private final class UnionFind {
+    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+
+    /** Join the sets of `a` and `b` (the larger root points at the
+      * smaller); false when they already were one set. */
+    def union(a: Long, b: Long): Boolean = {
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      ra != rb
+    }
+
+    /** Every id seen, with its root. */
+    def roots: Iterator[(Long, Long)] = parent.keysIterator.map(v => v -> find(v))
+  }
+
   def queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------
     // IVF search, nprobe=1: probe → nearest codebook cell → exact top-3
@@ -119,7 +147,6 @@ object Vectors extends QueryPack {
     // (q65's machinery), not the label centroids: a real corpus has no
     // labels at index-build time.
     "q61_ann_ivf" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s) // idempotent; no-op under GraftExtensions
       val e = Tables.embeddings(s, dir)
       val cb = trainedCodebook(s, dir)
       val a = assign(e, cb).select(col("vec_id"), col("label"),
@@ -152,7 +179,6 @@ object Vectors extends QueryPack {
     // the whole corpus, so recall is exactly 1 (Round9jSpec pins it,
     // plus monotonicity of recall and cost in nprobe).
     "q336_ivf_probe_sweep" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val cb = trainedCodebook(s, dir)
       val a = assign(e, cb).select(col("vec_id"), col("cid").as("cell"))
@@ -210,7 +236,6 @@ object Vectors extends QueryPack {
     // pre-rank; per-vector rank windows are partitioned (scale-safe);
     // the rank-10 window rides the 10-row TakeOrdered tail.
     "q349_knn_outliers" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val cb = trainedCodebook(s, dir)
       val a = assign(e, cb).select(col("vec_id"), col("embedding"), col("cid").as("cell"))
@@ -281,7 +306,6 @@ object Vectors extends QueryPack {
     // Readout = the per-cell dedup bill (kept/dropped/rate) + cell
     // sizes, the artifact a curation run logs before committing τ.
     "q339_semdedup" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val cb = trainedCodebook(s, dir)
       val a = assign(e, cb).select(col("vec_id"), col("embedding"), col("cid").as("cell"))
@@ -314,7 +338,6 @@ object Vectors extends QueryPack {
     // never data-sized). Similarities round to 6 dp before every argmax
     // so tie-breaks (score desc, vec_id asc) are engine-stable.
     "q338_mmr_rerank" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val q0 = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
       val shortlist = e.filter(col("vec_id") =!= 0)
@@ -353,7 +376,6 @@ object Vectors extends QueryPack {
     // buckets (group-then-expand, never all-pairs), exact cosine via
     // the native codegen'd cosine_sim expression, keep cos ≥ 0.4.
     "q62_dedup_embed" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val p = 1000000007L
       val planes = s.range(0, 8).select(col("id").cast("int").as("j"))
         .crossJoin(s.range(1, 65).select(col("id").cast("int").as("d")))
@@ -410,7 +432,6 @@ object Vectors extends QueryPack {
     // corpora. Output = the 20 lowest-mreach edges (the first MST
     // edge candidates), via orderBy+limit → TakeOrderedAndProject.
     "q295_core_distance" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val planes = s.range(0, 8).select(col("id").cast("int").as("j"))
         .crossJoin(s.range(1, 65).select(col("id").cast("int").as("d")))
         .withColumn("w2", expr(
@@ -471,7 +492,6 @@ object Vectors extends QueryPack {
     // Each block is a broadcast of k=10 sub-centroids + one partitioned
     // window; blocks are independent so the 4 pipelines parallelize.
     "q89_pq_encode" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       pqArtifacts(s, dir)._1
         .select(col("vec_id"), col("c0"), col("c1"), col("c2"), col("c3"),
           round(col("err0") + col("err1") + col("err2") + col("err3"), 6).as("err"))
@@ -492,7 +512,6 @@ object Vectors extends QueryPack {
     // Determinism: every distance 6-dp-rounded before ranking; the
     // 4-term approx sum is left-to-right in both engines.
     "q142_ivfpq_search" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val cb = trainedCodebook(s, dir)
       val (codes, subcbs) = pqArtifacts(s, dir)
@@ -551,7 +570,6 @@ object Vectors extends QueryPack {
     // per-row scores quantize to DECIMAL(28,12) pre-sum. b=0 (twin
     // centroids) nulls out instead of NaN-ing, both engines.
     "q394_silhouette" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val w = Window.partitionBy(col("vec_id")).orderBy(col("d2c"), col("cid"))
       Tables.embeddings(s, dir)
         .crossJoin(broadcast(trainedCodebook(s, dir)))
@@ -573,7 +591,6 @@ object Vectors extends QueryPack {
     }),
 
     "q65_kmeans_train" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       // trainedCodebook = one Lloyd iteration from the label-mean init;
       // the second assignment both scores it (inertia) and IS the
@@ -628,7 +645,6 @@ object Vectors extends QueryPack {
     // probe (never global). At corpus scale the probe set is a sample —
     // the harness shape (rank joint, grouped overlap) is unchanged.
     "q221_matryoshka_recall" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val e = Tables.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
@@ -817,7 +833,6 @@ object Vectors extends QueryPack {
     // per row, exact decimal sum). Probe-side joins are the audited
     // bounded-BNLJ shape (5 literal-keyed rows).
     "q247_int8_recall" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val sv = Tables.embeddings(s, dir)
         .select(posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy(col("pos")).agg(max(abs(col("x").cast("double"))).as("sc"))
@@ -977,7 +992,6 @@ object Vectors extends QueryPack {
     // with the k×k cells as partial-agg state; nothing materializes a
     // dense matrix.
     "q368_als_sweep" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val r = Tables.events(s, dir)
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).cast("double").as("r"))
@@ -1042,7 +1056,6 @@ object Vectors extends QueryPack {
     // shared bug can't cancel); readout = the 5 heaviest MST edges
     // (the top dendrogram splits) + exact DECIMAL total weight.
     "q370_hdbscan_mst" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       val probes = Tables.embeddings(s, dir).filter(col("vec_id") < 32)
         .select(col("vec_id"), col("embedding")).localCheckpoint()
       val pd = probes.select(col("vec_id").as("va"), col("embedding").as("ea"))
@@ -1080,20 +1093,10 @@ object Vectors extends QueryPack {
         .as[(Long, Long, Double)]
         .mapPartitions { it =>
           val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x // path compression
-            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
+          val uf = new UnionFind
           it.foreach { case (va, vb, w) =>
-            val (ra, rb) = (find(va), find(vb))
-            if (ra != rb) { // Kruskal accept: first (lightest) crossing edge
-              parent(math.max(ra, rb)) = math.min(ra, rb)
-              out += ((va, vb, w))
-            }
+            // Kruskal accept: first (lightest) crossing edge
+            if (uf.union(va, vb)) out += ((va, vb, w))
           }
           out.iterator
         }
@@ -1147,7 +1150,6 @@ object Vectors extends QueryPack {
     // stays Σ|cell|² (SemDeDup's contract); the oracle replays the cut
     // and a RECURSIVE min-label propagation in DuckDB.
     "q396_hdbscan_clusters" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       import s.implicits._
       val e = Tables.embeddings(s, dir)
       val a = assign(e, trainedCodebook(s, dir))
@@ -1194,26 +1196,16 @@ object Vectors extends QueryPack {
           // O(|cell|), edges stream through — q381's reducer shape
           val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
           var curCell = Long.MinValue
-          var parent: scala.collection.mutable.HashMap[Long, Long] = null
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
+          var uf: UnionFind = null
           def flush(): Unit = if (curCell != Long.MinValue)
-            parent.keysIterator.foreach(v => out += ((curCell, v, find(v))))
+            uf.roots.foreach { case (v, r) => out += ((curCell, v, r)) }
           it.foreach { case (cell, va, vb) =>
             if (cell != curCell) {
               flush()
               curCell = cell
-              parent = scala.collection.mutable.HashMap.empty
+              uf = new UnionFind
             }
-            parent.getOrElseUpdate(va, va)
-            parent.getOrElseUpdate(vb, vb)
-            val (ra, rb) = (find(va), find(vb))
-            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+            uf.union(va, vb)
           }
           flush()
           out.iterator
@@ -1235,7 +1227,6 @@ object Vectors extends QueryPack {
     }),
 
     "q381_hdbscan_cells" -> ((s, dir) => {
-      org.apache.spark.sql.GraftFunctions.register(s)
       import s.implicits._
       val e = Tables.embeddings(s, dir)
       val cb = trainedCodebook(s, dir)
@@ -1276,31 +1267,22 @@ object Vectors extends QueryPack {
         .mapPartitions { it =>
           val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, java.math.BigDecimal, Double)]
           var curCell = Long.MinValue
-          var parent: scala.collection.mutable.HashMap[Long, Long] = null
+          var uf: UnionFind = null
           var nEdges = 0L
           var tot: java.math.BigDecimal = null
           var maxW = 0.0
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x // path compression
-            while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-            r
-          }
           def flush(): Unit = if (curCell != Long.MinValue)
             out += ((curCell, nEdges, tot, maxW))
           it.foreach { case (cell, va, vb, w) =>
             if (cell != curCell) {
               flush()
               curCell = cell
-              parent = scala.collection.mutable.HashMap.empty
+              uf = new UnionFind
               nEdges = 0L
               tot = java.math.BigDecimal.ZERO.setScale(6)
               maxW = 0.0
             }
-            val (ra, rb) = (find(va), find(vb))
-            if (ra != rb) { // Kruskal accept: first (lightest) crossing edge
-              parent(math.max(ra, rb)) = math.min(ra, rb)
+            if (uf.union(va, vb)) { // Kruskal accept: first (lightest) crossing edge
               nEdges += 1
               tot = tot.add(java.math.BigDecimal.valueOf(w).setScale(6, java.math.RoundingMode.HALF_UP))
               if (w > maxW) maxW = w

@@ -300,7 +300,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // ids never reused while ANY file still references them (dropped
     // columns linger in old files' cols: lists)
     var maxId = (fields.map(_._2) ++
-      m.files.flatMap(l => GraftSink.entryCols(l).fold(Seq.empty[Int])(_.toSeq)))
+      m.entries.flatMap(_.cols.getOrElse(Nil)))
       .foldLeft(0)(math.max)
     var needIds = m.ids.isDefined
     def single(name: Array[String], what: String): String = {
@@ -399,22 +399,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // first rename/drop MIGRATES: stamp every pre-migration file's
     // positional layout so id-resolution stays exact from here on
     val migrated =
-      if (needIds && m.ids.isEmpty) m.files.map { line =>
-        if (GraftSink.entryCols(line).isDefined) line
-        else GraftSink.entry(GraftSink.entryName(line),
-          GraftSink.entryDeletes(line).toSeq, None,
-          GraftSink.entryRows(line), Some(1 to before.length),
-          // the rebuild must carry EVERY layout segment through — the
-          // pre-r14 shape silently dropped part: tags and all but the
-          // first stats: envelope on the first rename/drop, killing
-          // partition pruning for the table's whole prior history
-          GraftSink.entryPart(line), GraftSink.entryStatsAll(line))
-      }
-      else m.files
-    // partition-column rename: rekey every line's part:/stats: tags
-    val files = partRenames.foldLeft(migrated) { case (ls, (from, to)) =>
-      ls.map(GraftSink.rekeyEntry(_, from, to))
-    }
+      if (needIds && m.ids.isEmpty) m.entries.map(e =>
+        if (e.cols.isDefined) e else e.copy(cols = Some(1 to before.length)))
+      else m.entries
+    // partition-column rename: rekey every entry's part:/stats: tags
+    val files = partRenames.foldLeft(migrated) { case (es, (from, to)) =>
+      es.map(_.renamed(from, to))
+    }.map(_.line)
     GraftSink.writeManifest(p.toString, GraftSink.Manifest(GraftSink.cleanDdl(evolved), files,
       if (needIds) Some(fields.map(_._2)) else None))
     // spec props rekey in the same ALTER: current spec, past
@@ -786,8 +777,8 @@ class GraftStagedTable(fsys: org.apache.hadoop.fs.FileSystem, stage: HPath,
       // snapshots stay time-travelable (Iceberg RTAS semantics)
       val m = GraftSink.readManifest(stage.toString).getOrElse(
         throw new IllegalStateException(s"graft catalog: staged RTAS lost its manifest at $stage"))
-      m.files.foreach { line =>
-        val n = GraftSink.entryName(line)
+      m.entries.foreach { e =>
+        val n = e.name
         require(fsys.rename(new HPath(stage, n), new HPath(real, n)),
           s"graft catalog: staged RTAS failed to move $n into $real")
       }
@@ -1020,8 +1011,7 @@ object GraftCatalog {
         // would silently degrade pruning after every compact). The
         // coalesced files' envelopes are wider but still exact.
         val schema0 = StructType.fromDDL(base.ddl)
-        val statCols = base.files
-          .flatMap(l => GraftSink.entryStatsAll(l).map(_._1)).distinct
+        val statCols = base.entries.flatMap(_.stats.map(_._1)).distinct
           .filter(c => schema0.fieldNames.contains(c) &&
             schema0(schema0.fieldIndex(c)).dataType == LongType)
         val w = sp.read.format("graftsink").option("path", p).load()
@@ -1056,11 +1046,10 @@ object GraftCatalog {
         val (drop, kept) = versions.partition(v => v < cut && !pinned(v))
         // GC by entry NAME (a manifest line may carry a delete vector)
         val keptMs = kept.map(v => v -> GraftSink.readManifest(p, Some(v)).get)
-        val keptFiles = keptMs.flatMap(_._2.files)
-          .map(GraftSink.entryName).toSet
+        val keptFiles = keptMs.flatMap(_._2.entries).map(_.name).toSet
         val dropFiles = drop
-          .flatMap(v => GraftSink.readManifest(p, Some(v)).get.files)
-          .map(GraftSink.entryName).toSet -- keptFiles
+          .flatMap(v => GraftSink.readManifest(p, Some(v)).get.entries)
+          .map(_.name).toSet -- keptFiles
         dropFiles.foreach(df => f.delete(new HPath(p, df), false))
         drop.foreach(v => f.delete(new HPath(p, s"${GraftSink.MANIFEST}.v$v"), false))
         // DV-aware half: once expiry narrows history, a file whose
@@ -1077,10 +1066,9 @@ object GraftCatalog {
         // changes in ANY surviving snapshot.
         val sigByName = scala.collection.mutable.Map
           .empty[String, scala.collection.mutable.Set[String]]
-        keptMs.foreach { case (_, m) => m.files.foreach { l =>
-          sigByName.getOrElseUpdate(GraftSink.entryName(l),
-            scala.collection.mutable.Set.empty) +=
-            GraftSink.entryDeletes(l).mkString(",")
+        keptMs.foreach { case (_, m) => m.entries.foreach { e =>
+          sigByName.getOrElseUpdate(e.name, scala.collection.mutable.Set.empty) +=
+            e.deletes.mkString(",")
         } }
         val rewritable: Seq[(String, Array[Long])] = sigByName.toSeq.collect {
           case (n, sigs) if sigs.size == 1 && sigs.head.nonEmpty =>
@@ -1142,13 +1130,9 @@ object GraftCatalog {
           // manifest names
           keptMs.foreach { case (v, m) =>
             val newFiles = m.files.map { l =>
-              val n = GraftSink.entryName(l)
-              renames.get(n).fold(l) { fin =>
-                GraftSink.entry(fin, Nil, None,
-                  GraftSink.entryRows(l).map(_ - GraftSink.entryDeletes(l).length),
-                  GraftSink.entryCols(l).map(_.toSeq), GraftSink.entryPart(l),
-                  GraftSink.entryStatsAll(l))
-              }
+              val e = GraftSink.Entry.parse(l)
+              renames.get(e.name).fold(l)(fin =>
+                e.copy(name = fin, deletes = Nil, rows = e.live).line)
             }
             if (newFiles != m.files)
               GraftSink.rewriteManifestInPlace(p, v, m.copy(files = newFiles))
@@ -1340,7 +1324,7 @@ object GraftCatalog {
                      else System.currentTimeMillis() - olderMin * 60000L
         val f = GraftSink.fs(p)
         val referenced = GraftSink.listVersions(p).flatMap(v =>
-          GraftSink.readManifest(p, Some(v)).get.files.map(GraftSink.entryName)).toSet
+          GraftSink.readManifest(p, Some(v)).get.entries.map(_.name)).toSet
         val entries = f.listStatus(new HPath(p)).toSeq
         val names = entries.filter(e => e.isFile && e.getModificationTime < cutoff)
           .map(_.getPath.getName)
@@ -1407,30 +1391,28 @@ object GraftCatalog {
         val maxRows = args.getInt(1)
         require(maxRows >= 1, s"graft catalog: compact_bins wants max_rows >= 1, got $maxRows")
         val m = GraftSink.readManifest(p).get
-        m.files.foreach(l => require(GraftSink.entryRows(l).isDefined,
-          s"graft catalog: compact_bins needs rows: segments on every entry (missing on ${GraftSink.entryName(l)})"))
+        val entries = m.entries
+        entries.foreach(e => require(e.rows.isDefined,
+          s"graft catalog: compact_bins needs rows: segments on every entry (missing on ${e.name})"))
         val sp = org.apache.spark.sql.SparkSession.active
         val schema = StructType.fromDDL(m.ddl)
         val ids = GraftSink.manifestIds(m)
-        val groups = m.files.groupBy(GraftSink.entryPart)
-        var untouched = Seq.empty[String]
-        var rewritten = Seq.empty[String]
+        val groups = entries.groupBy(_.part)
+        var untouched = Seq.empty[GraftSink.Entry]
+        var rewritten = Seq.empty[GraftSink.Entry]
         var binsRewritten = 0L
-        groups.toSeq.sortBy(_._1.toString).foreach { case (part, entries) =>
-          val ordered = entries.sortBy(l =>
-            (-GraftSink.entryRows(l).get, GraftSink.entryName(l)))
+        groups.toSeq.sortBy(_._1.toString).foreach { case (part, members) =>
+          val ordered = members.sortBy(e => (-e.rows.get, e.name))
           var cum = 0L
-          val binned = ordered.map { l =>
+          val binned = ordered.map { e =>
             val bin = cum / maxRows
-            cum += GraftSink.entryRows(l).get
-            (bin, l)
+            cum += e.rows.get
+            (bin, e)
           }.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
           binned.foreach { bin =>
             if (bin.length == 1) untouched :+= bin.head
             else {
-              val names = bin.map(GraftSink.entryName)
-              val liveRows = bin.map(l =>
-                GraftSink.entryRows(l).get - GraftSink.entryDeletes(l).length).sum
+              val names = bin.map(_.name)
               val scratchRoot = graft.ops.Stage.fresh("compact_bins")
               val scratch = scratchRoot.toString + "/bin"
               import org.apache.spark.sql.functions.col
@@ -1447,7 +1429,7 @@ object GraftCatalog {
               val f = GraftSink.fs(p)
               val fin = s"compact-bin-${java.util.UUID.randomUUID().toString.take(8)}.tsv"
               require(f.rename(
-                new HPath(scratch, GraftSink.entryName(sm.files.head)),
+                new HPath(scratch, sm.entries.head.name),
                 new HPath(p, fin)),
                 s"graft catalog: compact_bins failed to publish $fin")
               // the bin file moved out — drop the scratch table's
@@ -1455,24 +1437,16 @@ object GraftCatalog {
               // tree per rewritten bin until JVM exit (long-lived
               // sessions compact repeatedly)
               graft.ops.Stage.release(scratchRoot)
-              // merged stats: per column, the union envelope — kept
-              // only for columns EVERY member carries (conservative: a
-              // member without stats could widen the true range)
-              val perCol = bin.map(l => GraftSink.entryStatsAll(l).groupBy(_._1))
-              val mergedStats = perCol.head.keys.toSeq.sorted
-                .filter(c => perCol.forall(_.contains(c)))
-                .map { c =>
-                  val es = perCol.flatMap(_(c))
-                  (c, es.map(_._2).min, es.map(_._3).max)
-                }
-              rewritten :+= GraftSink.entry(fin, Nil, None, Some(liveRows),
-                if (m.ids.isDefined) Some(ids) else None, part, mergedStats)
+              // the bin's DVs applied on read, so its rows are the
+              // members' live rows; merged stats are the union envelopes
+              rewritten :+= GraftSink.Entry(fin, Nil, GraftSink.Entry.statsUnion(bin),
+                GraftSink.Entry.liveRows(bin), if (m.ids.isDefined) Some(ids) else None, part)
               binsRewritten += 1
             }
           }
         }
         GraftSink.writeManifest(p, GraftSink.Manifest(m.ddl,
-          untouched ++ rewritten, m.ids))
+          (untouched ++ rewritten).map(_.line), m.ids))
         Array[Any](m.files.size.toLong,
           (untouched.size + rewritten.size).toLong, binsRewritten)
       })),
@@ -1547,8 +1521,8 @@ object GraftCatalog {
         val cols = StructType.fromDDL(m.ddl).fieldNames.toSeq
         val sentinel = Long.MaxValue
         // current file states: name -> dv signature
-        val current: Seq[(String, String)] = m.files.map(l =>
-          GraftSink.entryName(l) -> GraftSink.entryDeletes(l).mkString(","))
+        val current: Seq[(String, String)] =
+          m.entries.map(e => e.name -> e.deletes.mkString(","))
         // stored sidecar: (file, dvsig) -> col -> (rows, nulls, sketch)
         val sidecar = new HPath(p, "_colsketch")
         val f = GraftSink.fs(p)
@@ -1797,27 +1771,22 @@ object GraftCatalog {
       case "files" =>
         val m = GraftSink.readManifest(path).getOrElse(
           throw new IllegalArgumentException(s"graft catalog: no table at $path"))
-        m.files.map { l =>
-          val r = GraftSink.entryRows(l)
-          val dv = GraftSink.entryDeletes(l).length.toLong
+        m.entries.map { e =>
           new GenericInternalRow(Array[Any](
-            utf(GraftSink.entryName(l)),
-            r.map(Long.box).orNull,
-            r.map(n => Long.box(n - dv)).orNull,
-            dv,
-            GraftSink.entryPart(l).map(utf).orNull,
-            GraftSink.entryStats(l)
+            utf(e.name),
+            e.rows.map(Long.box).orNull,
+            e.live.map(Long.box).orNull,
+            e.deletes.length.toLong,
+            e.part.map(utf).orNull,
+            e.stats.headOption
               .map { case (c, lo, hi) => utf(s"$c=$lo..$hi") }.orNull,
-            GraftSink.entryCols(l).map(cs => utf(cs.mkString(","))).orNull
+            e.cols.map(cs => utf(cs.mkString(","))).orNull
           )): InternalRow
         }.toArray
       case "snapshots" =>
         GraftSink.listVersions(path).map { v =>
           val m = GraftSink.readManifest(path, Some(v)).get
-          val live = if (m.files.forall(l => GraftSink.entryRows(l).isDefined))
-            Long.box(m.files.map(l =>
-              GraftSink.entryRows(l).get - GraftSink.entryDeletes(l).length).sum)
-          else null
+          val live = GraftSink.Entry.liveRows(m.entries).map(Long.box).orNull
           new GenericInternalRow(Array[Any](
             v.toLong, m.ts.map(Long.box).orNull,
             m.files.size.toLong, live, utf(m.ddl))): InternalRow

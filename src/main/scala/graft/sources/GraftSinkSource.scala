@@ -4,6 +4,7 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.{Map => JMap}
 
+import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -133,67 +134,112 @@ object GraftSink {
     * chunks; expire/remove_orphans GC groups no raw manifest names. */
   val GROUP_PREFIX = "_mgroup."
 
-  // --- manifest file entries -------------------------------------------
-  // A manifest line is `name` plus optional tab-separated segments:
-  //   `dv:p1,p2,...`        — the file's DELETE VECTOR (ascending row
-  //                           positions suppressed on read — merge-on-read:
-  //                           row-level DELETE/UPDATE records positions
-  //                           instead of rewriting data files);
-  //   `stats:col=lo..hi`    — min/max of a BIGINT column across the
-  //                           file's rows (recorded by clustered writes),
-  //                           the FILE-SKIPPING index: a pushed range
-  //                           predicate prunes whole files at planning;
-  //   `rows:n`              — the file's ORIGINAL row count (every
-  //                           commit records it), the metadata-count
-  //                           index: a global count(*) is answered as
-  //                           Σ(rows − |dv|) with zero data reads.
-  // Plain commits write bare names + rows; appends carry prior lines
-  // through unchanged, so DVs, stats and counts survive. Deleting rows
-  // never widens a min/max, so stats stay conservative under DVs; the
-  // DV length is subtracted from `rows` at count time, so counts stay
-  // exact under them.
-  def entryName(line: String): String = {
-    val i = line.indexOf('\t')
-    if (i < 0) line else line.substring(0, i)
+  /** One manifest FILE ENTRY: the single codec of the stored line.
+    * The line is `name` plus optional tab-separated segments, rendered
+    * in this order (a bare name is a legacy entry with none):
+    *  - `dv:p1,p2,...` — the DELETE VECTOR: ascending, distinct row
+    *    positions suppressed on read (merge-on-read: row-level
+    *    DELETE/UPDATE records positions instead of rewriting files);
+    *  - `stats:col=lo..hi`, one per column — the [min, max] of a BIGINT
+    *    column across the file's rows (clustered writes record them; a
+    *    Z-ordered file carries one per interleaved dimension): the
+    *    FILE-SKIPPING index, so a pushed range predicate on ANY recorded
+    *    column prunes whole files at planning;
+    *  - `rows:n` — the ORIGINAL row count (every commit records it): the
+    *    metadata-count index, so a global count(*) is Σ [[live]] with
+    *    zero data reads;
+    *  - `cols:i1,i2,...` — the FIELD IDS the file's TSV ordinals hold,
+    *    in order. Absent = positional (ordinal j holds id j+1), exact for
+    *    any table that never renamed or dropped a column; every commit
+    *    writes it once the table has explicit ids;
+    *  - `part:col=enc(,col=enc)*` — the PARTITION TUPLE every row shares,
+    *    values URL-encoded (NULL = the unencodable marker `\N`): the
+    *    directory-grain pruning index for equality/IN predicates.
+    * Appends carry prior lines through unchanged and every rewrite is a
+    * `copy`, so no segment is lost on the way. Deleting rows never widens
+    * a min/max, so stats stay conservative under DVs, and `rows` stays
+    * original, so counts stay exact under them. */
+  final case class Entry(name: String, deletes: Seq[Long] = Nil,
+      stats: Seq[(String, Long, Long)] = Nil, rows: Option[Long] = None,
+      cols: Option[Seq[Int]] = None, part: Option[String] = None) {
+
+    def line: String = {
+      val b = new StringBuilder(name)
+      if (deletes.nonEmpty) b ++= deletes.sorted.distinct.mkString("\tdv:", ",", "")
+      stats.foreach(t => b ++= "\t" + Entry.statsSegment(t))
+      rows.foreach(n => b ++= s"\trows:$n")
+      cols.foreach(ids => b ++= ids.mkString("\tcols:", ",", ""))
+      part.foreach(p => b ++= s"\tpart:$p")
+      b.result()
+    }
+
+    /** The VISIBLE row count: original rows minus the delete vector. */
+    def live: Option[Long] = rows.map(_ - deletes.length)
+
+    /** The entry after a COLUMN RENAME: `part:` tuple keys (identity and
+      * `bucket(col)` forms) and `stats:` names matching `from` flip to
+      * `to`. Metadata-only: the data file never changes (its values are
+      * positional), and OLD snapshots keep the old keys, so time travel
+      * serves the pre-rename world verbatim. */
+    def renamed(from: String, to: String): Entry = {
+      def key(k: String): String =
+        if (k == from) to else if (k == bucketKey(from)) bucketKey(to) else k
+      copy(
+        stats = stats.map { case (c, lo, hi) => (if (c == from) to else c, lo, hi) },
+        part = part.map(_.split(",").map { kv =>
+          val i = kv.indexOf('=')
+          if (i < 0) kv else key(kv.substring(0, i)) + kv.substring(i)
+        }.mkString(",")))
+    }
   }
 
-  private def segments(line: String): Array[String] = line.split("\t").drop(1)
-
-  def entryDeletes(line: String): Array[Long] =
-    segments(line).find(_.startsWith("dv:")) match {
-      case Some(s) => s.stripPrefix("dv:").split(",").filter(_.nonEmpty).map(_.toLong)
-      case None => Array.empty
+  object Entry {
+    /** Split `line` once into its fields (the first segment of each
+      * single-valued kind wins; every `stats:` segment is kept). */
+    def parse(line: String): Entry = {
+      val segs = line.split('\t')
+      def first(tag: String): Option[String] =
+        segs.iterator.drop(1).find(_.startsWith(tag)).map(_.substring(tag.length))
+      def list(body: String): Array[String] = body.split(',').filter(_.nonEmpty)
+      Entry(segs(0),
+        first("dv:").fold(Seq.empty[Long])(b => ArraySeq.unsafeWrapArray(list(b).map(_.toLong))),
+        statsIn(segs),
+        first("rows:").map(_.toLong),
+        first("cols:").map(b => ArraySeq.unsafeWrapArray(list(b).map(_.toInt))),
+        first("part:"))
     }
 
-  /** (column, min, max) of the file's recorded stats, if any. */
-  def entryStats(line: String): Option[(String, Long, Long)] =
-    entryStatsAll(line).headOption
+    /** The `stats:` envelopes of ANY manifest line — an entry, or a
+      * `group:` summary line, whose envelopes share this grammar. */
+    def statsOf(line: String): Seq[(String, Long, Long)] = statsIn(line.split('\t'))
 
-  /** ALL recorded per-column [min, max] envelopes of a file (one
-    * `stats:` segment per column — a Z-ordered file carries one per
-    * interleaved dimension, which is what makes a 2-dim range query
-    * prune on EITHER column). */
-  def entryStatsAll(line: String): Seq[(String, Long, Long)] =
-    segments(line).filter(_.startsWith("stats:")).map { s =>
-      val body = s.stripPrefix("stats:")
-      val eq = body.indexOf('=')
-      val dd = body.indexOf("..", eq)
-      (body.substring(0, eq), body.substring(eq + 1, dd).toLong,
-        body.substring(dd + 2).toLong)
-    }
+    private def statsIn(segs: Array[String]): Seq[(String, Long, Long)] =
+      segs.iterator.drop(1).filter(_.startsWith("stats:")).map { s =>
+        val eq = s.indexOf('=')
+        val dd = s.indexOf("..", eq)
+        (s.substring(6, eq), s.substring(eq + 1, dd).toLong, s.substring(dd + 2).toLong)
+      }.toSeq
 
-  /** The file's recorded ORIGINAL row count, if any. */
-  def entryRows(line: String): Option[Long] =
-    segments(line).find(_.startsWith("rows:")).map(_.stripPrefix("rows:").toLong)
+    def statsSegment(t: (String, Long, Long)): String = s"stats:${t._1}=${t._2}..${t._3}"
 
-  /** The file's PARTITION TUPLE (`part:` segment): `col=enc(,col=enc)*`
-    * — the identity-transform values every row in the file shares,
-    * URL-encoded (so values with separators round-trip; NULL = the
-    * unencodable marker `\N`). The directory-grain pruning index:
-    * an equality/IN predicate on a partition column skips whole files
-    * at planning, exactly. */
-  def entryPart(line: String): Option[String] =
-    segments(line).find(_.startsWith("part:")).map(_.stripPrefix("part:"))
+    /** Σ [[Entry.live]]: the exact visible-row count of `es`, absent when
+      * some entry predates `rows:` segments. */
+    def liveRows(es: Seq[Entry]): Option[Long] =
+      es.foldLeft(Option(0L))((acc, e) => for (a <- acc; n <- e.live) yield a + n)
+
+    /** Per column, the union [min, max] of `es`'s envelopes, kept only
+      * for the columns EVERY entry records (an entry without stats
+      * could widen the true range), sorted by column. */
+    def statsUnion(es: Seq[Entry]): Seq[(String, Long, Long)] =
+      if (es.isEmpty) Nil
+      else {
+        val perCol = es.map(_.stats.groupBy(_._1))
+        perCol.map(_.keySet).reduce(_ intersect _).toSeq.sorted.map { c =>
+          val all = perCol.flatMap(_(c))
+          (c, all.map(_._2).min, all.map(_._3).max)
+        }
+      }
+  }
 
   def encodePartValue(v: Any): String =
     if (v == null) "\\N"
@@ -219,65 +265,6 @@ object GraftSink {
       }
     }
 
-  /** The file's recorded FIELD-ID list (`cols:` segment): which stable
-    * column ids its TSV ordinals hold, in order. Absent = positional
-    * (ordinal j holds id j+1) — exact for any table that never renamed
-    * or dropped a column. Written by every commit once the table has
-    * explicit ids (i.e. after its first rename/drop migration). */
-  def entryCols(line: String): Option[Array[Int]] =
-    segments(line).find(_.startsWith("cols:"))
-      .map(_.stripPrefix("cols:").split(",").filter(_.nonEmpty).map(_.toInt))
-
-  def entry(name: String, deletes: Seq[Long],
-      stats: Option[(String, Long, Long)] = None,
-      rows: Option[Long] = None,
-      cols: Option[Seq[Int]] = None,
-      part: Option[String] = None,
-      moreStats: Seq[(String, Long, Long)] = Nil): String = {
-    val dv = if (deletes.isEmpty) ""
-             else s"\tdv:${deletes.sorted.distinct.mkString(",")}"
-    val st = (stats.toSeq ++ moreStats)
-      .map { case (c, lo, hi) => s"\tstats:$c=$lo..$hi" }.mkString
-    val rc = rows.fold("")(n => s"\trows:$n")
-    val cl = cols.fold("")(ids => s"\tcols:${ids.mkString(",")}")
-    val pt = part.fold("")(p => s"\tpart:$p")
-    s"$name$dv$st$rc$cl$pt"
-  }
-
-  /** Rekey a manifest line's per-column metadata after a COLUMN
-    * RENAME: `part:` tuple keys (identity and `bucket(col)` forms) and
-    * `stats:` envelope names matching `from` flip to `to`; everything
-    * else — dv, rows, cols ids, segment ORDER — is byte-preserved.
-    * Metadata-only: the data file itself never changes (its values are
-    * positional), and OLD snapshots keep the old keys, so time travel
-    * serves the pre-rename world verbatim. */
-  def rekeyEntry(line: String, from: String, to: String): String = {
-    val parts = line.split("\t")
-    (parts.head +: parts.tail.map { seg =>
-      if (seg.startsWith("stats:")) {
-        val body = seg.stripPrefix("stats:")
-        val eq = body.indexOf('=')
-        if (eq > 0 && body.substring(0, eq) == from)
-          s"stats:$to${body.substring(eq)}"
-        else seg
-      } else if (seg.startsWith("part:")) {
-        val rekeyed = seg.stripPrefix("part:").split(",").map { kv =>
-          val i = kv.indexOf('=')
-          if (i < 0) kv
-          else {
-            val k = kv.substring(0, i)
-            val nk =
-              if (k == from) to
-              else if (k == bucketKey(from)) bucketKey(to)
-              else k
-            s"$nk${kv.substring(i)}"
-          }
-        }.mkString(",")
-        s"part:$rekeyed"
-      } else seg
-    }).mkString("\t")
-  }
-
   // --- two-level manifest metadata (group files) ----------------------
 
   /** Durable `write.*` prop: group the manifest body once a snapshot's
@@ -296,13 +283,8 @@ object GraftSink {
   def isGroupLine(line: String): Boolean = line.startsWith("group:")
 
   def groupLineName(line: String): String =
-    entryName(line).stripPrefix("group:")
+    line.takeWhile(_ != '\t').stripPrefix("group:")
 
-  /** The group line's per-column DISTINCT partition-value sets
-    * (`pvals:` segments — URL-encoding makes '|' a safe separator). A
-    * column appears ONLY if every member file carries a tag for it, so
-    * group-level pruning is exactly as conservative as the per-entry
-    * rule it summarizes (a member without the tag would survive). */
   /** The group's exact VISIBLE row total (Σ(rows − |dv|) over its
     * members, recorded at chunk-write time) — absent when some member
     * predates `rows:` segments. */
@@ -310,6 +292,11 @@ object GraftSink {
     line.split("\t").drop(1).find(_.startsWith("vrows:"))
       .map(_.stripPrefix("vrows:").toLong)
 
+  /** The group line's per-column DISTINCT partition-value sets
+    * (`pvals:` segments — URL-encoding makes '|' a safe separator). A
+    * column appears ONLY if every member file carries a tag for it, so
+    * group-level pruning is exactly as conservative as the per-entry
+    * rule it summarizes (a member without the tag would survive). */
   def groupPartVals(line: String): Map[String, Set[String]] =
     line.split("\t").drop(1).filter(_.startsWith("pvals:")).map { s =>
       val body = s.stripPrefix("pvals:")
@@ -328,17 +315,14 @@ object GraftSink {
     * summaries are strictly conservative supersets of what the member
     * entries allow, so pruning a whole group can never drop a file the
     * per-entry rule would keep. */
-  private def groupSummary(name: String, members: Seq[String]): String = {
+  private def groupSummary(name: String, members: Seq[Entry]): String = {
     val files = s"\tfiles:${members.size}"
-    val rs = members.map(entryRows)
     // vrows = Σ(rows − |dv|), exact because a chunk is immutable: any
     // DV change regroups its manifest and recomputes the summary —
     // what lets count(*) stay metadata-only WITHOUT opening chunks
-    val rows = if (rs.nonEmpty && rs.forall(_.isDefined))
-      s"\trows:${rs.map(_.get).sum}\tvrows:${members.map(l =>
-        entryRows(l).get - entryDeletes(l).length).sum}"
-    else ""
-    val parts = members.map(l => entryPart(l).map(partPairs).getOrElse(Map.empty[String, String]))
+    val rows = Entry.liveRows(members)
+      .fold("")(v => s"\trows:${members.flatMap(_.rows).sum}\tvrows:$v")
+    val parts = members.map(_.part.map(partPairs).getOrElse(Map.empty[String, String]))
     val common =
       if (parts.isEmpty) Set.empty[String]
       else parts.map(_.keySet).reduce(_ intersect _)
@@ -346,13 +330,7 @@ object GraftSink {
       val vs = parts.map(_(c)).distinct
       if (vs.size <= 16) Some(s"\tpvals:$c=${vs.sorted.mkString("|")}") else None
     }.mkString
-    val statss = members.map(l => entryStatsAll(l).map(t => t._1 -> ((t._2, t._3))).toMap)
-    val scommon =
-      if (statss.isEmpty) Set.empty[String]
-      else statss.map(_.keySet).reduce(_ intersect _)
-    val st = scommon.toSeq.sorted.map { c =>
-      s"\tstats:$c=${statss.map(_(c)._1).min}..${statss.map(_(c)._2).max}"
-    }.mkString
+    val st = Entry.statsUnion(members).map("\t" + Entry.statsSegment(_)).mkString
     s"group:$name$files$rows$pv$st"
   }
 
@@ -369,13 +347,14 @@ object GraftSink {
     val size = groupSize(path)
     if (m.files.size < math.max(2, size) || m.files.exists(isGroupLine)) m
     else {
-      val sorted = m.files.sortBy(l => (entryPart(l).getOrElse(""), entryName(l)))
+      val sorted = m.files.map(l => (l, Entry.parse(l)))
+        .sortBy { case (_, e) => (e.part.getOrElse(""), e.name) }
       val lines = sorted.grouped(size).map { chunk =>
-        val body = chunk.mkString("\n").getBytes(StandardCharsets.UTF_8)
+        val body = chunk.map(_._1).mkString("\n").getBytes(StandardCharsets.UTF_8)
         val name = GROUP_PREFIX + md5hex(body)
         val gp = new HPath(path, name)
         if (!f.exists(gp)) atomicOverwrite(f, gp, body)
-        groupSummary(name, chunk)
+        groupSummary(name, chunk.map(_._2))
       }.toSeq
       m.copy(files = lines)
     }
@@ -459,13 +438,33 @@ object GraftSink {
   def manifestIds(m: Manifest): Seq[Int] =
     m.ids.getOrElse(1 to StructType.fromDDL(m.ddl).length)
 
+  /** The connector-served row-id columns (the merge-on-read delete
+    * surface) and their negative field-id sentinels. */
+  val ROW_ID_SENTINELS: Map[String, Int] = Map("_file" -> -1, "_pos" -> -2)
+
+  /** For each REQUIRED column: its stable FIELD ID (`tableIds` is
+    * aligned with `data`), or the negative sentinel `served` gives a
+    * connector-served column. DATA columns win over the sentinels
+    * (matching Spark's metadataOutput conflict rule) — checkSchema
+    * rejects the reserved names for new tables, but a pre-restriction
+    * table may legitimately carry them. Per-file ordinals resolve at
+    * planning ([[fileOrdinals]]). */
+  def requiredIds(required: StructType, data: StructType, tableIds: Seq[Int],
+      served: Map[String, Int]): Array[Int] =
+    required.fieldNames.map { n =>
+      val j = data.fieldNames.indexOf(n)
+      if (j >= 0) tableIds(j)
+      else served.getOrElse(n,
+        throw new IllegalArgumentException(s"graftsink: unknown column '$n'"))
+    }
+
   /** Resolve requested field ids to TSV ordinals for ONE file:
     * negative sentinels pass through (connector-served columns);
     * explicit `cols:` files map id → position; implicit files are
     * positional (ordinal = id − 1); an id the file never carried maps
     * to [[MISSING_ORDINAL]] (NULL back-fill — the column was added,
     * renamed around, or the file predates it). */
-  def fileOrdinals(reqIds: Array[Int], fileCols: Option[Array[Int]]): Array[Int] =
+  def fileOrdinals(reqIds: Array[Int], fileCols: Option[Seq[Int]]): Array[Int] =
     reqIds.map {
       case s if s < 0 => s
       case id => fileCols match {
@@ -551,7 +550,7 @@ object GraftSink {
     * otherwise survivors mode (all rows except `skipDeletes`). */
   final case class ChangeFile(name: String, commitVersion: Int, change: String,
       skipDeletes: Array[Long], onlyPositions: Array[Long],
-      cols: Option[Array[Int]] = None)
+      cols: Option[Seq[Int]] = None)
 
   /** The file-grain delta of every commit in (from, to]: per consecutive
     * snapshot pair, files that entered serve their surviving rows as
@@ -571,22 +570,22 @@ object GraftSink {
     (from + 1 to to).flatMap { v =>
       val prev = manifest(v - 1)
       val cur = manifest(v)
-      val prevMap = prev.files.map(l => entryName(l) -> l).toMap
-      val curNames = cur.files.map(entryName).toSet
-      val added = cur.files.filterNot(l => prevMap.contains(entryName(l))).map { l =>
-        ChangeFile(entryName(l), v, "insert", entryDeletes(l), Array.empty,
-          entryCols(l))
+      val prevEntries = prev.entries
+      val curEntries = cur.entries
+      val prevMap = prevEntries.map(e => e.name -> e).toMap
+      val curNames = curEntries.map(_.name).toSet
+      val added = curEntries.filterNot(e => prevMap.contains(e.name)).map { e =>
+        ChangeFile(e.name, v, "insert", e.deletes.toArray, Array.empty, e.cols)
       }
-      val removed = prev.files.filterNot(l => curNames(entryName(l))).map { l =>
-        ChangeFile(entryName(l), v, "delete", entryDeletes(l), Array.empty,
-          entryCols(l))
+      val removed = prevEntries.filterNot(e => curNames(e.name)).map { e =>
+        ChangeFile(e.name, v, "delete", e.deletes.toArray, Array.empty, e.cols)
       }
-      val dvDeletes = cur.files.flatMap { l =>
-        prevMap.get(entryName(l)).flatMap { pl =>
-          val newDels = entryDeletes(l).toSet -- entryDeletes(pl)
+      val dvDeletes = curEntries.flatMap { e =>
+        prevMap.get(e.name).flatMap { pe =>
+          val newDels = e.deletes.toSet -- pe.deletes
           if (newDels.isEmpty) None
-          else Some(ChangeFile(entryName(l), v, "delete", Array.empty,
-            newDels.toArray.sorted, entryCols(l)))
+          else Some(ChangeFile(e.name, v, "delete", Array.empty,
+            newDels.toArray.sorted, e.cols))
         }
       }
       added ++ removed ++ dvDeletes
@@ -668,7 +667,11 @@ object GraftSink {
     * pointers/refs as before. */
   final case class Manifest(ddl: String, files: Seq[String],
       ids: Option[Seq[Int]] = None, ts: Option[Long] = None,
-      ref: Option[String] = None)
+      ref: Option[String] = None) {
+    /** `files` parsed. Only for an EXPANDED manifest: a raw one may hold
+      * `group:` summary lines, which are not entries. */
+    def entries: Seq[Entry] = files.map(Entry.parse)
+  }
 
   private def manifestName(version: Option[Int]): String =
     version.fold(MANIFEST)(v => s"$MANIFEST.v$v")
@@ -1830,14 +1833,6 @@ case class GraftSinkCommit(stagedFile: String, partitionId: Int, rows: Long,
   * survivor filtering, a delete-vector fold, epoch-replay detection. */
 private[graft] object StagedCommit {
 
-  /** One published data file: its final name under the table root and
-    * everything its manifest entry records besides the field ids. */
-  final case class Published(name: String, rows: Long,
-      part: Option[String] = None, stats: Seq[(String, Long, Long)] = Nil) {
-    def entry(ids: Option[Seq[Int]]): String =
-      GraftSink.entry(name, Nil, stats.headOption, Some(rows), ids, part, stats.drop(1))
-  }
-
   /** How a surface words the two shared refusals (callers match on
     * these texts): the stale-base replace and the append schema
     * mismatch. */
@@ -1857,9 +1852,10 @@ private[graft] object StagedCommit {
     * `replaceGhost` deletes a file already at the final name first: a
     * crash AFTER the rename but BEFORE the manifest write leaves an
     * unreferenced ghost there, and the replayed epoch must be able to
-    * re-publish over it. */
+    * re-publish over it. Each file comes back as its manifest entry
+    * with `rows` set; [[plan]] adds the field ids. */
   def publish(path: String, prefix: String, messages: Array[WriterCommitMessage],
-      replaceGhost: Boolean = false): Seq[Published] = {
+      replaceGhost: Boolean = false): Seq[GraftSink.Entry] = {
     val f = GraftSink.fs(path)
     def move(staged: String, fin: String): String = {
       val dest = new HPath(path, fin)
@@ -1870,15 +1866,16 @@ private[graft] object StagedCommit {
     }
     messages.toSeq.flatMap {
       case c: GraftSinkCommit =>
-        Seq(Published(move(c.stagedFile, s"${prefix}part-${c.partitionId}.tsv"),
-          c.rows, None, c.stats))
+        Seq(GraftSink.Entry(move(c.stagedFile, s"${prefix}part-${c.partitionId}.tsv"),
+          stats = c.stats, rows = Some(c.rows)))
       case c: GraftSinkPartitionedCommit =>
         c.files.zipWithIndex.map { case ((staged, part, rows), i) =>
-          Published(move(staged, s"${prefix}part-${c.partitionId}-$i.tsv"),
-            rows, Some(part))
+          GraftSink.Entry(move(staged, s"${prefix}part-${c.partitionId}-$i.tsv"),
+            rows = Some(rows), part = Some(part))
         }
       case c: GraftSinkDeltaCommit if c.stagedFile.nonEmpty =>
-        Seq(Published(move(c.stagedFile, s"${prefix}part-${c.partitionId}.tsv"), c.rows))
+        Seq(GraftSink.Entry(move(c.stagedFile, s"${prefix}part-${c.partitionId}.tsv"),
+          rows = Some(c.rows)))
       case _ => Nil
     }
   }
@@ -1901,7 +1898,7 @@ private[graft] object StagedCommit {
     *    default; a lost race therefore REBASES onto the interloper's
     *    files), and the table's DDL is kept, widened to nullable where
     *    the write is. */
-  def plan(path: String, schema: StructType, published: Seq[Published],
+  def plan(path: String, schema: StructType, published: Seq[GraftSink.Entry],
       wording: Wording, replace: Boolean = false, guarded: Boolean = false,
       seed: Option[Option[Long]] = None, branch: Option[String] = None,
       checkAppend: Boolean = true,
@@ -1919,7 +1916,7 @@ private[graft] object StagedCommit {
           s"graftsink: concurrent commit during ${wording.replace} at $path${wording.replaceTail}")
       seenBase = Some(baseTs)
       if (replace)
-        GraftSink.Manifest(GraftSink.cleanDdl(schema), published.map(_.entry(None)), None)
+        GraftSink.Manifest(GraftSink.cleanDdl(schema), published.map(_.line), None)
       else {
         if (checkAppend) prior.foreach { m =>
           require(GraftSink.schemaCompatible(m.ddl, schema),
@@ -1928,7 +1925,7 @@ private[graft] object StagedCommit {
         }
         val ids = prior.flatMap(_.ids)
         val ddl = prior.fold(GraftSink.cleanDdl(schema))(m => GraftSink.widenedDdl(m.ddl, schema))
-        GraftSink.Manifest(ddl, keep(prior) ++ published.map(_.entry(ids)), ids)
+        GraftSink.Manifest(ddl, keep(prior) ++ published.map(_.copy(cols = ids).line), ids)
       }
     }
   }
@@ -2114,11 +2111,11 @@ class GraftSinkPartitionedBatchWrite(path: String, schema: StructType,
         // until those files are rewritten into the current spec.
         // (Untagged pre-partitioning files keep their documented
         // always-survive semantics — they predate ANY spec.)
+        lazy val priorParts = priorFiles.map(l => l -> GraftSink.Entry.parse(l).part)
         if (partial) {
           val expected = partCols.toSet
-          val alien = priorFiles.filter(l =>
-            GraftSink.entryPart(l).exists(b =>
-              GraftSink.partPairs(b).keySet != expected))
+          val alien = priorParts.filter(_._2.exists(b =>
+            GraftSink.partPairs(b).keySet != expected))
           require(alien.isEmpty,
             s"graftsink: partial overwrite at $path found ${alien.size} file(s) " +
               "tagged under an older partition spec — rewrite them into the " +
@@ -2128,10 +2125,10 @@ class GraftSinkPartitionedBatchWrite(path: String, schema: StructType,
           // replace EXACTLY the tuples the incoming data touches;
           // untagged (pre-partitioning) entries always survive
           val touched = published.flatMap(_.part).toSet
-          priorFiles.filterNot(l => GraftSink.entryPart(l).exists(touched))
+          priorParts.filterNot(_._2.exists(touched)).map(_._1)
         } else replaceWhere match {
           case Some(allowed) =>
-            priorFiles.filterNot(l => GraftSink.entryPart(l).exists(tupleMatches(_, allowed)))
+            priorParts.filterNot(_._2.exists(tupleMatches(_, allowed))).map(_._1)
           case None => priorFiles
         }
       }))
@@ -2271,7 +2268,7 @@ class GraftSinkDeltaBatchWrite(path: String, schema: StructType, queryId: String
     // merge the tasks' delete vectors per file
     val delMap = messages.collect { case c: GraftSinkDeltaCommit => c }
       .flatMap(_.deletes.toSeq).groupBy(_._1)
-      .map { case (n, xs) => n -> xs.flatMap(_._2) }
+      .map { case (n, xs) => n -> xs.toSeq.flatMap(_._2) }
     // inserts publish like an ordinary append. A lost slot race re-folds
     // the delete vectors onto the NEW base (a concurrent append's files
     // survive untouched; our positions target the same files they
@@ -2285,21 +2282,15 @@ class GraftSinkDeltaBatchWrite(path: String, schema: StructType, queryId: String
       StagedCommit.DeltaWording, checkAppend = schema.nonEmpty, keep = { base =>
         val prior = base.getOrElse(throw new IllegalStateException(
           s"graftsink: delta commit on empty table at $path"))
-        val names = prior.files.map(GraftSink.entryName).toSet
+        val entries = prior.entries
+        val names = entries.map(_.name).toSet
         val unknown = delMap.keys.filterNot(names)
         require(unknown.isEmpty,
           s"graftsink: delete vector targets unknown files: ${unknown.mkString(", ")}")
-        // DVs fold into the EXISTING entries (data files untouched)
-        prior.files.map { line =>
-          val n = GraftSink.entryName(line)
-          GraftSink.entry(n,
-            (GraftSink.entryDeletes(line) ++ delMap.getOrElse(n, Array.empty)).toSeq,
-            None,
-            GraftSink.entryRows(line),  // rows stay ORIGINAL; counts subtract |dv|
-            GraftSink.entryCols(line).map(_.toSeq), // file layout carries through
-            GraftSink.entryPart(line),              // partition tuple too
-            GraftSink.entryStatsAll(line)) // deletes never widen a min/max
-        }
+        // DVs fold into the EXISTING entries (data files untouched);
+        // every other segment carries through — rows stay ORIGINAL
+        // (counts subtract |dv|), and deletes never widen a min/max
+        entries.map(e => e.copy(deletes = e.deletes ++ delMap.getOrElse(e.name, Nil)).line)
       }))
     StagedCommit.dropStaging(path, queryId)
   }
@@ -2384,7 +2375,7 @@ class GraftSinkStreamingWrite(path: String, schema: StructType,
     // a replayed epoch (the previous run committed this batch but died
     // before checkpointing the commit) is already in the manifest: only
     // its duplicate staging is dropped
-    if (!GraftSink.mainHead(path).exists(_.files.exists(_.startsWith(marker)))) {
+    if (!GraftSink.mainHead(path).exists(_.entries.exists(_.name.startsWith(marker)))) {
       val published = StagedCommit.publish(path, marker, messages, replaceGhost = true)
       // a concurrent BATCH append onto a streamed table rebases cleanly
       // under this epoch's commit (the batch append contract)
@@ -2483,7 +2474,7 @@ class GraftSinkScanBuilder(path: String, full: StructType,
       GraftSink.readManifestRaw(path, version)
         .exists(m => m.files.forall(l =>
           if (GraftSink.isGroupLine(l)) GraftSink.groupVisibleRows(l).isDefined
-          else GraftSink.entryRows(l).isDefined))
+          else GraftSink.Entry.parse(l).rows.isDefined))
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -2565,10 +2556,9 @@ class GraftSinkCountScan(path: String, version: Option[Int])
           throw new IllegalStateException(
             s"graftsink: count pushdown on a group without vrows: $l"))
       else
-        GraftSink.entryRows(l).getOrElse(
+        GraftSink.Entry.parse(l).live.getOrElse(
           throw new IllegalStateException(
-            s"graftsink: count pushdown on an entry without rows: $l")) -
-          GraftSink.entryDeletes(l).length
+            s"graftsink: count pushdown on an entry without rows: $l"))
     }.sum
   }
 
@@ -2696,13 +2686,13 @@ class GraftSinkScan(path: String, full: StructType, required: StructType,
     GraftSink.readManifestRaw(path, version).getOrElse(
       throw new IllegalArgumentException(s"graftsink: no committed table at $path"))
 
-  /** The SURVIVING manifest lines after stats-envelope file skipping
+  /** The SURVIVING manifest entries after stats-envelope file skipping
     * and partition pruning. On a GROUPED manifest (the two-level
     * metadata tree) pruning runs at the GROUP grain first: a group
     * whose pvals/stats summary cannot match is never even READ —
     * planning a pruned query on a million-file table touches only the
     * matching groups' chunk files, the Iceberg-manifest-tree shape. */
-  private def plannedLines: Seq[String] = {
+  private def plannedEntries: Seq[GraftSink.Entry] = {
     val m = manifest
     val allowed = (partAllowed.toSeq ++ runtimeAllowed.toSeq)
       .groupBy(_._1).map { case (c, vs) => c -> vs.map(_._2).reduce(_ intersect _) }
@@ -2712,8 +2702,8 @@ class GraftSinkScan(path: String, full: StructType, required: StructType,
     // recorded per-column envelope must overlap its pushed envelope —
     // a Z-ordered file (stats on both interleaved dims) is skippable
     // by a predicate on EITHER column.
-    def statsOk(line: String): Boolean =
-      GraftSink.entryStatsAll(line).forall { case (col, lo, hi) =>
+    def statsOk(stats: Seq[(String, Long, Long)]): Boolean =
+      stats.forall { case (col, lo, hi) =>
         envelopes.get(col) match {
           case Some((elo, ehi)) => hi >= elo && lo <= ehi
           case None => true
@@ -2724,20 +2714,20 @@ class GraftSinkScan(path: String, full: StructType, required: StructType,
     // planned — exact (every row in the file shares the tuple), so
     // this is the directory-grain prune; files without a tuple
     // (unpartitioned history) survive
-    def partOk(line: String): Boolean =
-      allowed.isEmpty || (GraftSink.entryPart(line) match {
+    def partOk(e: GraftSink.Entry): Boolean =
+      allowed.isEmpty || (e.part match {
         case Some(body) =>
           val pairs = GraftSink.partPairs(body)
           allowed.forall { case (c, set) => pairs.get(c).forall(set) }
         case None => true
       })
-    def entryOk(line: String): Boolean = statsOk(line) && partOk(line)
+    def entryOk(e: GraftSink.Entry): Boolean = statsOk(e.stats) && partOk(e)
     // GROUP pruning mirrors both rules against the summary (built as a
     // conservative superset of its members — see groupSummary): a
     // group survives unless a pushed constraint provably excludes
     // EVERY member.
     def groupOk(line: String): Boolean = {
-      val sOk = statsOk(line) // stats: segments reuse the entry format
+      val sOk = statsOk(GraftSink.Entry.statsOf(line)) // same stats: grammar
       val pv = GraftSink.groupPartVals(line)
       val pOk = allowed.forall { case (c, set) =>
         pv.get(c).forall(vs => (vs intersect set).nonEmpty)
@@ -2753,21 +2743,19 @@ class GraftSinkScan(path: String, full: StructType, required: StructType,
         val all = m.files.flatMap(l =>
           if (GraftSink.isGroupLine(l))
             GraftSink.readGroup(path, GraftSink.groupLineName(l))
-          else Seq(l))
-        val names = all.map(GraftSink.entryName).toSet
-        val missing = sub -- names
+          else Seq(l)).map(GraftSink.Entry.parse)
+        val missing = sub -- all.map(_.name)
         require(missing.isEmpty,
           s"graftsink: option 'files' names entries not in the snapshot: " +
             s"${missing.toSeq.sorted.mkString(", ")}")
-        all.filter(l => sub(GraftSink.entryName(l)) && entryOk(l))
+        all.filter(e => sub(e.name) && entryOk(e))
       case None =>
         m.files.flatMap { l =>
           if (GraftSink.isGroupLine(l)) {
             if (!groupOk(l)) Nil
             else GraftSink.readGroup(path, GraftSink.groupLineName(l))
-              .filter(entryOk)
-          } else if (entryOk(l)) Seq(l)
-          else Nil
+              .map(GraftSink.Entry.parse).filter(entryOk)
+          } else Some(GraftSink.Entry.parse(l)).filter(entryOk)
         }
     }
   }
@@ -2784,20 +2772,18 @@ class GraftSinkScan(path: String, full: StructType, required: StructType,
     * none. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val f = GraftSink.fs(path)
-    val lines = plannedLines
-    val raw = lines.map { line =>
-      val p = new HPath(path, GraftSink.entryName(line))
+    val entries = plannedEntries
+    val raw = entries.map { e =>
+      val p = new HPath(path, e.name)
       if (f.exists(p)) f.getFileStatus(p).getLen else 0L
     }.sum
     val ratio =
       if (full.fields.isEmpty) 1.0
       else math.max(1, required.fields.length).toDouble / full.fields.length
     val bytes = math.max(1L, (raw * ratio).toLong)
-    val rows: java.util.OptionalLong =
-      if (lines.nonEmpty && lines.forall(l => GraftSink.entryRows(l).isDefined))
-        java.util.OptionalLong.of(lines.map(l =>
-          GraftSink.entryRows(l).get - GraftSink.entryDeletes(l).length).sum)
-      else java.util.OptionalLong.empty()
+    val rows: java.util.OptionalLong = GraftSink.Entry.liveRows(entries)
+      .filter(_ => entries.nonEmpty)
+      .fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     // ANALYZE-computed per-column NDV/null-count (q389) — served ONLY
     // when the stored stats describe exactly what this scan reads: the
     // stats' snapshot must BE the scan's snapshot (any later commit
@@ -2834,36 +2820,19 @@ class GraftSinkScan(path: String, full: StructType, required: StructType,
     }
   }
 
-  /** For each REQUIRED column: its stable FIELD ID in the table, or a
-    * negative sentinel for the connector-served columns (_file/_pos —
-    * the row-id surface for merge-on-read deletes). DATA columns win
-    * over the sentinels (matching Spark's metadataOutput conflict
-    * rule) — checkSchema rejects the reserved names for new tables,
-    * but a pre-restriction table may legitimately carry them. */
-  private def requiredIds: Array[Int] = {
-    val tableIds = GraftSink.manifestIds(manifest)
-    required.fieldNames.map { n =>
-      val j = full.fieldNames.indexOf(n)
-      if (j >= 0) tableIds(j)
-      else n match {
-        case "_file" => -1
-        case "_pos" => -2
-        case other => throw new IllegalArgumentException(
-          s"graftsink: unknown column '$other'")
-      }
-    }
-  }
+  private def requiredIds: Array[Int] =
+    GraftSink.requiredIds(required, full, GraftSink.manifestIds(manifest),
+      GraftSink.ROW_ID_SENTINELS)
 
   override def planInputPartitions(): Array[InputPartition] = {
     // id → ordinal resolved PER FILE at planning (renames/drops make the
     // table-schema position diverge from the file ordinal; `cols:`
     // entries carry each file's actual layout)
     val reqIds = requiredIds
-    val files = plannedLines.map { line =>
-      val n = GraftSink.entryName(line)
-      (GraftSinkFilePartition(s"$path/$n", n, GraftSink.entryDeletes(line),
-        GraftSink.fileOrdinals(reqIds, GraftSink.entryCols(line))),
-        GraftSink.entryPart(line))
+    val files = plannedEntries.map { e =>
+      (GraftSinkFilePartition(s"$path/${e.name}", e.name, e.deletes.toArray,
+        GraftSink.fileOrdinals(reqIds, e.cols)),
+        e.part)
     }
     if (!grouped) files.map(_._1: InputPartition).toArray
     else {
@@ -3007,28 +2976,16 @@ class GraftSinkChangelogScan(path: String, full: StructType,
     s"GraftSinkChangelogScan($path, from=v$from, to=${to.fold("latest")(v => s"v$v")}, " +
       s"cols=${required.fieldNames.mkString(",")})"
 
-  /** For each required column: its stable FIELD ID in the range-end
-    * schema, or a negative sentinel for the connector-served columns.
-    * Data columns that predate the reserved-name restriction win over
-    * sentinels; per-file ordinals resolve at planning (renames/drops). */
+  /** Field ids against the RANGE-END schema; the change pair are two
+    * more connector-served sentinels. */
   private def requiredIds: Array[Int] = {
     val data = StructType(full.fields.filterNot(f =>
       f.name == GraftSink.CHANGE_COL || f.name == GraftSink.CHANGE_VERSION_COL))
     val tableIds = GraftSink.readManifestRaw(path, to) // head-only: ids
       .map(GraftSink.manifestIds)
       .getOrElse(1 to data.length)
-    required.fieldNames.map { n =>
-      val j = data.fieldNames.indexOf(n)
-      if (j >= 0) tableIds(j)
-      else n match {
-        case GraftSink.CHANGE_COL => -3
-        case GraftSink.CHANGE_VERSION_COL => -4
-        case "_file" => -1
-        case "_pos" => -2
-        case other => throw new IllegalArgumentException(
-          s"graftsink: unknown column '$other'")
-      }
-    }
+    GraftSink.requiredIds(required, data, tableIds, GraftSink.ROW_ID_SENTINELS ++
+      Map(GraftSink.CHANGE_COL -> -3, GraftSink.CHANGE_VERSION_COL -> -4))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -3071,7 +3028,7 @@ class GraftSinkChangeReaderFactory(types: Array[DataType])
     val fileName = UTF8String.fromString(p.name)
     val change = UTF8String.fromString(p.change)
     val version = p.commitVersion.toLong
-    val skips = p.skipDeletes  // ascending (entry() sorts)
+    val skips = p.skipDeletes  // ascending (Entry.line sorts)
     val onlys = p.onlyPositions // ascending by construction
     val positionsMode = onlys.nonEmpty
     new PartitionReader[InternalRow] {
@@ -3202,7 +3159,7 @@ class GraftSinkReaderFactory(types: Array[DataType],
     val file = p.file
     val fileName = UTF8String.fromString(p.name)
     val srcIdx = p.srcIdx // per-file ordinals (field-id resolved at planning)
-    val dels = p.deletes // ascending by construction (entry() sorts)
+    val dels = p.deletes // ascending by construction (Entry.line sorts)
     new PartitionReader[InternalRow] {
       private val in = new BufferedReader(new InputStreamReader(
         GraftSink.openIn(GraftSink.fs(file), new HPath(file)), StandardCharsets.UTF_8))

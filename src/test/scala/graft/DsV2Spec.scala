@@ -487,7 +487,7 @@ class DsV2Spec extends AnyFunSuite with Matchers with SharedSpark {
     val manifest = graft.sources.GraftSink.readManifest(dir).get
     manifest.files.length shouldBe 4
     val perFile = manifest.files.map { line =>
-      val f = graft.sources.GraftSink.entryName(line) // lines carry stats segments
+      val f = graft.sources.GraftSink.Entry.parse(line).name // lines carry stats segments
       java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dir, f)).asScala
         .map(_.split("\t")(0).toLong).toVector
     }

@@ -81,7 +81,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
     // snapshots reference them) but the latest read never serves them
     preFiles.foreach { f =>
       GraftSink.fs(path).exists(
-        new org.apache.hadoop.fs.Path(path, GraftSink.entryName(f))) shouldBe true
+        new org.apache.hadoop.fs.Path(path, GraftSink.Entry.parse(f).name)) shouldBe true
     }
   }
 
@@ -155,7 +155,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
       .toDF("k", "s", "v").repartition(2)
       .writeTo(s"$cat.ns.mor1").tableProperty("write.mode", "merge-on-read").create()
     val path = tablePath("mor1")
-    val preNames = GraftSink.readManifest(path).get.files.map(GraftSink.entryName)
+    val preNames = GraftSink.readManifest(path).get.entries.map(_.name)
     preNames.size shouldBe 2
     // the sink's metadata columns resolve by name on a plain read
     val meta = spark.table(s"$cat.ns.mor1")
@@ -166,8 +166,8 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
     // DELETE → delete vectors fold into the SAME entries; no rewrite
     spark.sql(s"DELETE FROM $cat.ns.mor1 WHERE k IN (2, 5)")
     val m1 = GraftSink.readManifest(path).get
-    m1.files.map(GraftSink.entryName) shouldBe preNames
-    m1.files.flatMap(GraftSink.entryDeletes) should have size 2
+    m1.entries.map(_.name) shouldBe preNames
+    m1.entries.flatMap(_.deletes) should have size 2
     spark.table(s"$cat.ns.mor1").select("k").as[Long].collect().sorted shouldBe
       Array(1L, 3L, 4L, 6L)
     spark.sql(s"SELECT count(*) AS n FROM $cat.ns.mor1 VERSION AS OF 2")
@@ -175,7 +175,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
     // UPDATE = DV on the old row + the new row in a NEW file
     spark.sql(s"UPDATE $cat.ns.mor1 SET v = v + 10.0 WHERE k = 3")
     val m2 = GraftSink.readManifest(path).get
-    m2.files.map(GraftSink.entryName).take(2) shouldBe preNames
+    m2.entries.map(_.name).take(2) shouldBe preNames
     m2.files.size should be >= 3
     spark.table(s"$cat.ns.mor1").filter(col("k") === 3)
       .select("v").as[Double].head() shouldBe 13.0
@@ -191,7 +191,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
     spark.sql(s"CALL $cat.sys.compact('ns.mor1', 1)")
     val m3 = GraftSink.readManifest(path).get
     m3.files should have size 1
-    m3.files.flatMap(GraftSink.entryDeletes) shouldBe empty
+    m3.entries.flatMap(_.deletes) shouldBe empty
     spark.table(s"$cat.ns.mor1").select("k").as[Long].collect().sorted shouldBe
       Array(1L, 3L, 6L, 7L)
   }
@@ -205,7 +205,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
       .option("shards", "4").option("layout", "range").save()
     val m = GraftSink.readManifest(stage).get
     m.files should have size 4
-    val stats = m.files.flatMap(GraftSink.entryStats)
+    val stats = m.entries.flatMap(_.stats.headOption)
     stats should have size 4
     stats.foreach(_._1 shouldBe "k")
     // range layout: contiguous, non-overlapping, covering [0, 999]
@@ -456,7 +456,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
       val o = GraftSink.fs(p).create(ghost, false)
       o.write("999\n".getBytes("UTF-8")); o.close()
       sw.commit(2L, Array(task(p, 2L, Seq(4L))))
-      GraftSink.readManifest(p).get.files.map(GraftSink.entryName) should contain(
+      GraftSink.readManifest(p).get.entries.map(_.name) should contain(
         s"q-qX-e2-$firstFile")
       GraftSink.listVersions(p).length shouldBe 3
       read() shouldBe Seq(1L, 2L, 3L, 4L)

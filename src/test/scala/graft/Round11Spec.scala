@@ -69,7 +69,7 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
       .write.format("graftsink").option("path", p).mode("overwrite").save()                 // v1
     spark.range(100, 130).selectExpr("id AS k", "cast(id % 7 as double) AS v")
       .write.format("graftsink").option("path", p).mode("append").save()  // v2
-    val v1Names = GraftSink.readManifest(p, Some(1)).get.files.map(GraftSink.entryName).toSet
+    val v1Names = GraftSink.readManifest(p, Some(1)).get.entries.map(_.name).toSet
     val df = spark.read.format("graftsink").option("path", p)
       .option("changesFrom", "1").load()
     // physical partitions must cover ONLY v2's new files
@@ -93,9 +93,7 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
       .coalesce(1).write.format("graftsink").option("path", p).mode("overwrite").save()     // v1
     // fold a DV into v1's file via the manifest (the delta write's shape)
     val m = GraftSink.readManifest(p).get
-    val line = m.files.head
-    val withDv = GraftSink.entry(GraftSink.entryName(line), Seq(3L, 7L, 11L),
-      GraftSink.entryStats(line), GraftSink.entryRows(line))
+    val withDv = m.entries.head.copy(deletes = Seq(3L, 7L, 11L)).line
     GraftSink.writeManifest(p, GraftSink.Manifest(m.ddl, Seq(withDv)))    // v2
     val chg = spark.read.format("graftsink").option("path", p)
       .option("changesFrom", "1").load()
@@ -228,8 +226,8 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
     spark.sql(s"ALTER TABLE $cat.ns.ren1 RENAME COLUMN v TO val") // v3: migration
     val m = GraftSink.readManifest(tablePath("ren1")).get
     m.ids shouldBe Some(Seq(1, 2, 3))
-    m.files.map(GraftSink.entryName) shouldBe pre.files.map(GraftSink.entryName) // no rewrite
-    m.files.foreach(l => GraftSink.entryCols(l).map(_.toSeq) shouldBe Some(Seq(1, 2, 3)))
+    m.entries.map(_.name) shouldBe pre.entries.map(_.name) // no rewrite
+    m.entries.foreach(_.cols shouldBe Some(Seq(1, 2, 3)))
     spark.table(s"$cat.ns.ren1").orderBy("k")
       .select(col("k"), col("val"), col("s")).as[(Long, Double, String)]
       .collect() shouldBe Array((1L, 10.0, "a"), (2L, 20.0, "b"))
@@ -260,7 +258,7 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
     // appends at the evolved width stamp their cols: layout
     spark.sql(s"INSERT INTO $cat.ns.drp1 VALUES (3, 30.0, 99)")  // v5
     val m = GraftSink.readManifest(tablePath("drp1")).get
-    m.files.flatMap(GraftSink.entryCols(_)).map(_.toSeq) should contain(Seq(1, 3, 4))
+    m.entries.flatMap(_.cols) should contain(Seq(1, 3, 4))
     spark.table(s"$cat.ns.drp1").filter(col("k") === 3)
       .select(col("fresh")).collect().head.getLong(0) shouldBe 99L
   }
@@ -541,7 +539,7 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
       .partitionedBy(col("grp")).create()
     val m = GraftSink.readManifest(tablePath("pt1")).get
     // one file per tuple; every file tagged
-    m.files.flatMap(GraftSink.entryPart).sorted shouldBe Seq("grp=a", "grp=b", "grp=c")
+    m.entries.flatMap(_.part).sorted shouldBe Seq("grp=a", "grp=b", "grp=c")
     // equality prunes to the single matching file...
     val one = spark.table(s"$cat.ns.pt1").filter(col("grp") === "a")
     plannedSinkFiles(one).length shouldBe 1
@@ -557,7 +555,7 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
     // appends stay partition-routed and tagged
     spark.sql(s"INSERT INTO $cat.ns.pt1 VALUES (7, 'a', 7.0), (8, 'd', 8.0)")
     val m2 = GraftSink.readManifest(tablePath("pt1")).get
-    m2.files.flatMap(GraftSink.entryPart).sorted shouldBe
+    m2.entries.flatMap(_.part).sorted shouldBe
       Seq("grp=a", "grp=a", "grp=b", "grp=c", "grp=d")
     plannedSinkFiles(spark.table(s"$cat.ns.pt1").filter(col("grp") === "a"))
       .length shouldBe 2
@@ -572,13 +570,13 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
       .partitionedBy(col("bucket")).create()
     spark.sql(s"DELETE FROM $cat.ns.pt2 WHERE k = 1")
     val m = GraftSink.readManifest(tablePath("pt2")).get
-    m.files.foreach(l => GraftSink.entryPart(l) should not be empty) // rewrite stayed tagged
+    m.entries.foreach(_.part should not be empty) // rewrite stayed tagged
     // the UNMATCHED partition must survive the rewrite: the COW scan
     // opts OUT of runtime group filtering (a group-narrowed rewrite +
     // whole-snapshot commit would silently drop bucket 20's file —
     // the exact regression q379's oracle caught when DPP landed)
     spark.table(s"$cat.ns.pt2").count() shouldBe 2
-    m.files.flatMap(GraftSink.entryPart).sorted shouldBe Seq("bucket=10", "bucket=20")
+    m.entries.flatMap(_.part).sorted shouldBe Seq("bucket=10", "bucket=20")
     spark.table(s"$cat.ns.pt2").filter(col("bucket") === 10L)
       .select(col("k")).collect().map(_.getLong(0)) shouldBe Array(3L)
     plannedSinkFiles(spark.table(s"$cat.ns.pt2").filter(col("bucket") === 10L))
@@ -593,8 +591,8 @@ class Round11Spec extends AnyFunSuite with Matchers with SharedSpark {
     // rekey): tags, the spec prop, and pruning follow the new name
     spark.sql(s"ALTER TABLE $cat.ns.pt2 RENAME COLUMN bucket TO b2")
     GraftSink.partitionColsOf(tablePath("pt2")) shouldBe Seq("b2")
-    GraftSink.readManifest(tablePath("pt2")).get.files
-      .flatMap(GraftSink.entryPart).sorted shouldBe Seq("b2=10", "b2=20")
+    GraftSink.readManifest(tablePath("pt2")).get.entries
+      .flatMap(_.part).sorted shouldBe Seq("b2=10", "b2=20")
     spark.table(s"$cat.ns.pt2").filter(col("b2") === 10L)
       .select(col("k")).collect().map(_.getLong(0)) shouldBe Array(3L)
     plannedSinkFiles(spark.table(s"$cat.ns.pt2").filter(col("b2") === 10L))

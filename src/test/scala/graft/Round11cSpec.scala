@@ -131,7 +131,7 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     val p = tablePath("bk1")
     val m = GraftSink.readManifest(p).get
     // every file carries a bucket tag; ids live in [0, 4)
-    val tags = m.files.flatMap(GraftSink.entryPart)
+    val tags = m.entries.flatMap(_.part)
     tags.length shouldBe m.files.length
     tags.foreach { t =>
       t should startWith("bucket(k)=")
@@ -144,16 +144,16 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     eq.length should be < all.length
     // the planned files are exactly those tagged with k=7's bucket
     val wantTag = s"bucket(k)=${bucketOf(7L)}"
-    m.files.filter(l => eq.contains(GraftSink.entryName(l)))
-      .flatMap(GraftSink.entryPart).distinct shouldBe Seq(wantTag)
+    m.entries.filter(e => eq.contains(e.name))
+      .flatMap(_.part).distinct shouldBe Seq(wantTag)
     spark.table(s"$cat.ns.bk1").filter(col("k") === 7L)
       .select(col("v")).collect().map(_.getDouble(0)) shouldBe Array(7.0)
     // IN over two keys plans at most the two buckets' files
     val in2 = plannedSinkFiles(
       spark.table(s"$cat.ns.bk1").filter(col("k").isin(7L, 13L)))
     val okTags = Set(bucketOf(7L), bucketOf(13L)).map(b => s"bucket(k)=$b")
-    m.files.filter(l => in2.contains(GraftSink.entryName(l)))
-      .flatMap(GraftSink.entryPart).toSet.subsetOf(okTags) shouldBe true
+    m.entries.filter(e => in2.contains(e.name))
+      .flatMap(_.part).toSet.subsetOf(okTags) shouldBe true
     // runtime (DPP) values map through the hash the same way
     val scan = new graft.sources.GraftSinkScan(p,
       org.apache.spark.sql.types.StructType.fromDDL(m.ddl),
@@ -177,7 +177,7 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     // rekey): tags, the bucket prop, and pruning follow the new name
     spark.sql(s"ALTER TABLE $cat.ns.bk1 RENAME COLUMN k TO k2")
     GraftSink.bucketSpecOf(p) shouldBe Some(("k2", 4))
-    GraftSink.readManifest(p).get.files.flatMap(GraftSink.entryPart)
+    GraftSink.readManifest(p).get.entries.flatMap(_.part)
       .foreach(_ should startWith("bucket(k2)="))
     spark.table(s"$cat.ns.bk1").filter(col("k2") === 7L)
       .select(col("v")).collect().map(_.getDouble(0)) shouldBe Array(7.0)
@@ -259,9 +259,9 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
       .awaitTermination()
     val m = GraftSink.readManifest(p).get
     // every published file carries its bucket tag and an epoch marker
-    m.files.foreach { l =>
-      GraftSink.entryPart(l) should not be empty
-      GraftSink.entryName(l) should include("-e")
+    m.entries.foreach { e =>
+      e.part should not be empty
+      e.name should include("-e")
     }
     // 4 epochs committed exactly once: one snapshot per non-empty batch
     GraftSink.listVersions(p).size should be >= 4
@@ -269,8 +269,8 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     val one = spark.table(s"$cat.ns.ps1").filter(col("bucket") === 7L)
     val planned = plannedSinkFiles(one)
     planned should not be empty
-    m.files.filter(l => planned.contains(GraftSink.entryName(l)))
-      .flatMap(GraftSink.entryPart).distinct shouldBe Seq("bucket=7")
+    m.entries.filter(e => planned.contains(e.name))
+      .flatMap(_.part).distinct shouldBe Seq("bucket=7")
     // and the content is complete: 2000 rows total, no dup, no loss
     spark.table(s"$cat.ns.ps1").count() shouldBe 2000L
     spark.table(s"$cat.ns.ps1").select(col("id")).distinct().count() shouldBe 2000L
@@ -324,19 +324,18 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     spark.sql(s"DELETE FROM $cat.ns.cb1 WHERE g = 'a' AND k % 4 = 0") // DVs, no rewrite
     val p = tablePath("cb1")
     val mBefore = GraftSink.readManifest(p).get
-    mBefore.files.count(l => GraftSink.entryDeletes(l).nonEmpty) should be >= 1
+    mBefore.entries.count(_.deletes.nonEmpty) should be >= 1
     val vBefore = GraftSink.listVersions(p).size
-    val bName = mBefore.files.find(l =>
-      GraftSink.entryPart(l).contains("g=b")).map(GraftSink.entryName).get
+    val bName = mBefore.entries.find(_.part.contains("g=b")).map(_.name).get
     val audit = spark.sql(s"CALL $cat.sys.compact_bins('ns.cb1', 40)").collect().head
     audit.toSeq shouldBe Seq(4L, 2L, 1L) // 4 files -> a-bin + untouched b
     // exactly ONE new snapshot; 'b' passed through under its old name
     GraftSink.listVersions(p).size shouldBe vBefore + 1
     val mAfter = GraftSink.readManifest(p).get
-    mAfter.files.map(GraftSink.entryName) should contain(bName)
+    mAfter.entries.map(_.name) should contain(bName)
     // the rewritten bin absorbed its delete vectors
-    mAfter.files.foreach(l => GraftSink.entryDeletes(l) shouldBe empty)
-    mAfter.files.flatMap(GraftSink.entryPart).sorted shouldBe Seq("g=a", "g=b")
+    mAfter.entries.foreach(_.deletes shouldBe empty)
+    mAfter.entries.flatMap(_.part).sorted shouldBe Seq("g=a", "g=b")
     // content byte-identical: 9 live 'a' rows + 50 'b' rows
     spark.table(s"$cat.ns.cb1").groupBy(col("g")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe Map("a" -> 9L, "b" -> 50L)
@@ -344,7 +343,7 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     spark.read.format("graftsink").option("path", p)
       .option("version", (vBefore).toString).load().count() shouldBe 59L
     // rows: segments on the bin reflect post-DV counts (metadata count intact)
-    mAfter.files.flatMap(GraftSink.entryRows).sum shouldBe 59L
+    mAfter.entries.flatMap(_.rows).sum shouldBe 59L
   }
 
   // ------------------------------------------------------------------
@@ -359,20 +358,20 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
       .writeTo(s"$cat.ns.wm1").create() // COW default
     val p = tablePath("wm1")
     spark.sql(s"ALTER TABLE $cat.ns.wm1 SET TBLPROPERTIES ('write.mode' = 'merge-on-read')")
-    val before = GraftSink.readManifest(p).get.files.map(GraftSink.entryName)
+    val before = GraftSink.readManifest(p).get.entries.map(_.name)
     spark.sql(s"DELETE FROM $cat.ns.wm1 WHERE k = 2")
     val after = GraftSink.readManifest(p).get
     // merge-on-read: identical file set, one DV position, content right
-    after.files.map(GraftSink.entryName) shouldBe before
-    after.files.map(l => GraftSink.entryDeletes(l).length).sum shouldBe 1
+    after.entries.map(_.name) shouldBe before
+    after.entries.map(_.deletes.length).sum shouldBe 1
     spark.table(s"$cat.ns.wm1").count() shouldBe 3L
     // UNSET returns to copy-on-write: the next DELETE rewrites files
     spark.sql(s"ALTER TABLE $cat.ns.wm1 UNSET TBLPROPERTIES ('write.mode')")
     spark.sql(s"DELETE FROM $cat.ns.wm1 WHERE k = 3")
     val cow = GraftSink.readManifest(p).get
-    cow.files.map(GraftSink.entryName).toSet
+    cow.entries.map(_.name).toSet
       .intersect(before.toSet) shouldBe Set.empty
-    cow.files.flatMap(l => GraftSink.entryDeletes(l)) shouldBe empty // DVs absorbed
+    cow.entries.flatMap(_.deletes) shouldBe empty // DVs absorbed
     spark.table(s"$cat.ns.wm1").select(col("k")).collect()
       .map(_.getLong(0)).sorted shouldBe Array(1L, 4L)
     // refusals: non-write.* property, bad write.mode value
@@ -402,7 +401,7 @@ class Round11cSpec extends AnyFunSuite with Matchers with SharedSpark {
     }
     plant("stray-a.tsv"); plant("stray-b.tsv"); plant("_staging/dead/x.tsv")
     val referenced = GraftSink.listVersions(p).flatMap(v =>
-      GraftSink.readManifest(p, Some(v)).get.files.map(GraftSink.entryName)).toSet
+      GraftSink.readManifest(p, Some(v)).get.entries.map(_.name)).toSet
     // default cutoff first: the just-planted strays are YOUNGER than
     // the 10-min guard, so nothing is swept (a concurrent write's
     // staged files would survive the same way)

@@ -142,13 +142,13 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
       val prior = GraftSink.readManifest(p).get
       if (calls == 1)
         GraftSink.writeManifest(p, GraftSink.Manifest(base.ddl,
-          base.files :+ GraftSink.entry("interloper.tsv", Nil, None, Some(1L)), base.ids))
+          base.files :+ GraftSink.Entry("interloper.tsv", rows = Some(1L)).line, base.ids))
       GraftSink.Manifest(prior.ddl,
-        prior.files :+ GraftSink.entry("mine.tsv", Nil, None, Some(1L)), prior.ids)
+        prior.files :+ GraftSink.Entry("mine.tsv", rows = Some(1L)).line, prior.ids)
     }
     calls shouldBe 2
     committed shouldBe v0 + 2
-    val names = GraftSink.readManifest(p).get.files.map(GraftSink.entryName)
+    val names = GraftSink.readManifest(p).get.entries.map(_.name)
     names should contain("interloper.tsv")
     names should contain("mine.tsv")
     // the chain is gap-free and every new snapshot carries attribution
@@ -207,7 +207,7 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
         if (calls == 1) { // ...an interloper lands before the slot claim
           val prior = GraftSink.readManifest(p).get
           GraftSink.writeManifest(p, prior.copy(
-            files = prior.files :+ GraftSink.entry("x.tsv", Nil, None, Some(1L))))
+            files = prior.files :+ GraftSink.Entry("x.tsv", rows = Some(1L)).line))
         }
         stale
       }
@@ -215,7 +215,7 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
     calls shouldBe 2 // the lost claim re-planned against the moved base
     ex.getMessage should include("concurrent commit during a replace")
     // the interloper's commit is intact
-    GraftSink.readManifest(p).get.files.map(GraftSink.entryName) should contain("x.tsv")
+    GraftSink.readManifest(p).get.entries.map(_.name) should contain("x.tsv")
   }
 
   test("branch commits carry branch attribution in the version chain") {
@@ -376,8 +376,8 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
     val mf = GraftSink.readManifest(p).get
     mf.files should have size 16
     // every file carries a min/max envelope on BOTH interleaved dims
-    mf.files.foreach { l =>
-      GraftSink.entryStatsAll(l).map(_._1).toSet shouldBe Set("c", "d")
+    mf.entries.foreach { e =>
+      e.stats.map(_._1).toSet shouldBe Set("c", "d")
     }
     // the 16x16 corner (1/16 of the grid) is ONE Z block — planning
     // must prune to a couple of files, not scan all 16
@@ -471,7 +471,7 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
       (4L, "live", 40.0)).toDF("k", "s", "v").writeTo(s"$cat.ns.sync1").create()
     spark.sql(s"ALTER TABLE $cat.ns.sync1 SET TBLPROPERTIES ('write.mode' = 'merge-on-read')")
     val p = tablePath("sync1")
-    val filesBefore = GraftSink.readManifest(p).get.files.map(GraftSink.entryName).toSet
+    val filesBefore = GraftSink.readManifest(p).get.entries.map(_.name).toSet
     Seq((1L, "live", 11.0), (4L, "live", 44.0), (9L, "new", 99.0))
       .toDF("k", "s", "v").createOrReplaceTempView("feed12")
     spark.sql(s"""
@@ -487,8 +487,8 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
     // merge-on-read: the original data files survive under their names
     // (updates = DV + re-insert; deletes = DV only)
     val after = GraftSink.readManifest(p).get
-    filesBefore.subsetOf(after.files.map(GraftSink.entryName).toSet) shouldBe true
-    after.files.flatMap(GraftSink.entryDeletes).length should be >= 4 // 1,3,4 updated + 2 deleted
+    filesBefore.subsetOf(after.entries.map(_.name).toSet) shouldBe true
+    after.entries.flatMap(_.deletes).length should be >= 4 // 1,3,4 updated + 2 deleted
   }
 
   // ------------------------------------------------------------------
@@ -566,14 +566,14 @@ class Round12Spec extends AnyFunSuite with Matchers with SharedSpark {
     val out1 = f.create(new org.apache.hadoop.fs.Path(p, "ghost.tsv"), true)
     try out1.write("77\t\\N\n".getBytes("UTF-8")) finally out1.close()
     val claimed = (s"${m.ddl}\tts:${m.ts.get + 1000}\tref:main" +:
-      (m.files :+ GraftSink.entry("ghost.tsv", Nil, None, Some(1L))))
+      (m.files :+ GraftSink.Entry("ghost.tsv", rows = Some(1L)).line))
       .mkString("\n")
     val out2 = f.create(new org.apache.hadoop.fs.Path(p, s"_manifest.v$next"), false)
     try out2.write(claimed.getBytes("UTF-8")) finally out2.close()
     // an append planned NOW must base on the claimed snapshot — the
     // chain-derived mainHead sees it even though the pointer lags
     Seq((2L, "b")).toDF("k", "s").writeTo(s"$cat.ns.lag1").append()
-    val names = GraftSink.readManifest(p).get.files.map(GraftSink.entryName)
+    val names = GraftSink.readManifest(p).get.entries.map(_.name)
     names should contain("ghost.tsv")
     spark.table(s"$cat.ns.lag1").count() shouldBe 3L // base + ghost + append
   }

@@ -59,7 +59,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
               GraftSink.commitManifest(p, None, maxAttempts = 64) { () =>
                 val prior = GraftSink.mainHead(p).get
                 prior.copy(files = prior.files :+
-                  GraftSink.entry(name, Nil, None, Some(1L)), ts = None, ref = None)
+                  GraftSink.Entry(name, rows = Some(1L)).line, ts = None, ref = None)
               }
             }
           } catch { case e: Throwable => failures.add(e) }
@@ -72,13 +72,13 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     // gap-free chain, one slot per commit
     GraftSink.listVersions(p) shouldBe (1 to 1 + threads * perThread)
     // no lost updates: the head carries every writer's every entry
-    val names = GraftSink.mainHead(p).get.files.map(GraftSink.entryName).toSet
+    val names = GraftSink.mainHead(p).get.entries.map(_.name).toSet
     val expected = (for (t <- 0 until threads; i <- 0 until perThread)
       yield s"w$t-$i.tsv").toSet
     names shouldBe expected
     // the PLAIN POINTER agrees with the chain head (fix-forward repair:
     // no stalled winner left it regressed)
-    GraftSink.readManifest(p).get.files.map(GraftSink.entryName).toSet shouldBe expected
+    GraftSink.readManifest(p).get.entries.map(_.name).toSet shouldBe expected
     // ts stamps strictly monotone across all the races
     val stamps = GraftSink.listVersions(p)
       .map(v => GraftSink.readManifest(p, Some(v)).get.ts.get)
@@ -98,7 +98,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     // A: slot v2 claimed (chain-visible), pointer NOT moved — the stall
     val f = GraftSink.fs(p)
     val aBody = s"k BIGINT\tts:${v1ts + 1}\tref:main\n" +
-      GraftSink.entry("a.tsv", Nil, None, Some(1L))
+      GraftSink.Entry("a.tsv", rows = Some(1L)).line
     val out = f.create(
       new org.apache.hadoop.fs.Path(p, s"${GraftSink.MANIFEST}.v2"), false)
     try out.write(aBody.getBytes("UTF-8")) finally out.close()
@@ -107,12 +107,12 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     GraftSink.commitManifest(p, None) { () =>
       val prior = GraftSink.mainHead(p).get
       prior.copy(files = prior.files :+
-        GraftSink.entry("b.tsv", Nil, None, Some(1L)), ts = None, ref = None)
+        GraftSink.Entry("b.tsv", rows = Some(1L)).line, ts = None, ref = None)
     }
     GraftSink.listVersions(p).last shouldBe 3
     val ptr = GraftSink.readManifest(p).get
-    ptr.files.map(GraftSink.entryName) should contain("b.tsv")
-    ptr.files.map(GraftSink.entryName) should contain("a.tsv") // rebased onto A
+    ptr.entries.map(_.name) should contain("b.tsv")
+    ptr.entries.map(_.name) should contain("a.tsv") // rebased onto A
     ptr.ts shouldBe GraftSink.readManifest(p, Some(3)).get.ts
     // A resumes: its advance (modeled by any later advance — here a
     // no-op commit) must NOT move the pointer backwards
@@ -202,8 +202,8 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     mf.files should have size 16
     // every file carries min/max envelopes on ALL THREE dims — written
     // by the writer tasks themselves (statsCols), no stats job ran
-    mf.files.foreach { l =>
-      GraftSink.entryStatsAll(l).map(_._1).toSet shouldBe Set("c", "d", "e")
+    mf.entries.foreach { e =>
+      e.stats.map(_._1).toSet shouldBe Set("c", "d", "e")
     }
     // the 8x8x8 corner (1/8 of the cube) is one Z block: planning must
     // prune most of the 16 files
@@ -278,17 +278,17 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
       .write.format("graftsink").mode("append")
       .option("path", p).option("clusterBy", "k").option("layout", "range")
       .option("shards", "8").save()
-    GraftSink.readManifest(p).get.files
-      .flatMap(GraftSink.entryStatsAll).map(_._1).distinct shouldBe Seq("k")
+    GraftSink.readManifest(p).get.entries
+      .flatMap(_.stats).map(_._1).distinct shouldBe Seq("k")
     spark.sql(s"CALL $cat.sys.compact('ns.cps13', 2)").collect()
     val mf = GraftSink.readManifest(p).get
-    mf.files.filter(l => GraftSink.entryRows(l).exists(_ > 0)).foreach { l =>
-      withClue(s"compacted entry lost its stats: $l ") {
-        GraftSink.entryStatsAll(l).map(_._1) shouldBe Seq("k")
+    mf.entries.filter(_.rows.exists(_ > 0)).foreach { e =>
+      withClue(s"compacted entry lost its stats: ${e.line} ") {
+        e.stats.map(_._1) shouldBe Seq("k")
       }
     }
     // envelopes stay exact: the recorded global min/max equal the data's
-    val exts = mf.files.flatMap(GraftSink.entryStatsAll)
+    val exts = mf.entries.flatMap(_.stats)
     exts.map(_._2).min shouldBe 0L
     exts.map(_._3).max shouldBe 999L
     spark.table(s"$cat.ns.cps13").count() shouldBe 1000L
@@ -351,8 +351,8 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     val p = tablePath("dvx13")
     val before = spark.table(s"$cat.ns.dvx13").orderBy("k").collect().toSeq
     // v3 and v4 both reference the original file with the SAME dv
-    val dvBefore = GraftSink.readManifest(p).get.files
-      .map(GraftSink.entryDeletes).map(_.length).sum
+    val dvBefore = GraftSink.readManifest(p).get.entries
+      .map(_.deletes).map(_.length).sum
     dvBefore should be > 0
     // keep=2 keeps v3+v4 — every surviving reference agrees on the dv,
     // so expire applies it physically
@@ -362,18 +362,18 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     // dead position lists left EVERY retained manifest (incl. the
     // pointer copy) ...
     GraftSink.listVersions(p).foreach { v =>
-      GraftSink.readManifest(p, Some(v)).get.files
-        .flatMap(GraftSink.entryDeletes) shouldBe empty
+      GraftSink.readManifest(p, Some(v)).get.entries
+        .flatMap(_.deletes) shouldBe empty
     }
-    GraftSink.readManifest(p).get.files
-      .flatMap(GraftSink.entryDeletes) shouldBe empty
+    GraftSink.readManifest(p).get.entries
+      .flatMap(_.deletes) shouldBe empty
     // ... and reads are byte-identical, head AND time-travel
     spark.table(s"$cat.ns.dvx13").orderBy("k").collect().toSeq shouldBe before
     spark.read.format("graftsink").option("path", p)
       .option("version", "3").load().count() shouldBe 16L // 20 - 4 deleted
     // metadata row counts adjusted with the applied dv
-    GraftSink.readManifest(p).get.files
-      .flatMap(GraftSink.entryRows).sum shouldBe 17L // 16 survivors + 1 append
+    GraftSink.readManifest(p).get.entries
+      .flatMap(_.rows).sum shouldBe 17L // 16 survivors + 1 append
     // a file whose kept snapshots DISAGREE on the dv is left alone
     // (coalesce(1): both DELETEs must hit the SAME file — across
     // different files the per-file signatures agree and applying is
@@ -388,8 +388,8 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     val beforeY = spark.table(s"$cat.ns.dvy13").orderBy("k").collect().toSeq
     spark.sql(s"CALL $cat.sys.expire_snapshots('ns.dvy13', 2)").collect() // keeps v3+v4
     // v3 sees dv [1], v4 sees [1,2] — signatures differ, nothing applied
-    GraftSink.readManifest(py).get.files
-      .flatMap(GraftSink.entryDeletes).length shouldBe 2
+    GraftSink.readManifest(py).get.entries
+      .flatMap(_.deletes).length shouldBe 2
     spark.table(s"$cat.ns.dvy13").orderBy("k").collect().toSeq shouldBe beforeY
   }
 }

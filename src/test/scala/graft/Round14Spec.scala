@@ -47,8 +47,7 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
       .writeTo(s"$cat.ns.fsc14").append()
     val p = tablePath("fsc14")
     val m = GraftSink.mainHead(p).get
-    val byRows = m.files.map(l =>
-      GraftSink.entryName(l) -> GraftSink.entryRows(l).get).toMap
+    val byRows = m.entries.map(e => e.name -> e.rows.get).toMap
     byRows.values.toSeq.sorted shouldBe Seq(30L, 70L)
     val (small, _) = byRows.find(_._2 == 30L).get
     // whole-table count still pushes down to the manifest sum
@@ -101,7 +100,7 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     val p = tablePath("spe14")
     Seq.tabulate(12)(i => (i.toLong, if (i % 2 == 0) "eu" else "us", (i % 3).toLong))
       .toDF("k", "region", "day").writeTo(s"$cat.ns.spe14").append() // gen-1 files
-    val gen1 = GraftSink.mainHead(p).get.files.map(GraftSink.entryName).toSet
+    val gen1 = GraftSink.mainHead(p).get.entries.map(_.name).toSet
     val vBefore = GraftSink.listVersions(p).last
     // evolve region → day
     val out = spark.sql(s"CALL $cat.sys.set_partitioning('ns.spe14', 'day')")
@@ -111,17 +110,17 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     // the evolution is a FILES-UNCHANGED versioned commit
     out.getLong(0) shouldBe (vBefore + 1).toLong
     GraftSink.readManifest(p, Some(vBefore + 1)).get
-      .files.map(GraftSink.entryName).toSet shouldBe gen1
+      .entries.map(_.name).toSet shouldBe gen1
     GraftSink.partitionColsOf(p) shouldBe Seq("day")
     GraftSink.partitionHistoryOf(p) shouldBe Seq("region")
     // gen-2 writes route by the NEW spec
     Seq((100L, "eu", 7L), (101L, "us", 8L)).toDF("k", "region", "day")
       .writeTo(s"$cat.ns.spe14").append()
     val m = GraftSink.mainHead(p).get
-    val gen2 = m.files.filterNot(l => gen1(GraftSink.entryName(l)))
-    gen2.flatMap(GraftSink.entryPart).foreach(_ should startWith("day="))
-    m.files.filter(l => gen1(GraftSink.entryName(l)))
-      .flatMap(GraftSink.entryPart).foreach(_ should startWith("region="))
+    val gen2 = m.entries.filterNot(e => gen1(e.name))
+    gen2.flatMap(_.part).foreach(_ should startWith("day="))
+    m.entries.filter(e => gen1(e.name))
+      .flatMap(_.part).foreach(_ should startWith("region="))
     // correctness across mixed generations
     spark.table(s"$cat.ns.spe14").count() shouldBe 14L
     // pruning per generation: a predicate on the OLD spec column prunes
@@ -129,15 +128,13 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     val euPlan = plannedSinkFiles(
       spark.table(s"$cat.ns.spe14").filter(col("region") === "eu"))
     euPlan.toSet.intersect(gen1) shouldBe
-      m.files.filter(l => GraftSink.entryPart(l).contains("region=eu"))
-        .map(GraftSink.entryName).toSet
-    gen2.map(GraftSink.entryName).forall(euPlan.contains) shouldBe true
+      m.entries.filter(_.part.contains("region=eu")).map(_.name).toSet
+    gen2.map(_.name).forall(euPlan.contains) shouldBe true
     // ... and a predicate on the NEW spec column prunes gen-2 exactly
     val d7Plan = plannedSinkFiles(
       spark.table(s"$cat.ns.spe14").filter(col("day") === 7L))
     d7Plan should contain theSameElementsAs
-      (gen1 ++ m.files.filter(l => GraftSink.entryPart(l).contains("day=7"))
-        .map(GraftSink.entryName)).toSeq
+      (gen1 ++ m.entries.filter(_.part.contains("day=7")).map(_.name)).toSeq
     spark.table(s"$cat.ns.spe14").filter(col("region") === "eu").count() shouldBe 7L
     spark.table(s"$cat.ns.spe14").filter(col("day") === 7L).count() shouldBe 1L
     // mixed-generation guards: partial overwrite and grouped scan refuse
@@ -163,8 +160,8 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     spark.table(s"$cat.ns.spe14")
       .select(col("k"), col("region"), col("day"))
       .write.format("graftsink").mode("overwrite").option("path", p).save()
-    GraftSink.mainHead(p).get.files
-      .flatMap(GraftSink.entryPart).foreach(_ should startWith("day="))
+    GraftSink.mainHead(p).get.entries
+      .flatMap(_.part).foreach(_ should startWith("day="))
     Seq((200L, "xx", 7L)).toDF("k", "region", "day")
       .writeTo(s"$cat.ns.spe14").overwritePartitions()
     spark.table(s"$cat.ns.spe14").filter(col("day") === 7L)
@@ -186,7 +183,7 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     // post-evolution writes are UNpartitioned (no tuple router, no tag)
     Seq((3L, "c")).toDF("k", "g").writeTo(s"$cat.ns.spu14").append()
     val m = GraftSink.mainHead(p).get
-    m.files.flatMap(GraftSink.entryPart).foreach(_ should startWith("g="))
+    m.entries.flatMap(_.part).foreach(_ should startWith("g="))
     spark.table(s"$cat.ns.spu14").count() shouldBe 3L
     // old-gen pruning still exact through the history prop
     spark.table(s"$cat.ns.spu14").filter(col("g") === "a").count() shouldBe 1L
@@ -213,12 +210,42 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     spark.sql(s"ALTER TABLE $cat.ns.hr14 RENAME COLUMN src TO source")
     val p = tablePath("hr14")
     GraftSink.partitionHistoryOf(p) shouldBe Seq("source")
-    GraftSink.mainHead(p).get.files.flatMap(GraftSink.entryPart)
+    GraftSink.mainHead(p).get.entries.flatMap(_.part)
       .filter(_.startsWith("s")).foreach(_ should startWith("source="))
     spark.table(s"$cat.ns.hr14").filter(col("source") === "a")
       .select(col("k")).collect().map(_.getLong(0)) shouldBe Array(1L)
     plannedSinkFiles(spark.table(s"$cat.ns.hr14")
       .filter(col("source") === "a")).length shouldBe 2 // gen-1 match + gen-2 passthrough
+  }
+
+  test("DV fold then the first rename keep part:, every stats: envelope and cols: on every file") {
+    import spark.implicits._
+    ensureCatalog()
+    spark.sql(s"DROP TABLE IF EXISTS $cat.ns.seg14")
+    spark.sql(s"CREATE TABLE $cat.ns.seg14 (k BIGINT, c BIGINT, d BIGINT, g STRING) " +
+      "TBLPROPERTIES ('write.mode'='merge-on-read')")
+    spark.range(0, 64)
+      .selectExpr("id AS k", "id % 8 AS c", "id div 8 AS d", "cast(id % 2 AS STRING) AS g")
+      .writeTo(s"$cat.ns.seg14").append()
+    // gen-1: Z-ordered files, one stats: envelope per interleaved dim
+    spark.sql(s"CALL $cat.sys.zorder('ns.seg14', 'c, d', 4)").collect()
+    // gen-2: part:-tagged files under the evolved spec
+    spark.sql(s"CALL $cat.sys.set_partitioning('ns.seg14', 'g')").collect()
+    Seq((100L, 1L, 1L, "x"), (101L, 2L, 2L, "x"), (102L, 3L, 3L, "y"))
+      .toDF("k", "c", "d", "g").writeTo(s"$cat.ns.seg14").append()
+    spark.sql(s"DELETE FROM $cat.ns.seg14 WHERE k % 5 = 0") // the DV fold, both gens
+    val p = tablePath("seg14")
+    val before = GraftSink.mainHead(p).get.entries
+    before.filter(_.stats.nonEmpty).map(_.stats.map(_._1)).distinct shouldBe Seq(Seq("c", "d"))
+    before.flatMap(_.part).sorted shouldBe Seq("g=x", "g=y")
+    before.count(_.deletes.nonEmpty) should be >= 2
+    before.forall(e => e.rows.isDefined && e.cols.isEmpty) shouldBe true
+    // the first rename migrates field ids in: a rebuild of every line
+    // that must carry each segment through, rekeying only `g`
+    spark.sql(s"ALTER TABLE $cat.ns.seg14 RENAME COLUMN g TO grp")
+    GraftSink.mainHead(p).get.entries shouldBe
+      before.map(_.renamed("g", "grp").copy(cols = Some(1 to 4)))
+    spark.table(s"$cat.ns.seg14").count() shouldBe 53L // 67 rows - 14 deleted
   }
 
   // ------------------------------------------------------------------
@@ -291,8 +318,8 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     val gBefore = GraftSink.groupReads.get()
     spark.table(s"$cat.ns.mgc14").count() shouldBe 7L
     (GraftSink.groupReads.get() - gBefore) shouldBe 0L
-    GraftSink.readManifest(p, None).get.files
-      .map(GraftSink.entryDeletes(_).length).sum shouldBe 1
+    GraftSink.readManifest(p, None).get.entries
+      .map(_.deletes.length).sum shouldBe 1
     val f = GraftSink.fs(p)
     def groupsOnDisk: Set[String] = f.listStatus(new org.apache.hadoop.fs.Path(p))
       .filter(_.isFile).map(_.getPath.getName)
@@ -337,8 +364,8 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     // every row through the CURRENT tuple router
     spark.sql(s"CALL $cat.sys.compact('ns.ct14', 1)").collect()
     val m = GraftSink.mainHead(p).get
-    m.files.filter(l => GraftSink.entryRows(l).exists(_ > 0))
-      .flatMap(GraftSink.entryPart).foreach(_ should startWith("b="))
+    m.entries.filter(_.rows.exists(_ > 0))
+      .flatMap(_.part).foreach(_ should startWith("b="))
     // SPJ-grouped scan works again, partial overwrite works again
     spark.read.format("graftsink").option("path", p)
       .option("grouped", "true").load().select(col("k"))

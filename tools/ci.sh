@@ -37,6 +37,16 @@ if [[ -n "$prefix" ]]; then
   echo "$prefix" >&2
   exit 1
 fi
+# Native functions (md5_mod & co.) are registered once per query, by
+# the wrapper graft.SparkEntry.queries puts around every key; a query
+# body never registers them itself.
+reg=$(grep -rn 'GraftFunctions\.register(' src/main --include='*.scala' \
+  | grep -vE '^src/main/scala/(graft/SparkEntry|org/apache/spark/sql/GraftFunctions)\.scala:' || true)
+if [[ -n "$reg" ]]; then
+  echo "native-function registration outside graft.SparkEntry.queries:" >&2
+  echo "$reg" >&2
+  exit 1
+fi
 
 # The benchmark's own arithmetic (medians, quartiles, per-layer sums):
 # 22 pure-Python tests, under a second.
