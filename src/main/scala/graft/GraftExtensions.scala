@@ -29,6 +29,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // portable md5-chain SQL → native Md5Mod (literal non-zero modulus
     // only; see the rule's scaladoc for the ANSI zero-divisor caveat)
     ext.injectOptimizerRule(_ => graft.plans.RewriteMd5Chain)
+    // exact percentile/median over DOUBLE → the primitive-array kernel
+    // ExactPercentile, with Spark's results (see the rule's scaladoc)
+    ext.injectOptimizerRule(_ => graft.plans.NativePercentile)
     // fully-qualified GraftCatalog VIEW references substitute their
     // stored SQL (Spark's analyzer doesn't consult V2 ViewCatalogs)
     ext.injectResolutionRule(session => graft.plans.ResolveGraftViews(session))

@@ -131,7 +131,10 @@ object Stats extends QueryPack {
 
     // ------------------------------------------------------------------
     // Exact quantiles with linear interpolation (NOT approx_percentile —
-    // sketch outputs can never hash-match another engine).
+    // sketch outputs can never hash-match another engine). Every call is
+    // over a DOUBLE, so graft.plans.NativePercentile runs all five on the
+    // ExactPercentile kernel (primitive sorted runs, 16 B per distinct
+    // value in the shuffle) with the doubles Spark's Percentile returns.
     "q21_percentiles" -> ((s, dir) =>
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))

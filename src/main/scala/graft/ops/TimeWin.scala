@@ -517,7 +517,13 @@ object TimeWin extends QueryPack {
         .filter(col("prev").isNotNull)
         .withColumn("t", expr("cast(floor((us - prev) / 60000000.0d) as bigint)"))
         .groupBy(col("t")).agg(count(lit(1)).as("d"))
-        .localCheckpoint() // dropped-count + the rank frame
+      // `cells` is read twice (the dropped count and the rank frame) and
+      // stays lazy: the rank frame's `t >= 1` filter is pushed below the
+      // groupBy, so the two reads share only the events shuffle and run
+      // the lag window twice, yet the prefix sum's input is measured and
+      // summed in one task. graft.Explain build + noop, min of 6 warm
+      // runs in one session, checkpointed → lazy: 0.58 → 0.56 s
+      // (sf0.01), 0.64 → 0.59 s (sf0.1).
       val drop = cells.agg(
         coalesce(sum(when(col("t") === 0, col("d"))), lit(0L)).as("n_dropped"))
       val pts = Science.cumCounts(s,

@@ -312,9 +312,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // drops remove — applied in one props rewrite after the manifest
     var propAdd = Map.empty[String, String]
     var propDrop = Set.empty[String]
-    // partition/bucket column renames: (from, to) pairs whose manifest
-    // tags and spec props rekey in this same metadata commit
-    var partRenames = Seq.empty[(String, String)]
+    // column renames: (from, to) pairs whose manifest `part:`/`stats:`
+    // tags and partition/bucket spec props rekey in this same metadata
+    // commit (each rekey is a no-op where the old name is absent)
+    var renames = Seq.empty[(String, String)]
     def defKey(c: String) = s"${GraftSink.DEFAULT_PROP_PREFIX}$c"
     changes.foreach {
       case a: TableChange.AddColumn =>
@@ -349,15 +350,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         GraftSink.columnDefaults(p.toString).get(from).foreach { enc =>
           propDrop += defKey(from); propAdd += defKey(r.newName) -> enc
         }
-        // PARTITION/BUCKET column rename is metadata-only too: the data
-        // files are positional (names never touch bytes), so the rename
-        // commit REKEYS the current manifest's `part:`/`stats:` segments
-        // and the durable spec props — older snapshots keep the old keys
-        // and serve the pre-rename world under time travel
-        if (GraftSink.partitionColsOf(p.toString).contains(from) ||
-            GraftSink.partitionHistoryOf(p.toString).contains(from) ||
-            GraftSink.bucketSpecOf(p.toString).exists(_._1 == from))
-          partRenames = partRenames :+ (from -> r.newName)
+        // a rename is metadata-only: the data files are positional
+        // (names never touch bytes), so the rename commit REKEYS the
+        // current manifest's `part:`/`stats:` segments (partition and
+        // bucket values, Z-order and statsCols envelopes) and the
+        // durable spec props — older snapshots keep the old keys and
+        // serve the pre-rename world under time travel
+        renames = renames :+ (from -> r.newName)
         needIds = true
       case d: TableChange.DeleteColumn =>
         val n = single(d.fieldNames, "dropped")
@@ -402,15 +401,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       if (needIds && m.ids.isEmpty) m.entries.map(e =>
         if (e.cols.isDefined) e else e.copy(cols = Some(1 to before.length)))
       else m.entries
-    // partition-column rename: rekey every entry's part:/stats: tags
-    val files = partRenames.foldLeft(migrated) { case (es, (from, to)) =>
+    // column rename: rekey every entry's part:/stats: tags
+    val files = renames.foldLeft(migrated) { case (es, (from, to)) =>
       es.map(_.renamed(from, to))
     }.map(_.line)
     GraftSink.writeManifest(p.toString, GraftSink.Manifest(GraftSink.cleanDdl(evolved), files,
       if (needIds) Some(fields.map(_._2)) else None))
     // spec props rekey in the same ALTER: current spec, past
     // generations, and the bucket spec all follow the new name
-    partRenames.foreach { case (from, to) =>
+    renames.foreach { case (from, to) =>
       def rekeyList(key: String): Unit =
         GraftSink.readProps(p.toString).get(key).foreach { raw =>
           propAdd += key -> raw.split(",")

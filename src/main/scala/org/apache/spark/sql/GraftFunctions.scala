@@ -125,8 +125,12 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     // a session built without GraftExtensions still plans graft's nodes
+    // and swaps in graft's kernels
     if (!session.sessionState.planner.strategies.contains(graft.plans.PrefixSumStrategy))
       session.experimental.extraStrategies :+= graft.plans.PrefixSumStrategy
+    if (!session.sessionState.optimizer.extendedOperatorOptimizationRules.contains(graft.plans.NativePercentile) &&
+        !session.experimental.extraOptimizations.contains(graft.plans.NativePercentile))
+      session.experimental.extraOptimizations :+= graft.plans.NativePercentile
     val reg = session.sessionState.functionRegistry
     // per-function exists-guard: SparkEntry's wrapper registers per
     // query call (replace would WARN-spam the logs once per invocation)

@@ -1,8 +1,11 @@
 package graft
 
+import graft.plans.PrefixSumExec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -26,7 +29,11 @@ class PrefixSumSpec extends AnyFunSuite with Matchers with SharedSpark
     } finally writes.close()
   }
 
-  private val keys = Seq("q22_spearman", "q273_weighted_quantile", "q135_gini", "q124_ks_test")
+  private val keys = Seq("q22_spearman", "q273_weighted_quantile", "q135_gini", "q124_ks_test",
+    "q161_kruskal_wallis", "q340_dunn_posthoc", "q404_weibull_fit")
+
+  /** The keys whose prefix-sum input used to be a `localCheckpoint`. */
+  private val uncheckpointed = Seq("q161_kruskal_wallis", "q340_dunn_posthoc", "q404_weibull_fit")
 
   test("building a cumCounts key starts no job") {
     keys.foreach(fn) // table schemas are inferred once per session
@@ -41,6 +48,21 @@ class PrefixSumSpec extends AnyFunSuite with Matchers with SharedSpark
       withClue(s"$k:\n$plan\n") {
         collect(plan) { case r: RDDScanExec => r } shouldBe empty
         plan.toString should not include "ExistingRDD"
+      }
+    }
+  }
+
+  test("q161, q340 and q404 sum their small prefix-sum input in one task, with no RDD scan") {
+    uncheckpointed.foreach { k =>
+      val plan = noopPlan(fn(k))
+      val sums = collect(plan) { case p: PrefixSumExec => p }
+      withClue(s"$k:\n$plan\n") {
+        collect(plan) { case r: RDDScanExec => r } shouldBe empty
+        sums should not be empty
+        all(sums.map(p => collect(p) { case c: CoalesceExec => c }.nonEmpty)) shouldBe true
+        collect(plan) {
+          case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+        } shouldBe empty
       }
     }
   }

@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Self-hosted replica of the driver's DuckDB oracle compare.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [key,key,...]
+
+The optional third argument is the comma-separated key filter
+`graft.Verify` takes: only those keys are checked (a key missing from
+oracle_sql.json fails). Without it, every key is.
 
 For each query in <verifyOutDir>/oracle_sql.json:
   - load the Spark result parquet from <verifyOutDir>/<name>/
@@ -51,12 +55,18 @@ def norm_df(df):
 
 def main():
     sf, out = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     with open(os.path.join(out, "oracle_sql.json")) as f:
         oracle = json.load(f)
     n_fail = 0
+    if only is not None:
+        for name in sorted(only - set(oracle)):
+            print(f"FAIL {name}: no oracle sql")
+            n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name in sorted(oracle):
         files = glob.glob(os.path.join(out, name, "*.parquet"))
         if not files:
@@ -89,7 +99,8 @@ def main():
             n_fail += 1
         else:
             print(f"OK   {name}: {len(srn)} rows")
-    print(f"---- {len(oracle) - n_fail}/{len(oracle)} oracle queries match")
+    total = len(oracle) if only is None else len(only)
+    print(f"---- {total - n_fail}/{total} oracle queries match")
     sys.exit(min(n_fail, 120))
 
 

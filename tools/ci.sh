@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Full local gate, in the order failures are cheapest to catch:
 # duplicate-idiom grep → benchmark arithmetic tests → compile → tests →
-# sf0.001 verify+oracle+golden → sf0.01 verify+oracle.
-# Usage: bash tools/ci.sh [--fast]   (--fast skips the sf0.01 pass)
+# sf0.001 verify+oracle+golden → sf0.01 verify+oracle → sf0.1
+# verify+oracle of the exact-percentile keys.
+# Usage: bash tools/ci.sh [--fast]   (--fast skips the sf0.01 and sf0.1 passes)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -66,5 +67,12 @@ python3 tools/golden.py check /tmp/ci_v0
 if [[ "${1:-}" != "--fast" ]]; then
   sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/ci_v1"
   python3 tools/check.py /root/testdata/sf0.01 /tmp/ci_v1
+  # The 18 keys with an exact percentile over DOUBLE, which
+  # graft.plans.NativePercentile runs on the ExactPercentile kernel,
+  # against the oracle at sf0.1: groups of thousands of distinct values,
+  # so the kernel's run merges and partial-buffer merges all run.
+  pct=q21_percentiles,q86_winsorize,q93_anomaly_mad,q99_bootstrap_ci,q115_eqfreq_bins,q132_theil_sen,q168_rfm,q200_decile_lift,q202_pareto_revenue,q213_quantile_map,q246_hist_quantile_merge,q248_runs_test,q254_decision_stump,q270_median_ci,q273_weighted_quantile,q277_qte,q287_missing_impute,q297_bootstrap_median
+  sbt "runMain graft.Verify /root/testdata/sf0.1 /tmp/ci_v2 $pct"
+  python3 tools/check.py /root/testdata/sf0.1 /tmp/ci_v2 "$pct"
 fi
 echo "CI GREEN"
