@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryPack, Sessions, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -33,13 +34,14 @@ import org.apache.spark.sql.types._
 object Streaming extends QueryPack {
 
   /** Stateful streaming creates one state store per shuffle partition
-    * per stateful operator per microbatch; at the session's 32
-    * partitions that fixed machinery dominates these bounded-keyspace
-    * demos' wall time. Pin state partitioning to 8 for the streaming
-    * stage and restore after — at real scale this is the same decision
-    * of sizing `spark.sql.shuffle.partitions` to the key cardinality.
+    * per stateful operator per microbatch; at the session's partition
+    * count (`Sessions.local` sets one per core, 32 on the baseline host)
+    * that fixed machinery dominates these bounded-keyspace demos' wall
+    * time. Pin state partitioning to 8 for the streaming stage and
+    * restore after — at real scale this is the same decision of sizing
+    * `spark.sql.shuffle.partitions` to the key cardinality.
     */
-  private def withStateParts[T](s: org.apache.spark.sql.SparkSession,
+  private def withStateParts[T](s: SparkSession,
       noDataBatch: Boolean = true)(body: => T): T =
     // noDataBatch=false skips the trailing empty microbatch AvailableNow
     // appends for stateful queries (~0.7-0.9 s of planning + state-store
@@ -55,15 +57,6 @@ object Streaming extends QueryPack {
       Option.when(!noDataBatch)(
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*)(body)
 
-  /** Far-future watermark-sentinel timestamp (µs): max(events.ts) + 30
-    * days. Used by q191/q217/q220 to stage a final tranche that pushes
-    * every watermark past all real data so pending state flushes before
-    * AvailableNow terminates. Previously triplicated as a per-query
-    * 1-row collect; now computed ONCE per (session, sfDir) via
-    * Memo.perSession over the pruned ts column. Driver-side `.first()`
-    * by design: the aggregate is a single scalar, bounded by
-    * construction.
-    */
   /** q285's per-batch state merge, extracted so StreamRecoverySpec can
     * drive the IDENTICAL code through kill/resume and replay scenarios:
     * contract the batch to per-user deltas, full-outer-merge into the
@@ -73,8 +66,8 @@ object Streaming extends QueryPack {
     * log) deterministically rewrites v{id} from the same v{id−1} + the
     * same data instead of double-counting.
     */
-  private[graft] def mergeBatchIntoState(s: org.apache.spark.sql.SparkSession,
-      st: String, batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+  private[graft] def mergeBatchIntoState(s: SparkSession,
+      st: String, batch: Dataset[Row],
       id: Long): Unit = {
     val delta = batch.groupBy(col("user_id"))
       .agg(count(lit(1)).as("d_n"),
@@ -106,17 +99,15 @@ object Streaming extends QueryPack {
     * strictly stronger than relying on write completion order — while
     * letting the writes overlap.
     */
-  private def stageTranches(in: String,
-      tranches: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
+  private def stageTranches(in: String, tranches: Seq[(String, DataFrame)]): Unit = {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     tranches.map { case (name, df) =>
       Sessions.future(df.sparkSession)(df.coalesce(1).write.mode("overwrite").parquet(s"$in/$name"))
     }.foreach(Await.result(_, Duration.Inf))
-    // stamps sit 1 h in the PAST so a sentinel tranche some keys write
-    // AFTER this call is newest by wall clock without its own stamp
-    // (well under the source's 7-day maxFileAge window)
-    val base = System.currentTimeMillis() - 3600000L
+    // one second apart, the newest a second before now (well inside the
+    // source's 7-day maxFileAge window)
+    val base = System.currentTimeMillis() - tranches.size * 1000L
     tranches.zipWithIndex.foreach { case ((name, _), i) =>
       val t = java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L)
       val st = java.nio.file.Files.list(java.nio.file.Paths.get(in, name))
@@ -125,12 +116,91 @@ object Streaming extends QueryPack {
     }
   }
 
-  private def farSentinelUs(s: org.apache.spark.sql.SparkSession, dir: String): Long =
+  /** Far-future watermark-sentinel timestamp (µs): max(events.ts) + 30
+    * days. A sentinel tranche at this time pushes every watermark past
+    * all real data so pending state flushes before AvailableNow
+    * terminates. Computed ONCE per (session, sfDir) via Memo.perSession
+    * over the pruned ts column of `Tables.events` (not a key's staged
+    * frame). Driver-side `.first()` by design: the aggregate is a
+    * single scalar, bounded by construction.
+    */
+  private def farSentinelUs(s: SparkSession, dir: String): Long =
     graft.ops.Memo.perSession(s, s"stream_far_sentinel_us:$dir") {
       Tables.events(s, dir)
         .agg(max(expr("unix_micros(cast(ts as timestamp))")))
         .first().getLong(0) + 30L * 86400 * 1000000L
     }
+
+  /** The tranche boundaries in epoch µs: 2024-01-11 and 2024-01-21 UTC. */
+  private val (b1Us, b2Us) = (1704931200000000L, 1705795200000000L)
+
+  /** One key's staged tranches: `read()` streams them one tranche per
+    * microbatch, in stamp order; `release()` deletes the staged tree. */
+  private final class Tranches(val s: SparkSession, val key: String,
+      root: java.nio.file.Path, schema: StructType) {
+    def read(): DataFrame = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/*/")
+    def release(): Unit = graft.ops.Stage.release(root)
+  }
+
+  /** Stage `events` as the time-ordered tranches every key here streams.
+    * `cols` names the columns in the order the key's stream sees them;
+    * "ts_us" is the event time in epoch µs. The tranches are
+    *  - b0: ts ≤ 2024-01-11, not `late`;
+    *  - b1: ts in (2024-01-11, 2024-01-21], not `late`;
+    *  - b2: ts > 2024-01-21, plus every `late` row;
+    *  - b3, when `sentinel` is given: its rows, each listing its values
+    *    for `cols` minus ts_us, which is [[farSentinelUs]].
+    * The stream reads them with the selected frame's schema, every field
+    * nullable.
+    *
+    * The selected frame is checkpointed once, so the tranche writes
+    * share one events scan. q81 and q145 used to scan `events` once per
+    * tranche instead; graft.Explain build + noop, 8 warm runs per side
+    * (two sessions each) on a shared 4-core host, medians per-tranche
+    * scans → checkpoint: q81 1.32 → 1.32 s and q145 1.72 → 1.62 s at
+    * sf0.01, q81 1.91 → 1.99 s and q145 2.12 → 2.29 s at sf0.1, every
+    * gap inside the per-tranche runs' own range (q145 at sf0.1:
+    * 1.88-2.37 s). Dropping the checkpoint from the keys that had one
+    * was slower at sf0.01 on 9 of those 10 keys.
+    */
+  private def tranches(s: SparkSession, dir: String, key: String, cols: Seq[String],
+      late: Column = lit(false), sentinel: Seq[Seq[Any]] = Nil): Tranches = {
+    val root = graft.ops.Stage.fresh(key)
+    val evs = Tables.events(s, dir)
+      .select(cols.map {
+        case "ts_us" => expr("unix_micros(cast(ts as timestamp))").as("ts_us")
+        case c => col(c)
+      }: _*)
+      .localCheckpoint()
+    val schema = StructType(evs.schema.map(f => StructField(f.name, f.dataType)))
+    val ts = col("ts_us")
+    val b3 = Option.when(sentinel.nonEmpty) {
+      val (far, at) = (farSentinelUs(s, dir), cols.indexOf("ts_us"))
+      "b3" -> s.createDataFrame(
+        java.util.Arrays.asList(sentinel.map(r => Row.fromSeq(r.patch(at, Seq(far), 0))): _*),
+        schema)
+    }
+    stageTranches(root.toString, Seq(
+      "b0" -> evs.filter(ts <= b1Us && !late),
+      "b1" -> evs.filter(ts > b1Us && ts <= b2Us && !late),
+      "b2" -> evs.filter(ts > b2Us || late)) ++ b3)
+    new Tranches(s, key, root, schema)
+  }
+
+  /** Run `stream` to the end into the memory sink `<key>_mem` (output
+    * `mode`, AvailableNow, state partitions pinned by [[withStateParts]]),
+    * release the tranches it read, and return the sink's table. */
+  private def drain(t: Tranches, mode: String, noDataBatch: Boolean = true)(
+      stream: => Dataset[_]): DataFrame = {
+    val (s, sink) = (t.s, s"${t.key}_mem")
+    s.catalog.dropTempView(sink)
+    val q = withStateParts(s, noDataBatch)(stream.writeStream.format("memory")
+      .queryName(sink).outputMode(mode).trigger(Trigger.AvailableNow()).start())
+    q.awaitTermination()
+    t.release() // results live in the memory sink now
+    s.table(sink)
+  }
 
   def queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------
@@ -154,49 +224,17 @@ object Streaming extends QueryPack {
     // is emitted as epoch MICROS (bigint) — tz-representation-proof
     // across the parquet/pandas/DuckDB compare path.
     "q47_stream_demo" -> ((s, dir) => {
-      s.catalog.dropTempView("q47_mem")
-      val inP = graft.ops.Stage.fresh("q47")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q81)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_type"), col("value"))
-        .localCheckpoint() // shared by the 3 tranche writes
-      val moved = col("ts_us") <= b1 && col("user_id") % 7 === 3
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1 && !moved),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2 || moved)))
-      val far = farSentinelUs(s, dir)
-      import s.implicits._
-      Seq((-1L, far, "zz_sentinel", 0.0))
-        .toDF("user_id", "ts_us", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(s"$in/b3")
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType)))
-      val q = withStateParts(s)(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
+      val t = tranches(s, dir, "q47", Seq("user_id", "ts_us", "event_type", "value"),
+        late = col("ts_us") <= b1Us && col("user_id") % 7 === 3,
+        sentinel = Seq(Seq(-1L, "zz_sentinel", 0.0)))
+      drain(t, "append")(t.read()
         .withColumn("ets", timestamp_micros(col("ts_us")))
         .withWatermark("ets", "10 minutes")
         .groupBy(window(col("ets"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("value").cast("decimal(18,2)")).cast("double"), 6).as("sum_v"))
         .select(unix_micros(col("w.start")).as("w_start_us"), col("event_type"),
-          col("cnt"), col("sum_v"))
-        .writeStream
-        .format("memory")
-        .queryName("q47_mem")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start())
-      q.awaitTermination()
-      // results now live in the memory sink — drop the staged ingest
-      // tree eagerly instead of holding it until JVM exit
-      graft.ops.Stage.release(inP)
-      s.table("q47_mem")
+          col("cnt"), col("sum_v")))
         .filter(col("event_type") =!= "zz_sentinel")
         .orderBy(col("w_start_us"), col("event_type"))
     }),
@@ -215,35 +253,14 @@ object Streaming extends QueryPack {
       import s.implicits._
       import graft.streaming.StatefulSessions.{Ev, Sess, SessState}
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-      s.catalog.dropTempView("q81_mem")
-      val inP = graft.ops.Stage.fresh("q81")
-      val in = inP.toString
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"), col("event_id"))
-      // fixed event-time split boundaries (data spans 2024-01): each
-      // tranche becomes one microbatch, deterministically
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_id", LongType)))
-      val q = withStateParts(s, noDataBatch = false)(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$in/*/")
+      val t = tranches(s, dir, "q81", Seq("user_id", "ts_us", "event_id"))
+      drain(t, "update", noDataBatch = false)(t.read()
         .as[Ev]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState[SessState, Sess](
           OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-          graft.streaming.StatefulSessions.sessionize)
-        .writeStream.format("memory").queryName("q81_mem")
-        .outputMode("update").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP) // results live in the memory sink now
-      s.table("q81_mem").orderBy(col("user_id"), col("sess_id"))
+          graft.streaming.StatefulSessions.sessionize))
+        .orderBy(col("user_id"), col("sess_id"))
     }),
 
     // ------------------------------------------------------------------
@@ -262,29 +279,9 @@ object Streaming extends QueryPack {
     // session before AvailableNow terminates. Window bounds emit as
     // epoch-µs bigints (q47's tz-proof recipe).
     "q298_stream_session_gap" -> ((s, dir) => {
-      s.catalog.dropTempView("q298_mem")
-      val inP = graft.ops.Stage.fresh("q298")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (q81's split)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_type"), col("value"))
-        .localCheckpoint() // shared by the 3 tranche writes
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      s.range(1).select(lit(-1L).as("user_id"), lit(farSentinelUs(s, dir)).as("ts_us"),
-          lit("view").as("event_type"), lit(0.0).as("value"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$in/b3")
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType)))
-      val q = withStateParts(s)(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$in/*/")
+      val t = tranches(s, dir, "q298", Seq("user_id", "ts_us", "event_type", "value"),
+        sentinel = Seq(Seq(-1L, "view", 0.0)))
+      drain(t, "append")(t.read()
         .withColumn("ts", timestamp_micros(col("ts_us")))
         .withWatermark("ts", "10 minutes")
         .groupBy(col("user_id"),
@@ -295,12 +292,8 @@ object Streaming extends QueryPack {
         .select(col("user_id"),
           expr("unix_micros(session_window.start)").as("s_start_us"),
           expr("unix_micros(session_window.end)").as("s_end_us"),
-          col("n_events"), col("sv"))
-        .writeStream.format("memory").queryName("q298_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP)
-      s.table("q298_mem").filter(col("user_id") >= 0)
+          col("n_events"), col("sv")))
+        .filter(col("user_id") >= 0)
         .select(col("user_id"), col("s_start_us"), col("s_end_us"),
           col("n_events"), round(col("sv").cast("double"), 2).as("sum_value"))
         .orderBy(col("user_id"), col("s_start_us"))
@@ -316,46 +309,21 @@ object Streaming extends QueryPack {
     // never drop a legitimate match — the streaming inner join emits
     // exactly the batch join, which is the DuckDB oracle.
     "q90_stream_join" -> ((s, dir) => {
-      s.catalog.dropTempView("q90_mem")
-      val inP = graft.ops.Stage.fresh("q90")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q81)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      // tranche order b0<b1<b2 is load-bearing; stageTranches overlaps
-      // the writes and stamps the order explicitly.
-      // localCheckpoint so the 3 filter+write jobs share one events scan.
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
-        .localCheckpoint()
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
-      val views = src().filter(col("event_type") === "view")
+      val t = tranches(s, dir, "q90",
+        Seq("user_id", "ts_us", "event_id", "event_type", "value"))
+      val views = t.read().filter(col("event_type") === "view")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("vts"),
           col("event_id").as("view_id"))
         .withWatermark("vts", "1 hour")
-      val clicks = src().filter(col("event_type") === "click")
+      val clicks = t.read().filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), timestamp_micros(col("ts_us")).as("cts"),
           col("value").as("c_value"))
         .withWatermark("cts", "1 hour")
       // the join keeps 4 state stores per shuffle partition per batch
-      val q = withStateParts(s, noDataBatch = false)(views.join(clicks,
+      drain(t, "append", noDataBatch = false)(views.join(clicks,
           col("user_id") === col("c_user")
             && col("cts") > col("vts")
-            && col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"))
-        .writeStream.format("memory").queryName("q90_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP) // results live in the memory sink now
-      s.table("q90_mem")
+            && col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES")))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"), min(col("view_id")).as("first_view"),
           round(sum(col("c_value").cast("decimal(18,2)")).cast("double"), 6).as("click_value"))
@@ -376,35 +344,15 @@ object Streaming extends QueryPack {
     // (batch N+1's events all exceed batch N's watermark), so nothing
     // is dropped.
     "q141_stream_dedup" -> ((s, dir) => {
-      s.catalog.dropTempView("q141_mem")
-      val inP = graft.ops.Stage.fresh("q141")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q81)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"), col("event_type"))
-        .localCheckpoint() // shared by the 3 tranche writes
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_type", StringType)))
-      val q = withStateParts(s, noDataBatch = false)(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$in/*/")
+      val t = tranches(s, dir, "q141", Seq("user_id", "ts_us", "event_type"))
+      drain(t, "append", noDataBatch = false)(t.read()
         .select(col("user_id"), col("event_type"),
           timestamp_micros(col("ts_us")).as("ets"))
         .withColumn("day", col("ets").cast("date"))
         .withWatermark("ets", "25 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
-        .select(col("user_id"), col("event_type"), col("day"))
-        .writeStream.format("memory").queryName("q141_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP) // results live in the memory sink now
-      s.table("q141_mem").orderBy(col("user_id"), col("event_type"), col("day"))
+        .select(col("user_id"), col("event_type"), col("day")))
+        .orderBy(col("user_id"), col("event_type"), col("day"))
     }),
 
     // ------------------------------------------------------------------
@@ -420,20 +368,7 @@ object Streaming extends QueryPack {
       import s.implicits._
       import graft.streaming.StatefulSessions.{Ev, Sess}
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      s.catalog.dropTempView("q145_mem")
-      val inP = graft.ops.Stage.fresh("q145")
-      val in = inP.toString
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"), col("event_id"))
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q81)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_id", LongType)))
+      val t = tranches(s, dir, "q145", Seq("user_id", "ts_us", "event_id"))
       // changelog checkpointing: each commit uploads only the batch's
       // change set instead of a full RocksDB snapshot (snapshots move to
       // background maintenance) — the deployment-honest setting for any
@@ -444,19 +379,12 @@ object Streaming extends QueryPack {
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
-        val q = withStateParts(s, noDataBatch = false)(s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$in/*/")
+        drain(t, "update", noDataBatch = false)(t.read()
           .as[Ev]
           .groupByKey(_.user_id)
           .transformWithState[Sess](new graft.streaming.TwsSessionizer,
-            TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("q145_mem")
-          .outputMode("update").trigger(Trigger.AvailableNow()).start())
-        q.awaitTermination()
-      }
-      graft.ops.Stage.release(inP) // results live in the memory sink now
-      s.table("q145_mem").orderBy(col("user_id"), col("sess_id"))
+            TimeMode.None(), OutputMode.Update()))
+      }.orderBy(col("user_id"), col("sess_id"))
     }),
 
     // ------------------------------------------------------------------
@@ -469,53 +397,20 @@ object Streaming extends QueryPack {
     // how a 1000-executor deployment enriches a firehose against a dim
     // table. Emitted rows = batch join rows (inner join, append mode),
     // so the aggregate over the sink has a full DuckDB hash oracle.
+    // No exchange, so the pinned state partitions leave the plan as is.
     "q156_stream_enrich" -> ((s, dir) => {
-      s.catalog.dropTempView("q156_mem")
-      val inP = graft.ops.Stage.fresh("q156")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q81)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_type"), col("value"))
-        .localCheckpoint() // shared by the 3 tranche writes
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType)))
+      val t = tranches(s, dir, "q156", Seq("user_id", "ts_us", "event_type", "value"))
       val dim = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$in/*/")
+      drain(t, "append")(t.read()
         .withColumn("nk", col("user_id") % 25)
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
-        .select(col("n_name"), col("event_type"), col("value"))
-        .writeStream.format("memory").queryName("q156_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.ops.Stage.release(inP) // results live in the memory sink now
-      s.table("q156_mem")
+        .select(col("n_name"), col("event_type"), col("value")))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value").cast("decimal(18,4)")).cast("double"), 4).as("sum_value"))
         .orderBy(col("n_name"))
     }),
 
-    // ------------------------------------------------------------------
-    // STREAM-STREAM LEFT OUTER join — the remaining join-mode surface
-    // after q90's inner: views left-join clicks in a (0, 30 min]
-    // window; a view with NO qualifying click must emit a null-extended
-    // row, which the engine can only do once the watermark has
-    // definitively passed the view's join window. A SENTINEL tranche
-    // (one far-future view + click with negative ids, staged LAST)
-    // advances both watermarks past all real data so every real
-    // unmatched view flushes before AvailableNow terminates; the
-    // sentinels themselves are filtered from the rollup. Oracle: the
-    // equivalent BATCH left join — stream ≡ batch is the whole claim.
     // ------------------------------------------------------------------
     // Watermarked tumbling-window aggregation with a FULL hash oracle —
     // the oracle-gated upgrade of q47's rows-only demo: 1-day
@@ -527,39 +422,16 @@ object Streaming extends QueryPack {
     // DuckDB oracle; the sentinel's own still-open window is withheld
     // by append mode (and filtered, belt-and-braces).
     "q217_stream_window_agg" -> ((s, dir) => {
-      s.catalog.dropTempView("q217_mem")
-      val inP = graft.ops.Stage.fresh("q217")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q90)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("event_type"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"), col("value"))
-        .localCheckpoint() // shared by the 3 tranche writes + max scan
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val far = farSentinelUs(s, dir)
-      import s.implicits._
-      Seq(("zz_sentinel", far, 0.0)).toDF("event_type", "ts_us", "value")
-        .coalesce(1).write.mode("overwrite").parquet(s"$in/b3")
-      val schema = StructType(Seq(StructField("event_type", StringType),
-        StructField("ts_us", LongType), StructField("value", DoubleType)))
-      val q = withStateParts(s)(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
+      val t = tranches(s, dir, "q217", Seq("event_type", "ts_us", "value"),
+        sentinel = Seq(Seq("zz_sentinel", 0.0)))
+      drain(t, "append")(t.read()
         .withColumn("ets", timestamp_micros(col("ts_us")))
         .withWatermark("ets", "1 hour")
         .groupBy(window(col("ets"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("cnt"),
           round(sum(col("value").cast("decimal(18,2)")).cast("double"), 6).as("sum_v"))
         .select(col("w.start").cast("date").as("day"), col("event_type"),
-          col("cnt"), col("sum_v"))
-        .writeStream.format("memory").queryName("q217_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP) // results live in the memory sink now
-      s.table("q217_mem")
+          col("cnt"), col("sum_v")))
         .filter(col("event_type") =!= "zz_sentinel")
         .orderBy(col("day"), col("event_type"))
     }),
@@ -574,48 +446,22 @@ object Streaming extends QueryPack {
     // user) since full-outer rows carry exactly one side for the
     // unmatched cases. Oracle = the equivalent batch FULL JOIN.
     "q220_stream_full_outer" -> ((s, dir) => {
-      s.catalog.dropTempView("q220_mem")
-      val inP = graft.ops.Stage.fresh("q220")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q90)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
-        .localCheckpoint()
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val far = farSentinelUs(s, dir)
-      import s.implicits._
-      Seq((-1L, far, -1L, "view", 0.0), (-2L, far, -2L, "click", 0.0))
-        .toDF("user_id", "ts_us", "event_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(s"$in/b3")
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
-      val views = src().filter(col("event_type") === "view")
+      val t = tranches(s, dir, "q220",
+        Seq("user_id", "ts_us", "event_id", "event_type", "value"),
+        sentinel = Seq(Seq(-1L, -1L, "view", 0.0), Seq(-2L, -2L, "click", 0.0)))
+      val views = t.read().filter(col("event_type") === "view")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("vts"),
           col("event_id").as("view_id"))
         .withWatermark("vts", "1 hour")
-      val clicks = src().filter(col("event_type") === "click")
+      val clicks = t.read().filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), timestamp_micros(col("ts_us")).as("cts"),
           col("value").as("c_value"))
         .withWatermark("cts", "1 hour")
-      val q = withStateParts(s)(views.join(clicks,
+      drain(t, "append")(views.join(clicks,
           col("user_id") === col("c_user")
             && col("cts") > col("vts")
             && col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
-          "full_outer")
-        .writeStream.format("memory").queryName("q220_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP)
-      s.table("q220_mem")
+          "full_outer"))
         .withColumn("u", coalesce(col("user_id"), col("c_user")))
         .filter(col("u") >= 0) // drop the watermark sentinels
         .groupBy(col("u"))
@@ -630,49 +476,34 @@ object Streaming extends QueryPack {
         .orderBy(col("u"))
     }),
 
+    // ------------------------------------------------------------------
+    // STREAM-STREAM LEFT OUTER join — the remaining join-mode surface
+    // after q90's inner: views left-join clicks in a (0, 30 min]
+    // window; a view with NO qualifying click must emit a null-extended
+    // row, which the engine can only do once the watermark has
+    // definitively passed the view's join window. A SENTINEL tranche
+    // (one far-future view + click with negative ids, staged LAST)
+    // advances both watermarks past all real data so every real
+    // unmatched view flushes before AvailableNow terminates; the
+    // sentinels themselves are filtered from the rollup. Oracle: the
+    // equivalent BATCH left join — stream ≡ batch is the whole claim.
     "q191_stream_outer_join" -> ((s, dir) => {
-      s.catalog.dropTempView("q191_mem")
-      val inP = graft.ops.Stage.fresh("q191")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q90)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
-        .localCheckpoint()
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val far = farSentinelUs(s, dir)
-      import s.implicits._
-      Seq((-1L, far, -1L, "view", 0.0), (-2L, far, -2L, "click", 0.0))
-        .toDF("user_id", "ts_us", "event_id", "event_type", "value")
-        .coalesce(1).write.mode("overwrite").parquet(s"$in/b3")
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
-      val views = src().filter(col("event_type") === "view")
+      val t = tranches(s, dir, "q191",
+        Seq("user_id", "ts_us", "event_id", "event_type", "value"),
+        sentinel = Seq(Seq(-1L, -1L, "view", 0.0), Seq(-2L, -2L, "click", 0.0)))
+      val views = t.read().filter(col("event_type") === "view")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("vts"),
           col("event_id").as("view_id"))
         .withWatermark("vts", "1 hour")
-      val clicks = src().filter(col("event_type") === "click")
+      val clicks = t.read().filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), timestamp_micros(col("ts_us")).as("cts"),
           col("value").as("c_value"))
         .withWatermark("cts", "1 hour")
-      val q = withStateParts(s)(views.join(clicks,
+      drain(t, "append")(views.join(clicks,
           col("user_id") === col("c_user")
             && col("cts") > col("vts")
             && col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
-          "left_outer")
-        .writeStream.format("memory").queryName("q191_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP)
-      s.table("q191_mem")
+          "left_outer"))
         .filter(col("user_id") >= 0) // drop the watermark sentinels
         .groupBy(col("user_id"))
         // match status keyed on cts (never null on a real click row),
@@ -703,43 +534,28 @@ object Streaming extends QueryPack {
     // one-shot batch aggregate — any double-apply or dropped delta
     // breaks the hash.
     "q285_stream_foreach_merge" -> ((s, dir) => {
-      val inP = graft.ops.Stage.fresh("q285in")
-      val in = inP.toString
+      val t = tranches(s, dir, "q285", Seq("user_id", "ts_us", "value"))
       val stP = graft.ops.Stage.fresh("q285st")
       val st = stP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (q90's split)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("value"))
-        .localCheckpoint()
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("value", DoubleType)))
       @volatile var lastVersion = -1L
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+      t.read().writeStream
+        .foreachBatch { (batch: Dataset[Row], id: Long) =>
           Streaming.mergeBatchIntoState(s, st, batch, id)
           lastVersion = math.max(lastVersion, id)
           ()
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
       require(lastVersion >= 0,
         "q285: stream produced no batches — no versioned state was written")
-      graft.ops.Stage.release(inP)
       val out = s.read.parquet(s"$st/v$lastVersion")
         .groupBy((col("user_id") % 10).as("bucket"))
         .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"),
           round(sum(col("sv")).cast("double"), 6).as("sum_value"),
           max(col("mts")).as("last_ts_us"))
         .orderBy(col("bucket"))
+        .localCheckpoint() // materialize before the state tree is released
+      t.release()
+      graft.ops.Stage.release(stP)
       out
     }),
 
@@ -754,42 +570,20 @@ object Streaming extends QueryPack {
     // the funnel-entry operator of choice. Same 3 event-time-ordered
     // tranches; batch equivalence = EXISTS, the DuckDB oracle.
     "q393_stream_semi_join" -> ((s, dir) => {
-      s.catalog.dropTempView("q393_mem")
-      val inP = graft.ops.Stage.fresh("q393")
-      val in = inP.toString
-      val b1 = 1704931200000000L // 2024-01-11 UTC, µs (same split as q81/q90)
-      val b2 = 1705795200000000L // 2024-01-21 UTC, µs
-      val evs = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("unix_micros(cast(ts as timestamp))").as("ts_us"),
-          col("event_id"), col("event_type"), col("value"))
-        .localCheckpoint()
-      stageTranches(in, Seq(
-        "b0" -> evs.filter(col("ts_us") <= b1),
-        "b1" -> evs.filter(col("ts_us") > b1 && col("ts_us") <= b2),
-        "b2" -> evs.filter(col("ts_us") > b2)))
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts_us", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      def src() = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$in/*/")
-      val views = src().filter(col("event_type") === "view")
+      val t = tranches(s, dir, "q393",
+        Seq("user_id", "ts_us", "event_id", "event_type", "value"))
+      val views = t.read().filter(col("event_type") === "view")
         .select(col("user_id"), timestamp_micros(col("ts_us")).as("vts"),
           col("event_id").as("view_id"), col("value").as("v_value"))
         .withWatermark("vts", "1 hour")
-      val clicks = src().filter(col("event_type") === "click")
+      val clicks = t.read().filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), timestamp_micros(col("ts_us")).as("cts"))
         .withWatermark("cts", "1 hour")
-      val q = withStateParts(s, noDataBatch = false)(views.join(clicks,
+      drain(t, "append", noDataBatch = false)(views.join(clicks,
           col("user_id") === col("c_user")
             && col("cts") > col("vts")
             && col("cts") <= col("vts") + expr("INTERVAL 30 MINUTES"),
-          "left_semi")
-        .writeStream.format("memory").queryName("q393_mem")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
-      q.awaitTermination()
-      graft.ops.Stage.release(inP)
-      s.table("q393_mem")
+          "left_semi"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_views"), min(col("view_id")).as("first_view"),
           round(sum(col("v_value").cast("decimal(18,2)")).cast("double"), 6).as("view_value"))

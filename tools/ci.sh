@@ -48,6 +48,17 @@ if [[ -n "$reg" ]]; then
   echo "$reg" >&2
   exit 1
 fi
+# The streaming keys stage their event tranches through one helper,
+# graft.streaming.Streaming's `tranches`: each tranche boundary (µs)
+# sits on exactly one line of src/main, the one that helper reads.
+for b in 1704931200000000L 1705795200000000L; do
+  at=$(grep -rn "$b" src/main --include='*.scala' || true)
+  if [[ $(grep -c . <<<"$at") -ne 1 ]]; then
+    echo "tranche boundary $b not on exactly one line of src/main:" >&2
+    echo "${at:-(no line)}" >&2
+    exit 1
+  fi
+done
 
 # The benchmark's own arithmetic (medians, quartiles, per-layer sums):
 # 22 pure-Python tests, under a second.
